@@ -20,7 +20,9 @@ import org.apache.spark.sql.SparkSession
   *  - `BENCH_TELEMETRY.txt` (repo root, so the next round's snapshot commit
   *    preserves it): the per-query stderr telemetry of the LAST run — the
   *    driver's own BENCH_r{N} record keeps only a stdout tail, which left
-  *    the r5 late-suite collapse undiagnosable post-hoc.
+  *    the r5 late-suite collapse undiagnosable post-hoc. The
+  *    `-Dgraft.bench.telemetry=<file>` JVM option writes it elsewhere (shard
+  *    children inherit the parent's JVM options).
   *
   * Suite isolation: BENCH_r05 recorded 613 s driver-side for a suite that
   * runs in 169 s on the same box when run alone, with individual queries
@@ -147,7 +149,12 @@ object Bench {
     }
   }
 
-  private def telemetryPath = java.nio.file.Paths.get("BENCH_TELEMETRY.txt")
+  /** Where [[logTelemetry]] appends: the repo-root `BENCH_TELEMETRY.txt`
+    * unless the `graft.bench.telemetry` system property names another file
+    * (specs point it under `target/` so a test run leaves the tree clean).
+    */
+  private[graft] def telemetryPath =
+    java.nio.file.Paths.get(sys.props.getOrElse("graft.bench.telemetry", "BENCH_TELEMETRY.txt"))
 
   private def logTelemetry(line: String): Unit = {
     System.err.println(line)

@@ -11,15 +11,37 @@ import graft.core.PluginConfig._
   *
   *  - `if_exists`: append (default) / replace / fail → `df.write.jdbc` save
   *    modes — distributed batched INSERTs, no driver materialization
-  *  - `if_exists: upsert` (L3): requires `primary_keys` (error otherwise);
-  *    empty frame is a no-op that creates nothing; missing table is created
-  *    from the schema plus a `uq_<table>_<pks>` unique index; then per
-  *    partition, batched standard-SQL `MERGE INTO` keyed on the PKs — every
-  *    non-PK column updated on match, plain insert otherwise; all-PK tables
-  *    degrade to insert-if-absent (`DO NOTHING` semantics)
+  *  - `if_exists: upsert` (L3): requires `primary_keys` (error otherwise).
+  *    One load is one Spark action and one MERGE:
+  *     1. the driver creates a per-load staging table from the frame's
+  *        schema, with a unique index on the primary keys;
+  *     2. the one Spark action drops intra-frame key duplicates keep-LAST
+  *        (the reference's sequential row-wise upsert let later rows win)
+  *        and has each partition batch-INSERT its rows into the staging
+  *        table in one transaction;
+  *     3. back on the driver, an empty staging table ends the load with
+  *        nothing created (empty frame = no-op); otherwise one transaction
+  *        creates a missing target from the schema plus a
+  *        `uq_<table>_<pks>` unique index, runs a single standard-SQL
+  *        `MERGE INTO target USING stage` keyed on the PKs — every non-PK
+  *        column updated on match, plain insert otherwise; all-PK tables
+  *        degrade to insert-if-absent (`DO NOTHING` semantics) — and
+  *        commits;
+  *     4. the staging table is dropped in a `finally`, whatever happened.
+  *
+  * Atomicity: the target sees a whole frame or none of it. A failure in the
+  * Spark action (a throwing input plan, a rejected value) happens before the
+  * MERGE, so the target is untouched and the load can simply be retried.
+  * Retried tasks: a partition's inserts commit together or not at all, so a
+  * task that fails before its commit is retried cleanly. A task whose commit
+  * landed but which Spark still re-runs (lost executor, speculation) hits
+  * the staging table's unique index and fails the load loudly instead of
+  * making the MERGE source ambiguous; the target is untouched and a re-run
+  * of the load starts from a fresh staging table.
   *
   * The embedded dialect is Derby (the JVM stand-in for the reference's
-  * SQLite); the tiny dialect seam is this class's DDL/MERGE strings.
+  * SQLite); the tiny dialect seam is this class's DDL/MERGE strings. Derby's
+  * MERGE requires a base table as its source, hence the staging table.
   */
 class JdbcLoader(conf: Conf) extends Loader {
   private val url = conf.str("connection_string").orElse(conf.str("url")).getOrElse(
@@ -38,6 +60,82 @@ class JdbcLoader(conf: Conf) extends Loader {
     case other => throw new IllegalArgumentException(s"sql_database: unknown if_exists '$other'")
   }
 
+  private def upsert(df: DataFrame): Unit = {
+    if (primaryKeys.isEmpty)
+      throw new IllegalArgumentException("sql_database: upsert requires 'primary_keys'")
+    val schema = df.schema
+    val missingPks = primaryKeys.filterNot(schema.fieldNames.contains)
+    require(missingPks.isEmpty, s"sql_database: primary_keys not in frame: ${missingPks.mkString(",")}")
+
+    val cols = schema.fieldNames.toSeq
+    val nonPk = cols.filterNot(primaryKeys.contains)
+    val onClause = primaryKeys.map(k => s"t.${q(k)} = v.${q(k)}").mkString(" AND ")
+    val updateClause =
+      if (nonPk.isEmpty) ""
+      else "WHEN MATCHED THEN UPDATE SET " + nonPk.map(c => s"t.${q(c)} = v.${q(c)}").mkString(", ")
+    val insertCols = cols.map(q).mkString(", ")
+    val insertVals = cols.map(c => s"v.${q(c)}").mkString(", ")
+
+    val stage = s"stage_${table}_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val conn = DriverManager.getConnection(url)
+    try {
+      exec(conn, s"CREATE TABLE $stage (${columnsDdl(schema)})")
+      try {
+        exec(conn, s"CREATE UNIQUE INDEX ${stage}_pk ON $stage (${primaryKeys.map(q).mkString(", ")})")
+        JdbcLoader.insertPartitions(keepLast(df), url, stage, insertCols, cols.size, batchSize)
+        if (hasRows(conn, stage)) {
+          conn.setAutoCommit(false)
+          try {
+            ensureTable(conn, schema)
+            exec(conn,
+              s"""MERGE INTO $table t
+                 |USING $stage v
+                 |ON $onClause
+                 |$updateClause
+                 |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin)
+            conn.commit()
+          } catch {
+            case e: Throwable =>
+              try conn.rollback() catch { case _: Throwable => () }
+              throw e
+          }
+        }
+      } finally {
+        try { conn.setAutoCommit(true); exec(conn, s"DROP TABLE $stage") }
+        catch { case _: Throwable => () } // best-effort cleanup
+      }
+    } finally conn.close()
+  }
+
+  /** Drop intra-frame PK duplicates keep-LAST: the staging table's unique
+    * index admits each key once, and one MERGE source row per key keeps
+    * the MERGE unambiguous.
+    */
+  private def keepLast(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val w = Window.partitionBy(primaryKeys.map(col): _*).orderBy(col("__seq").desc)
+    df.withColumn("__seq", monotonically_increasing_id())
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__seq", "__rn")
+  }
+
+  private def hasRows(conn: Connection, tbl: String): Boolean = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(s"SELECT 1 FROM $tbl FETCH FIRST 1 ROWS ONLY")
+      try rs.next() finally rs.close()
+    } finally st.close()
+  }
+
+  // column identifiers are quoted throughout: frame columns like "close",
+  // "open" or "date" are Derby reserved words
+  private def q(c: String): String = "\"" + c + "\""
+
+  private def columnsDdl(schema: StructType): String =
+    schema.fields.map(f => s"${q(f.name)} ${sqlType(f.dataType)}").mkString(", ")
+
   private def sqlType(dt: DataType): String = dt match {
     case LongType => "BIGINT"
     case IntegerType => "INTEGER"
@@ -50,130 +148,13 @@ class JdbcLoader(conf: Conf) extends Loader {
     case _ => "VARCHAR(4096)"
   }
 
-  private def upsert(df: DataFrame): Unit = {
-    if (primaryKeys.isEmpty)
-      throw new IllegalArgumentException("sql_database: upsert requires 'primary_keys'")
-    // (measured round 16: checkpointing the batch to dodge the isEmpty +
-    // merge double-execution cost MORE than the recompute it saves at
-    // aggregate-batch sizes — +1 job per batch, st6 +0.4 s — so the probe
-    // stays a plain action; callers with expensive batches checkpoint
-    // themselves, as st10 does)
-    if (df.isEmpty) return // empty frame: no-op, no table created (L3)
-
-    val schema = df.schema
-    val missingPks = primaryKeys.filterNot(schema.fieldNames.contains)
-    require(missingPks.isEmpty, s"sql_database: primary_keys not in frame: ${missingPks.mkString(",")}")
-
-    ensureTable(schema)
-
-    // column identifiers are quoted throughout: frame columns like "close",
-    // "open" or "date" are Derby reserved words
-    def q(c: String): String = "\"" + c + "\""
-    val cols = schema.fieldNames.toSeq
-    val nonPk = cols.filterNot(primaryKeys.contains)
-    val colsDdl = schema.fields.map(f => s"${q(f.name)} ${sqlType(f.dataType)}").mkString(", ")
-    val onClause = primaryKeys.map(k => s"t.${q(k)} = v.${q(k)}").mkString(" AND ")
-    val updateClause =
-      if (nonPk.isEmpty) ""
-      else "WHEN MATCHED THEN UPDATE SET " + nonPk.map(c => s"t.${q(c)} = v.${q(c)}").mkString(", ")
-    val insertCols = cols.map(q).mkString(", ")
-    val insertVals = cols.map(c => s"v.${q(c)}").mkString(", ")
-    val placeholders = cols.map(_ => "?").mkString(", ")
-
-    // Concurrent MERGEs against one target are only safe when no key appears
-    // in two partitions (or twice in one staging table): both copies would
-    // take the NOT-MATCHED path → unique-index violations / Derby lock
-    // timeouts. So first drop intra-frame PK duplicates keep-LAST (the
-    // reference's sequential row-wise upsert let later rows win), then the
-    // key-partitioned window shuffle guarantees each PK lands in exactly one
-    // partition exactly once.
-    val deduped0 = {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val w = Window.partitionBy(primaryKeys.map(col): _*)
-        .orderBy(col("__seq").desc)
-      df.withColumn("__seq", monotonically_increasing_id())
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__seq", "__rn")
-    }
-    // Bound the sink-side concurrency (round 16): every post-dedup partition
-    // pays connection + staging DDL + its own MERGE, and concurrent MERGEs
-    // against one table serialize on the target's locks anyway — on the
-    // embedded Derby dialect they ONLY contend. A narrow coalesce (each PK
-    // is already globally unique after the window, so any partitioning
-    // keeps the disjointness invariant) caps that at `write_partitions`
-    // (default 4; a remote pooled database can raise it, a bench-profile
-    // st6/st10 measured 32 single-digit-row merges per batch before).
-    val writeParts = conf.intOr("write_partitions", 4)
-    val deduped = deduped0.coalesce(math.max(1, writeParts))
-
-    // Derby's MERGE requires a base table as source, so each partition batch-
-    // inserts into its own staging table and merges from it — which is also
-    // the scalable shape (one bulk MERGE per partition, not one statement per
-    // row like the reference).
-    val u = url; val bs = batchSize; val tbl = table
-    deduped.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(u)
-        try {
-          val stage = s"stage_${tbl}_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-          val st0 = conn.createStatement()
-          st0.execute(s"CREATE TABLE $stage ($colsDdl)")
-          st0.close()
-          // From here the stage table exists: drop it in a finally so a failed
-          // MERGE/commit doesn't leak stage_* tables across Engine retries.
-          try {
-            conn.setAutoCommit(false)
-            val ins = conn.prepareStatement(s"INSERT INTO $stage ($insertCols) VALUES ($placeholders)")
-            var inBatch = 0
-            rows.foreach { r =>
-              var i = 1
-              while (i <= r.length) { ins.setObject(i, r.get(i - 1)); i += 1 }
-              ins.addBatch()
-              inBatch += 1
-              if (inBatch >= bs) { ins.executeBatch(); inBatch = 0 }
-            }
-            if (inBatch > 0) ins.executeBatch()
-            ins.close()
-            val merge = conn.createStatement()
-            merge.execute(
-              s"""MERGE INTO $tbl t
-                 |USING $stage v
-                 |ON $onClause
-                 |$updateClause
-                 |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin)
-            merge.close()
-            conn.commit()
-          } catch {
-            case e: Throwable =>
-              try conn.rollback() catch { case _: Throwable => () }
-              throw e
-          } finally {
-            try {
-              conn.setAutoCommit(true)
-              val drop = conn.createStatement()
-              try drop.execute(s"DROP TABLE $stage") finally drop.close()
-            } catch { case _: Throwable => () } // best-effort cleanup
-          }
-        } finally conn.close()
-      }
-    }
-  }
-
   /** Create table + unique PK index if absent (`sqlalchemy_loader.py:127-160`). */
-  private def ensureTable(schema: StructType): Unit = {
-    val conn = DriverManager.getConnection(url)
-    try {
-      if (!tableExists(conn)) {
-        def q(c: String): String = "\"" + c + "\""
-        val colsDdl = schema.fields.map(f => s"${q(f.name)} ${sqlType(f.dataType)}").mkString(", ")
-        exec(conn, s"CREATE TABLE $table ($colsDdl)")
-        val idxName = s"uq_${table}_${primaryKeys.mkString("_")}".take(120)
-        exec(conn, s"CREATE UNIQUE INDEX $idxName ON $table (${primaryKeys.map(q).mkString(", ")})")
-      }
-    } finally conn.close()
-  }
+  private def ensureTable(conn: Connection, schema: StructType): Unit =
+    if (!tableExists(conn)) {
+      exec(conn, s"CREATE TABLE $table (${columnsDdl(schema)})")
+      val idxName = s"uq_${table}_${primaryKeys.mkString("_")}".take(120)
+      exec(conn, s"CREATE UNIQUE INDEX $idxName ON $table (${primaryKeys.map(q).mkString(", ")})")
+    }
 
   private def tableExists(conn: Connection): Boolean = {
     val rs = conn.getMetaData.getTables(null, null, table.toUpperCase, null)
@@ -183,5 +164,41 @@ class JdbcLoader(conf: Conf) extends Loader {
   private def exec(conn: Connection, sql: String): Unit = {
     val st = conn.createStatement()
     try st.execute(sql) finally st.close()
+  }
+}
+
+object JdbcLoader {
+  /** The upsert's one Spark action: each non-empty partition batch-INSERTs
+    * its rows into the staging table in one transaction. A static method so
+    * the task closure captures only these arguments, not the loader.
+    */
+  private def insertPartitions(df: DataFrame, url: String, stage: String,
+      insertCols: String, nCols: Int, batchSize: Int): Unit = {
+    val placeholders = Seq.fill(nCols)("?").mkString(", ")
+    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      if (rows.nonEmpty) {
+        val conn = DriverManager.getConnection(url)
+        try {
+          conn.setAutoCommit(false)
+          val ins = conn.prepareStatement(s"INSERT INTO $stage ($insertCols) VALUES ($placeholders)")
+          try {
+            var inBatch = 0
+            rows.foreach { r =>
+              var i = 1
+              while (i <= r.length) { ins.setObject(i, r.get(i - 1)); i += 1 }
+              ins.addBatch()
+              inBatch += 1
+              if (inBatch >= batchSize) { ins.executeBatch(); inBatch = 0 }
+            }
+            if (inBatch > 0) ins.executeBatch()
+            conn.commit()
+          } catch {
+            case e: Throwable =>
+              try conn.rollback() catch { case _: Throwable => () }
+              throw e
+          } finally ins.close()
+        } finally conn.close()
+      }
+    }
   }
 }

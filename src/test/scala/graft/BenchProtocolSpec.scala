@@ -16,11 +16,23 @@ class BenchProtocolSpec extends AnyFunSuite {
     val boom = (s: org.apache.spark.sql.SparkSession, d: String) => {
       s.range(5).toDF("x").filter(expr("assert_true(x < 2, 'boom')").isNull)
     }
-    val res = Bench.runQueries("/root/testdata/sf0.001", "4", " spec",
+    // telemetry goes under target/, never to the committed repo-root file
+    val telemetry = java.nio.file.Paths.get("target", "bench_spec_telemetry.txt")
+    java.nio.file.Files.createDirectories(telemetry.getParent)
+    java.nio.file.Files.deleteIfExists(telemetry)
+    val prev = sys.props.get("graft.bench.telemetry")
+    sys.props("graft.bench.telemetry") = telemetry.toString
+    val res = try Bench.runQueries("/root/testdata/sf0.001", "4", " spec",
       Seq("z_good" -> good, "z_boom" -> boom), 2, stopSession = false)
+    finally prev match {
+      case Some(p) => sys.props("graft.bench.telemetry") = p
+      case None => sys.props -= "graft.bench.telemetry"
+    }
     val byName = res.map(r => r._1 -> r._3).toMap
     assert(byName("z_good") == false)
     assert(byName("z_boom") == true, "throwing query must carry the error flag")
+    assert(java.nio.file.Files.readString(telemetry).contains("z_boom"),
+      "the spec's telemetry lands in the injected file")
   }
 
   test("memo eviction: evict removes the entry and unpersists its blocks; rebuild pays again") {

@@ -78,6 +78,68 @@ class JdbcLoaderSpec extends AnyFunSuite {
     conn.close()
   }
 
+  private def upsertLoader(url: String, table: String) = new JdbcLoader(Map(
+    "connection_string" -> url, "table" -> table,
+    "if_exists" -> "upsert", "primary_keys" -> Seq("id")))
+
+  private def tableNames(url: String, pattern: String): Seq[String] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, pattern, Array("TABLE"))
+      val buf = scala.collection.mutable.Buffer.empty[String]
+      while (rs.next()) buf += rs.getString("TABLE_NAME")
+      buf.toSeq
+    } finally conn.close()
+  }
+
+  test("upsert evaluates its input plan exactly once") {
+    // the input shape of the finance pipeline: a per-row step (validation)
+    // feeding a shuffle (the per-symbol indicator window). An emptiness
+    // probe ahead of the write re-ran the whole chain up to the shuffle.
+    import org.apache.spark.sql.functions.{col, udf}
+    val seen = spark.sparkContext.longAccumulator("jdbc-upsert-rows")
+    val bump = udf { (id: Long) => seen.add(1); id >= 0 }
+    val n = 200
+    val df = (0L until n).map(i => (i, s"v$i")).toDF("id", "v")
+      .filter(bump(col("id")))
+      .repartition(3, col("v"))
+    val url = freshDb()
+    upsertLoader(url, "t_once").load(df)
+    assert(queryAll(url, "t_once").size == n)
+    assert(seen.value == n, s"input rows evaluated ${seen.value} times for $n rows")
+  }
+
+  test("upsert keeps the last row of duplicate keys inside one frame") {
+    // ten keys, each delivered ten times across the frame's partitions;
+    // the row delivered last (largest i) must win, as in the reference's
+    // sequential row-wise upsert
+    val url = freshDb()
+    val rows = (0 until 100).map(i => ((i % 10).toLong, s"v$i"))
+    upsertLoader(url, "t_last").load(rows.toDF("id", "v"))
+    assert(queryAll(url, "t_last") == (0 until 10).map(k => (k.toLong, s"v${90 + k}")))
+    upsertLoader(url, "t_last").load(rows.reverse.toDF("id", "v"))
+    assert(queryAll(url, "t_last") == (0 until 10).map(k => (k.toLong, s"v$k")))
+  }
+
+  test("a load that fails part-way leaves the target unchanged and no staging table") {
+    val url = freshDb()
+    val loader = upsertLoader(url, "t_fail")
+    val before = (0L until 100L).map(i => (i, "old"))
+    loader.load(before.toDF("id", "v"))
+    // every row is an update; one value is longer than the VARCHAR(4096)
+    // column, so its partition's INSERT throws inside the Spark action
+    // while the other partitions succeed. AQE would coalesce this small
+    // shuffle into one partition, so it is kept from doing so here.
+    val bad = (0L until 100L).map(i => (i, if (i == 57L) "x" * 5000 else "new"))
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesceKey)
+    spark.conf.set(coalesceKey, "false")
+    try intercept[Exception](loader.load(bad.toDF("id", "v")))
+    finally spark.conf.set(coalesceKey, prev)
+    assert(queryAll(url, "t_fail") == before)
+    assert(tableNames(url, "STAGE_%").isEmpty, "staging table leaked")
+  }
+
   test("upsert without primary_keys raises; empty frame is a no-op creating nothing") {
     val url = freshDb()
     intercept[IllegalArgumentException] {
@@ -92,6 +154,7 @@ class JdbcLoaderSpec extends AnyFunSuite {
     val rs = conn.getMetaData.getTables(null, null, "T5", null)
     assert(!rs.next()) // table not created
     conn.close()
+    assert(tableNames(url, "STAGE_%").isEmpty, "empty frame left a staging table")
   }
 
   test("events-derived timestamp frame survives L2 append and L3 upsert round-trips") {
