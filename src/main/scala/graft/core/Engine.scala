@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
 import graft.core.Config._
 
@@ -16,7 +16,9 @@ import graft.core.Config._
   *     (the reference's only predicate pushdown: the REMOTE evaluates it),
   *     context-managed (disconnect even on failure), retried
   *  5. new cursor = max(cursor_field) over the RAW extracted frame, before
-  *     transforms (warn+skip if the field is missing)
+  *     transforms (warn+skip if the field is missing; no value — an empty
+  *     delivery or an all-null field — leaves the cursor where it was),
+  *     computed in one Spark job ([[Engine.maxOf]])
   *  6. transform chain, strictly sequential, no retry
   *  7. load, context-managed, retried
   *  8. cursor persisted ONLY after a successful load (load failure ⇒ state
@@ -68,7 +70,7 @@ class Engine(spark: SparkSession) {
       if (!raw.columns.contains(inc.cursorField)) {
         log.warn(s"incremental: cursor field '${inc.cursorField}' missing from extracted data; cursor not advanced")
         None
-      } else Option(raw.agg(max(col(inc.cursorField))).head().get(0))
+      } else Engine.maxOf(raw, inc.cursorField)
     }
 
     // 6. transform chain
@@ -157,5 +159,18 @@ class Engine(spark: SparkSession) {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+}
+
+object Engine {
+  /** `max(field)` over `df` with `max`'s semantics — nulls ignored, NaN
+    * greatest, None when no row holds a value — in ONE job: a descending,
+    * nulls-last top-1 plans as `TakeOrderedAndProject` (a top-1 per
+    * partition, merged on the driver, no exchange), where `agg(max)` plans a
+    * partial aggregate, an exchange and a final aggregate: two jobs under AQE.
+    */
+  def maxOf(df: DataFrame, field: String): Option[Any] = {
+    val c = col(field)
+    df.select(c).orderBy(c.desc_nulls_last).take(1).headOption.flatMap(r => Option(r.get(0)))
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Native codegen'd equal-component count of two `array<bigint>` columns:
-  * the same integer as
+/** Native codegen'd count of the positions where two `array<bigint>`
+  * columns hold equal, non-null components: the same integer as
   * `aggregate(zip_with(a, b, (x,y) -> IF(x = y, 1, 0)), 0, (acc,x) -> acc+x)`
   * (and the DuckDB `len(list_filter(range(...), i -> a[i] = b[i]))` oracles)
   * — but one tight primitive loop over `ArrayData` instead of two
@@ -32,11 +32,20 @@ case class SigMatchesExpr(left: Expression, right: Expression) extends BinaryExp
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SigMatchesExpr.matches(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** Either side may hold null components: take the null-skipping loop. */
+  private def nullComponents: Boolean = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  })
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SigMatchesExpr.matches($a, $b)")
+  override def nullSafeEval(a: Any, b: Any): Any =
+    if (nullComponents) SigMatchesExpr.matchesSkippingNulls(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    else SigMatchesExpr.matches(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = if (nullComponents) "matchesSkippingNulls" else "matches"
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SigMatchesExpr.$f($a, $b)")
+  }
 
   override def prettyName: String = "sig_matches"
   override protected def withNewChildrenInternal(
@@ -54,6 +63,22 @@ object SigMatchesExpr {
     var c = 0
     var i = 0
     while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
+    c
+  }
+
+  /** [[matches]] for arrays that may hold null components: a position where
+    * either side is null never matches, as `IF(x = y, 1, 0)` yields 0 on a
+    * null comparison in the fold. (A null slot's raw storage reads as 0, so
+    * the plain loop would count null == null and null == 0.)
+    */
+  def matchesSkippingNulls(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var c = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+      i += 1
+    }
     c
   }
 }

@@ -21,6 +21,14 @@ import org.apache.spark.sql.types._
   * Scale note: with `partitionCols` (e.g. a symbol column) every window and
   * EMA scan distributes per key. A single global series degrades to one task —
   * correct, and matching the reference's single-series scope.
+  *
+  * Driver cost: each Dataset step analyzes its plan again, and on a small
+  * delivery that analysis outweighs the task compute. So the four components
+  * `technicalIndicators` composes build their columns in one projection each
+  * (SMA, Bollinger) or one per dependent step (RSI: delta, EMAs, ratio; MACD:
+  * line, signal, histogram), and the pre-processing is one projection, where
+  * `withColumn` chains took about 22 steps. The expressions are the ones the
+  * chains used, so the values are bit-identical.
   */
 object Indicators {
 
@@ -37,6 +45,30 @@ object Indicators {
     if (partitionCols.isEmpty) Window.orderBy(orderCol)
     else Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCol)
 
+  /** `df` plus `cols` in ONE projection, placed as chained `withColumn`s
+    * would place them (a column of the same name replaced in place, the
+    * rest appended in order), minus the scratch columns `drop`. Every
+    * Dataset step analyzes its plan again, so a component that builds its
+    * outputs in one or a few of these pays that many analyses rather than
+    * one per `withColumn`/`drop`.
+    */
+  private def project(df: DataFrame, cols: Seq[(String, Column)], drop: Seq[String] = Nil): DataFrame = {
+    val same = df.sparkSession.sessionState.conf.resolver
+    val kept = df.columns.toSeq.filterNot(c => drop.exists(same(c, _))).map { c =>
+      cols.find(o => same(c, o._1)).map { case (n, e) => e.as(n) }.getOrElse(quoted(c))
+    }
+    val added = cols.filterNot(o => df.columns.exists(same(_, o._1))).map { case (n, e) => e.as(n) }
+    df.select(kept ++ added: _*)
+  }
+
+  private def quoted(name: String): Column = col(s"`${name.replace("`", "``")}`")
+
+  /** The native [[graft.functions.Ewm]] window function over `x`, with the
+    * literals the SQL text `ewm(x, alpha, minPeriods)` parses to.
+    */
+  private def ewm(x: Column, alpha: Double, minPeriods: Int): Column =
+    call_function("ewm", x, expr(alpha.toString), lit(minPeriods))
+
   /** W1 — simple moving average over the trailing `period` rows; null until a
     * full window is present (pandas `rolling(period).mean()`). Exact decimal
     * window sum keeps the value oracle-stable.
@@ -47,7 +79,7 @@ object Indicators {
     val w = baseWindow(partitionCols, orderCol).rowsBetween(-(period - 1), 0)
     val cnt = count(col(closeCol)).over(w)
     val s = sum(col(closeCol)).over(w)
-    df.withColumn(outCol, when(cnt === period, s / period.toDouble))
+    project(df, Seq(outCol -> when(cnt === period, s / period.toDouble)))
   }
 
   /** W3 — Bollinger bands: SMA ± k·(sample stddev) over the trailing window.
@@ -73,8 +105,9 @@ object Indicators {
     val mean = s1 / n
     val variance = greatest((s2 - s1 * s1 / n) / (n - 1.0), lit(0.0))
     val std = sqrt(variance)
-    df.withColumn(upperCol, when(cnt === period, mean + lit(k) * std))
-      .withColumn(lowerCol, when(cnt === period, mean - lit(k) * std))
+    project(df, Seq(
+      upperCol -> when(cnt === period, mean + lit(k) * std),
+      lowerCol -> when(cnt === period, mean - lit(k) * std)))
   }
 
   /** W2 — Wilder RSI: EMA(α=1/period) of gains and losses from one-step price
@@ -88,28 +121,29 @@ object Indicators {
     * the upstream plan stays distributed instead of being funneled through a
     * single-task `mapPartitions` pass per call. [[Ema.withEma]] remains the
     * bit-exact-tested fallback for callers without a window-able plan.
+    *
+    * Three projections: the delta (a window), the two EMAs of its gain and
+    * loss (windows over it), and the ratio of the EMAs (used twice each, so
+    * named first rather than computed twice).
     */
   def withRsi(
       df: DataFrame, closeCol: String, outCol: String, period: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
-    val delta = col(closeCol) - lag(col(closeCol), 1).over(w)
-    val withGl = df
-      .withColumn("__delta", delta)
-      .withColumn("__gain", when(col("__delta") > 0, col("__delta"))
-        .otherwise(when(col("__delta").isNotNull, lit(0.0))))
-      .withColumn("__loss", when(col("__delta") < 0, -col("__delta"))
-        .otherwise(when(col("__delta").isNotNull, lit(0.0))))
+    val delta = col("__delta")
+    val gain = when(delta > 0, delta).otherwise(when(delta.isNotNull, lit(0.0)))
+    val loss = when(delta < 0, -delta).otherwise(when(delta.isNotNull, lit(0.0)))
     val alpha = 1.0 / period.toDouble
-    val smoothed = withGl
-      .withColumn("__avg_gain", expr(s"ewm(__gain, $alpha, $period)").over(w))
-      .withColumn("__avg_loss", expr(s"ewm(__loss, $alpha, $period)").over(w))
-    smoothed
-      .withColumn(outCol,
-        when(col("__avg_loss") === 0.0, when(col("__avg_gain") > 0.0, lit(100.0)))
-          .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + col("__avg_gain") / col("__avg_loss"))))
-      .drop("__delta", "__gain", "__loss", "__avg_gain", "__avg_loss")
+    val withDelta = project(df, Seq("__delta" -> (col(closeCol) - lag(col(closeCol), 1).over(w))))
+    val smoothed = project(withDelta, Seq(
+      "__avg_gain" -> ewm(gain, alpha, period).over(w),
+      "__avg_loss" -> ewm(loss, alpha, period).over(w)))
+    val (avgGain, avgLoss) = (col("__avg_gain"), col("__avg_loss"))
+    project(smoothed, Seq(outCol ->
+      when(avgLoss === 0.0, when(avgGain > 0.0, lit(100.0)))
+        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))),
+      drop = Seq("__delta", "__avg_gain", "__avg_loss"))
   }
 
   /** W4 — MACD: EMA(fast) − EMA(slow) with α = 2/(span+1) seeded at x₀;
@@ -120,7 +154,9 @@ object Indicators {
     * the MACD line) stacks a second Window over the same spec, reusing the
     * first's partitioning and sort — no second shuffle, and the upstream plan
     * runs distributed exactly once (the previous `Ema.withEma` route funneled
-    * the whole upstream into a `coalesce(1)` task twice in sequence).
+    * the whole upstream into a `coalesce(1)` task twice in sequence). Each
+    * output is one projection: the line (both EMAs), the signal (its EMA),
+    * the histogram (their difference).
     */
   def withMacd(
       df: DataFrame, closeCol: String,
@@ -130,12 +166,10 @@ object Indicators {
     graft.functions.GraftFunctions.register(df.sparkSession)
     def a(span: Int): Double = 2.0 / (span.toDouble + 1.0)
     val w = baseWindow(partitionCols, orderCol)
-    df.withColumn("__ema_fast", expr(s"ewm(`$closeCol`, ${a(fast)}, 0)").over(w))
-      .withColumn("__ema_slow", expr(s"ewm(`$closeCol`, ${a(slow)}, 0)").over(w))
-      .withColumn(macdCol, col("__ema_fast") - col("__ema_slow"))
-      .withColumn(signalCol, expr(s"ewm(`$macdCol`, ${a(signalSpan)}, 0)").over(w))
-      .withColumn(histCol, col(macdCol) - col(signalCol))
-      .drop("__ema_fast", "__ema_slow")
+    val close = quoted(closeCol)
+    val line = project(df, Seq(macdCol -> (ewm(close, a(fast), 0).over(w) - ewm(close, a(slow), 0).over(w))))
+    val signal = project(line, Seq(signalCol -> ewm(quoted(macdCol), a(signalSpan), 0).over(w)))
+    project(signal, Seq(histCol -> (quoted(macdCol) - quoted(signalCol))))
   }
 
   /** Stochastic oscillator: %K = 100·(close − min(low, kPeriod)) /
@@ -792,21 +826,21 @@ object Indicators {
   def technicalIndicators(
       df: DataFrame, cfg: Config = Config(),
       partitionCols: Seq[String] = Nil): DataFrame = {
-    val lower = Cleaning.lowercaseColumns(df)
     val required = Seq("date", "open", "high", "low", "close", "volume")
-    val missing = required.filterNot(lower.columns.contains)
+    val missing = required.filterNot(df.columns.map(_.toLowerCase).contains)
     require(missing.isEmpty, s"technical_indicators: missing required columns: ${missing.mkString(",")}")
 
-    // Reference pre-processing: dates → ISO-8601 UTC strings; numerics coerced
-    // with null-on-failure; sort ascending by date (string sort == time sort
-    // for this format).
-    val prepped = lower
-      .withColumn("date", date_format(try_to_timestamp(col("date")), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-      .withColumn("open", col("open").cast(DoubleType))
-      .withColumn("high", col("high").cast(DoubleType))
-      .withColumn("low", col("low").cast(DoubleType))
-      .withColumn("close", col("close").cast(DoubleType))
-      .withColumn("volume", col("volume").cast(DoubleType))
+    // Reference pre-processing, in one projection: lowercased column names;
+    // dates → ISO-8601 UTC strings; numerics coerced with null-on-failure;
+    // sort ascending by date (string sort == time sort for this format).
+    def prep(name: String, c: Column): Column = name match {
+      case "date" => date_format(try_to_timestamp(c), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+      case "open" | "high" | "low" | "close" | "volume" => c.cast(DoubleType)
+      case _ => c
+    }
+    val prepped = df.select(df.columns.toSeq.map { c =>
+      prep(c.toLowerCase, quoted(c)).as(c.toLowerCase)
+    }: _*)
 
     val withInd = {
       val s = withSma(prepped, "close", "sma_50", cfg.smaPeriod, "date", partitionCols)

@@ -226,6 +226,10 @@ object PrefixSum {
     }
   }
 
+  /** The [[DebugRec]] mode of a windowed run over buckets `b`. */
+  private def windowMode(b: Buckets): String =
+    if (b.refined) "equal-width-window-refined" else "equal-width-window"
+
   /** The integral key expression the bucketing derives from, if the key
     * SCHEMA admits one (decided without running a job).
     */
@@ -390,8 +394,7 @@ object PrefixSum {
     refine(key, b, statRows.map(_._1).toSeq).foreach { rb =>
       b = rb; statRows = collectStats(rb)
     }
-    record(DebugRec("withStartOffsets", orderCol,
-      if (b.refined) "equal-width-window-refined" else "equal-width-window",
+    record(DebugRec("withStartOffsets", orderCol, windowMode(b),
       statRows.length, b.nPids, s"[${b.lo},${b.hi}] width=${b.width}",
       statRows.map(_._2.toSeq).toSeq))
     // exclusive scan of the observed buckets' totals = per-bucket bases
@@ -530,7 +533,7 @@ object PrefixSum {
       key: Column, b0: Buckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = mat.sparkSession
-    def statsOf(b: Buckets): (Array[(Long, Long, Long)], DataFrame,
+    def statsOf(b: Buckets): (Buckets, Array[(Long, Long, Long)], DataFrame,
         org.apache.spark.sql.expressions.WindowSpec) = {
       val w = Window.partitionBy(col("__psb")).orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -547,12 +550,12 @@ object PrefixSum {
       // one-level skew refinement, same discipline as windowedStartOffsets
       refine(key, b, rows.map(_._1).toSeq) match {
         case Some(rb) => statsOf(rb)
-        case None => (rows.map(_._2), local, w)
+        case None => (b, rows.map(_._2), local, w)
       }
     }
-    val (stats, local, w) = statsOf(b0)
-    record(DebugRec("withCusum", orderCol, "equal-width-window",
-      stats.length, b0.nPids, s"[${b0.lo},${b0.hi}] width=${b0.width}",
+    val (b, stats, local, w) = statsOf(b0)
+    record(DebugRec("withCusum", orderCol, windowMode(b),
+      stats.length, b.nPids, s"[${b.lo},${b.hi}] width=${b.width}",
       stats.map(t => Seq(t._2, t._3)).toSeq))
     var base = 0L; var minBefore = 0L // 0 anchors P_0, the empty prefix
     val baseRows = stats.map { case (pid, s, m) =>
@@ -677,7 +680,7 @@ object PrefixSum {
     }
     val (b, stats) = statsOf(b0)
     val withPid = mat.withColumn("__psb", b.pidOf)
-    record(DebugRec("withLag", orderCol, "equal-width-window",
+    record(DebugRec("withLag", orderCol, windowMode(b),
       stats.length, b.nPids, s"[${b.lo},${b.hi}] width=${b.width}",
       stats.map(t => Seq(1L, t._2)).toSeq))
     var prev: Option[Long] = None

@@ -2,6 +2,9 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.graft.DatasetFactory
 import org.apache.spark.sql.types._
 import graft.core.Loader
 import graft.core.PluginConfig._
@@ -28,6 +31,18 @@ import graft.core.PluginConfig._
   *        degrade to insert-if-absent (`DO NOTHING` semantics) — and
   *        commits;
   *     4. the staging table is dropped in a `finally`, whatever happened.
+  *
+  * Key-order sorts: when the root of the input's analyzed plan is a global
+  * sort whose keys are all primary-key columns (the finance pipeline's
+  * `orderBy(symbol, date)` after its indicator windows), the sort's child is
+  * upserted instead. Rows that tie on the primary key also tie on such a
+  * sort, so the sort cannot decide which duplicate keep-last keeps, and a
+  * SQL table has no row order to preserve. Dropping it saves the sort's
+  * range-sampling job and its exchange, and with them a second run of
+  * everything upstream of it; the keep-last window's clustering on the keys
+  * is then usually met by the input's own partitioning, so the load is one
+  * shuffle map stage and one result stage. A sort on any non-key column is
+  * kept: it decides keep-last.
   *
   * Atomicity: the target sees a whole frame or none of it. A failure in the
   * Spark action (a throwing input plan, a rejected value) happens before the
@@ -82,7 +97,8 @@ class JdbcLoader(conf: Conf) extends Loader {
       exec(conn, s"CREATE TABLE $stage (${columnsDdl(schema)})")
       try {
         exec(conn, s"CREATE UNIQUE INDEX ${stage}_pk ON $stage (${primaryKeys.map(q).mkString(", ")})")
-        JdbcLoader.insertPartitions(keepLast(df), url, stage, insertCols, cols.size, batchSize)
+        JdbcLoader.insertPartitions(keepLast(withoutKeyOrderSort(df)), url, stage, insertCols,
+          cols.size, batchSize)
         if (hasRows(conn, stage)) {
           conn.setAutoCommit(false)
           try {
@@ -106,6 +122,18 @@ class JdbcLoader(conf: Conf) extends Loader {
       }
     } finally conn.close()
   }
+
+  /** `df` without a root global sort whose keys are all primary-key
+    * columns (see the class doc); any other frame as it is.
+    */
+  private def withoutKeyOrderSort(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case Sort(order, true, child, _) if order.forall(_.child match {
+          case a: AttributeReference => primaryKeys.contains(a.name)
+          case _ => false
+        }) => DatasetFactory.ofRows(df.sparkSession, child)
+      case _ => df
+    }
 
   /** Drop intra-frame PK duplicates keep-LAST: the staging table's unique
     * index admits each key once, and one MERGE source row per key keeps

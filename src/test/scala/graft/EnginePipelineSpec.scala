@@ -179,6 +179,78 @@ class EnginePipelineSpec extends AnyFunSuite {
     assert(st.get("cap_pipe").contains(1))
   }
 
+  /** The frame the `cursor_probe` extractor hands the engine. */
+  @volatile private var probeFrame: DataFrame = _
+
+  /** One `Engine.run` of `probeFrame` into a no-op loader, incremental on
+    * `field` from a stored cursor of 41: the stored cursor afterwards, and
+    * the jobs the run took (the extractor and loader run none, so they are
+    * the cursor's).
+    */
+  private def cursorRun(field: String): (Option[Any], Int) = {
+    Registries.bootstrap()
+    try Registries.extractors.register("cursor_probe")((_, _) => new Extractor {
+      def extract(): DataFrame = probeFrame
+    }) catch { case _: IllegalStateException => () }
+    try Registries.loaders.register("cursor_noop")((_, _) => new Loader {
+      def load(df: DataFrame): Unit = ()
+    }) catch { case _: IllegalStateException => () }
+    val dir = tmp()
+    val statePath = dir.resolve("state.json").toString
+    new StateManager(statePath).set("cursor_pipe", 41)
+    val cfg = Config.PipelineConfig(name = "cursor_pipe",
+      extract = Config.StepConfig("cursor_probe"), load = Config.StepConfig("cursor_noop"),
+      incremental = Some(Config.IncrementalConfig(cursorField = field, cursorParam = "since",
+        statePath = statePath)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      new Engine(spark).run(cfg)
+      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    (new StateManager(statePath).get("cursor_pipe"), jobs.get())
+  }
+
+  test("cursor equals max() over nulls for long, string, timestamp and double fields, in one job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.{col, max}
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val schema = StructType(Seq(StructField("n", LongType), StructField("s", StringType),
+      StructField("t", TimestampType), StructField("x", DoubleType), StructField("z", LongType)))
+    val rows = Seq(
+      Row(3L, "pear", ts("2024-03-01 10:00:00"), 1.5, null),
+      Row(null, null, null, null, null),
+      Row(17L, "apple", ts("2024-03-09 08:30:00"), Double.NaN, null),
+      Row(-5L, "zebra", null, 2.5, null),
+      Row(null, "mango", ts("2023-12-31 23:59:59"), null, null),
+      Row(9L, null, ts("2024-01-15 00:00:00"), -7.0, null))
+    // several partitions, so the order the rows arrive in is not the answer
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    def expected(c: String) = Option(frame.agg(max(col(c))).head().get(0))
+    probeFrame = frame
+    for (c <- Seq("n", "s", "t", "x")) {
+      val (cursor, jobs) = cursorRun(c)
+      assert(expected(c).nonEmpty)
+      assert(cursor.map(_.toString) == expected(c).map(_.toString), s"cursor over '$c'")
+      assert(jobs == 1, s"cursor over '$c' took $jobs jobs")
+    }
+    // all-null column and empty delivery: the stored cursor stays
+    val (allNull, nullJobs) = cursorRun("z")
+    assert(allNull.contains(41))
+    assert(nullJobs <= 1, s"all-null cursor took $nullJobs jobs")
+    probeFrame = spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 2), schema)
+    val (empty, emptyJobs) = cursorRun("n")
+    assert(empty.contains(41))
+    assert(emptyJobs <= 1, s"empty-delivery cursor took $emptyJobs jobs")
+  }
+
   test("incremental_dedup plugin: fingerprint/manifest state travels across engine runs; save-after-load") {
     val dir = tmp()
     val state = dir.resolve("incstate").toString

@@ -197,6 +197,73 @@ class JdbcLoaderSpec extends AnyFunSuite {
     assert(micros(backUpsert, ("FIRST_TS", "LAST_TS")) == expected)
   }
 
+  /** Jobs run, and the executed plans of the SQL actions, during `body`. */
+  private def traced(body: => Unit): (Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val drain = () => org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(jl)
+    spark.listenerManager.register(ql)
+    try { body; drain() }
+    finally { spark.sparkContext.removeSparkListener(jl); spark.listenerManager.unregister(ql) }
+    import scala.jdk.CollectionConverters._
+    (jobs.get(), plans.asScala.toSeq)
+  }
+
+  private def queryRows(url: String, table: String): Seq[Seq[Any]] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(s"SELECT * FROM $table")
+      val n = rs.getMetaData.getColumnCount
+      val buf = scala.collection.mutable.Buffer.empty[Seq[Any]]
+      while (rs.next()) buf += (1 to n).map(rs.getObject)
+      buf.toSeq.sortBy(_.mkString("|"))
+    } finally conn.close()
+  }
+
+  test("a frame sorted on its primary keys loads in 2 jobs, without a range exchange") {
+    // the shape the finance pipeline hands the sink: hash-partitioned by
+    // symbol (the indicator windows), then ordered by (symbol, date)
+    import org.apache.spark.sql.functions.col
+    val rows = for (s <- 0 until 4; d <- 0 until 50) yield (s"S$s", f"2020-01-${d % 28 + 1}%02d-$d", s * 100.0 + d)
+    val unsorted = rows.toDF("symbol", "date", "close").repartition(4, col("symbol"))
+    val sorted = unsorted.orderBy("symbol", "date")
+    def loader(url: String) = new JdbcLoader(Map("connection_string" -> url, "table" -> "t_sorted",
+      "if_exists" -> "upsert", "primary_keys" -> Seq("symbol", "date")))
+    val (urlA, urlB) = (freshDb(), freshDb())
+    loader(urlA).load(unsorted)
+    val (jobs, plans) = traced(loader(urlB).load(sorted))
+    assert(queryRows(urlB, "t_sorted") == queryRows(urlA, "t_sorted"))
+    assert(queryRows(urlB, "t_sorted").size == rows.size)
+    assert(jobs == 2, s"key-sorted upsert ran $jobs jobs:\n${plans.mkString("\n")}")
+    assert(plans.nonEmpty && !plans.exists(_.toLowerCase.contains("rangepartitioning")),
+      s"key-order sort survived into the load:\n${plans.mkString("\n")}")
+  }
+
+  test("a sort on a non-key column still decides which duplicate key is kept") {
+    // ten keys, ten rows each; `ord` runs against the row index, so the
+    // LAST row of each key in `ord` order is its FIRST in delivery order
+    val rows = (0 until 100).map(i => ((i % 10).toLong, s"v$i", -i))
+    val df = rows.toDF("id", "v", "ord")
+    val url = freshDb()
+    upsertLoader(url, "t_ord").load(df.orderBy("ord"))
+    assert(queryAll(url, "t_ord") == (0 until 10).map(k => (k.toLong, s"v$k")))
+    // a sort whose keys include a non-key column is kept as well
+    upsertLoader(url, "t_ord2").load(df.orderBy("id", "ord"))
+    assert(queryAll(url, "t_ord2") == (0 until 10).map(k => (k.toLong, s"v$k")))
+  }
+
   test("upsert creates the unique index uq_<table>_<pks>") {
     val url = freshDb()
     new JdbcLoader(Map(

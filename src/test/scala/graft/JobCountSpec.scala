@@ -48,6 +48,41 @@ class JobCountSpec extends AnyFunSuite {
     assert(n <= 4, s"finance pipeline: $n jobs > budget 4")
   }
 
+  test("a delivery of the benchmark's finance shape stays within its job budget") {
+    // the etl_finance_ml pipeline: several symbols in one JSON delivery,
+    // indicators per symbol, upsert on (symbol, date), incremental on date.
+    // Schema inference, the cursor and the load's map and result stages:
+    // measured 4; a two-job cursor or a key-order sort in the load makes it 7.
+    import graft.core.Config._
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs-fin")
+    val bars = for (s <- 0 until 3; d <- 0 until 70) yield {
+      val c = 100.0 + s * 10 + (d * 7 % 11) - (d % 5)
+      val day = java.time.LocalDate.of(2020, 1, 1).plusDays(d.toLong)
+      s"""{"symbol":"S$s","date":"$day","open":$c,"high":${c + 2},"low":${c - 2},"close":${c + 1},"volume":${1000 + d}}"""
+    }
+    val path = dir.resolve("d0.json")
+    java.nio.file.Files.writeString(path, bars.mkString("[", ",\n", "]"))
+    val cfg = PipelineConfig(
+      name = "jobcount_finance",
+      extract = StepConfig("json_file", inlineConfig = Map("path" -> path.toString)),
+      transform = Seq(
+        StepConfig("pydantic_validation", inlineConfig = Map("schema" -> "ohlcv")),
+        StepConfig("technical_indicators", inlineConfig = Map("partition_columns" -> Seq("symbol")))),
+      load = StepConfig("sql_database", inlineConfig = Map(
+        "connection_string" -> "jdbc:derby:memory:jobcount_finance;create=true", "table" -> "prices",
+        "if_exists" -> "upsert", "primary_keys" -> Seq("symbol", "date"))),
+      incremental = Some(IncrementalConfig(cursorField = "date", cursorParam = "since",
+        statePath = dir.resolve("cursor.json").toString)))
+    val n = jobsDuring { new graft.core.Engine(spark).run(cfg); () }
+    val conn = java.sql.DriverManager.getConnection("jdbc:derby:memory:jobcount_finance")
+    val loaded = try {
+      val rs = conn.createStatement().executeQuery("SELECT COUNT(*) FROM prices")
+      rs.next(); rs.getLong(1)
+    } finally conn.close()
+    assert(loaded == 3 * (70 - 49), s"loaded $loaded rows")
+    assert(n <= 4, s"finance delivery: $n jobs > budget 4")
+  }
+
   test("iterative and report queries stay within their job budgets") {
     // (query, bound). Memo-backed queries are measured COLD here —
     // graft.queries.Shared is cleared first, so dd11 pays the whole kernel

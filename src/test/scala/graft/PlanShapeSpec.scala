@@ -194,6 +194,42 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("prefix sum skew refinement: cusum and lag record the refined mode") {
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    // the clustered key of the case above: bucket 0 holds every row but one
+    val df = spark.range(0, 20000).toDF("k")
+      .union(spark.range(1, 2).select(lit(1L << 40).as("k")))
+      .withColumn("v", lit(1L))
+    val prev = spark.conf.get("spark.graft.prefixsum.smallRows", "")
+    spark.conf.set("spark.graft.prefixsum.smallRows", "0") // scaled path
+    try {
+      graft.operators.PrefixSum.drainDebug()
+      // v ≡ 1: the CUSUM is the 1-based rank, the lag is 1 after the first row
+      val cs = graft.operators.PrefixSum.withCusum(df, "k", "v", "cs")
+      val rank = when(col("k") === lit(1L << 40), lit(20001L)).otherwise(col("k") + 1)
+      assert(cs.filter(col("cs") =!= rank).count() == 0, "refined CUSUM must equal the scan")
+      val lg = graft.operators.PrefixSum.withLag(df, "k", "v", "lg")
+      assert(lg.filter(col("k") > 0 && !(col("lg") <=> lit(1L))).count() == 0)
+      assert(lg.filter(col("k") === 0 && col("lg").isNotNull).count() == 0)
+      val recs = graft.operators.PrefixSum.drainDebug()
+      for (op <- Seq("withCusum", "withLag")) {
+        val mine = recs.filter(_.op == op)
+        assert(mine.nonEmpty, s"$op left no debug record")
+        assert(mine.last.mode == "equal-width-window-refined",
+          s"$op recorded mode ${mine.last.mode} on a clustered key")
+      }
+      // the CUSUM record's per-bucket sums (v ≡ 1 → row counts) are the
+      // refined buckets', not the coarse map's single hot bucket
+      val counts = recs.filter(_.op == "withCusum").last.passTotals.map(_.head)
+      val even = math.max(1L, 20001L / math.max(1, spark.sparkContext.defaultParallelism * 8))
+      assert(counts.max <= 4 * even, s"recorded max bucket ${counts.max} > 4x the even share $even")
+    } finally {
+      if (prev.isEmpty) spark.conf.unset("spark.graft.prefixsum.smallRows")
+      else spark.conf.set("spark.graft.prefixsum.smallRows", prev)
+    }
+  }
+
   test("q_sessionize: session rollup reuses the window's user_id partitioning — one hash exchange") {
     val p = plan(graft.queries.AnalyticsQueries.qSessionize.run(spark, sf))
     val hashEx = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
