@@ -32,20 +32,11 @@ case class SigMatchesExpr(left: Expression, right: Expression) extends BinaryExp
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
-  /** Either side may hold null components: take the null-skipping loop. */
-  private def nullComponents: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => true
-  })
-
   override def nullSafeEval(a: Any, b: Any): Any =
-    if (nullComponents) SigMatchesExpr.matchesSkippingNulls(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else SigMatchesExpr.matches(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    SigMatchesExpr.matches(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = if (nullComponents) "matchesSkippingNulls" else "matches"
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SigMatchesExpr.$f($a, $b)")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SigMatchesExpr.matches($a, $b)")
 
   override def prettyName: String = "sig_matches"
   override protected def withNewChildrenInternal(
@@ -57,21 +48,11 @@ object SigMatchesExpr {
   /** Static entry point shared by interpreted eval and generated code —
     * count over the shorter length, exactly like the zip_with fold it
     * replaces (signatures are fixed-k by construction, so the min is moot).
+    * A position where either side is null never matches, as `IF(x = y, 1, 0)`
+    * yields 0 on a null comparison in the fold; a null slot's raw storage
+    * reads as 0, so it must be tested, not compared.
     */
   def matches(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var c = 0
-    var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
-    c
-  }
-
-  /** [[matches]] for arrays that may hold null components: a position where
-    * either side is null never matches, as `IF(x = y, 1, 0)` yields 0 on a
-    * null comparison in the fold. (A null slot's raw storage reads as 0, so
-    * the plain loop would count null == null and null == 0.)
-    */
-  def matchesSkippingNulls(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
     var i = 0

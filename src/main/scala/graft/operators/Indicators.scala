@@ -24,10 +24,11 @@ import org.apache.spark.sql.types._
   *
   * Driver cost: each Dataset step analyzes its plan again, and on a small
   * delivery that analysis outweighs the task compute. So the four components
-  * `technicalIndicators` composes build their columns in one projection each
-  * (SMA, Bollinger) or one per dependent step (RSI: delta, EMAs, ratio; MACD:
-  * line, signal, histogram), and the pre-processing is one projection, where
-  * `withColumn` chains took about 22 steps. The expressions are the ones the
+  * `technicalIndicators` composes build their columns with one
+  * `Dataset.withColumns` each (SMA, Bollinger) or one per dependent step
+  * (RSI: delta, EMAs, ratio, then the scratch-column drop; MACD: line, signal,
+  * histogram), and the pre-processing is one projection, where `withColumn`
+  * chains took about 22 steps. The expressions are the ones the
   * chains used, so the values are bit-identical.
   */
 object Indicators {
@@ -44,22 +45,6 @@ object Indicators {
   private def baseWindow(partitionCols: Seq[String], orderCol: String): WindowSpec =
     if (partitionCols.isEmpty) Window.orderBy(orderCol)
     else Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCol)
-
-  /** `df` plus `cols` in ONE projection, placed as chained `withColumn`s
-    * would place them (a column of the same name replaced in place, the
-    * rest appended in order), minus the scratch columns `drop`. Every
-    * Dataset step analyzes its plan again, so a component that builds its
-    * outputs in one or a few of these pays that many analyses rather than
-    * one per `withColumn`/`drop`.
-    */
-  private def project(df: DataFrame, cols: Seq[(String, Column)], drop: Seq[String] = Nil): DataFrame = {
-    val same = df.sparkSession.sessionState.conf.resolver
-    val kept = df.columns.toSeq.filterNot(c => drop.exists(same(c, _))).map { c =>
-      cols.find(o => same(c, o._1)).map { case (n, e) => e.as(n) }.getOrElse(quoted(c))
-    }
-    val added = cols.filterNot(o => df.columns.exists(same(_, o._1))).map { case (n, e) => e.as(n) }
-    df.select(kept ++ added: _*)
-  }
 
   private def quoted(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
@@ -79,7 +64,7 @@ object Indicators {
     val w = baseWindow(partitionCols, orderCol).rowsBetween(-(period - 1), 0)
     val cnt = count(col(closeCol)).over(w)
     val s = sum(col(closeCol)).over(w)
-    project(df, Seq(outCol -> when(cnt === period, s / period.toDouble)))
+    df.withColumns(Map(outCol -> when(cnt === period, s / period.toDouble)))
   }
 
   /** W3 — Bollinger bands: SMA ± k·(sample stddev) over the trailing window.
@@ -105,7 +90,7 @@ object Indicators {
     val mean = s1 / n
     val variance = greatest((s2 - s1 * s1 / n) / (n - 1.0), lit(0.0))
     val std = sqrt(variance)
-    project(df, Seq(
+    df.withColumns(Map(
       upperCol -> when(cnt === period, mean + lit(k) * std),
       lowerCol -> when(cnt === period, mean - lit(k) * std)))
   }
@@ -122,9 +107,9 @@ object Indicators {
     * single-task `mapPartitions` pass per call. [[Ema.withEma]] remains the
     * bit-exact-tested fallback for callers without a window-able plan.
     *
-    * Three projections: the delta (a window), the two EMAs of its gain and
-    * loss (windows over it), and the ratio of the EMAs (used twice each, so
-    * named first rather than computed twice).
+    * Three projections and a drop: the delta (a window), the two EMAs of its
+    * gain and loss (windows over it), the ratio of the EMAs (used twice each,
+    * so named first rather than computed twice), then the scratch columns go.
     */
   def withRsi(
       df: DataFrame, closeCol: String, outCol: String, period: Int,
@@ -135,15 +120,15 @@ object Indicators {
     val gain = when(delta > 0, delta).otherwise(when(delta.isNotNull, lit(0.0)))
     val loss = when(delta < 0, -delta).otherwise(when(delta.isNotNull, lit(0.0)))
     val alpha = 1.0 / period.toDouble
-    val withDelta = project(df, Seq("__delta" -> (col(closeCol) - lag(col(closeCol), 1).over(w))))
-    val smoothed = project(withDelta, Seq(
+    val withDelta = df.withColumns(Map("__delta" -> (col(closeCol) - lag(col(closeCol), 1).over(w))))
+    val smoothed = withDelta.withColumns(Map(
       "__avg_gain" -> ewm(gain, alpha, period).over(w),
       "__avg_loss" -> ewm(loss, alpha, period).over(w)))
     val (avgGain, avgLoss) = (col("__avg_gain"), col("__avg_loss"))
-    project(smoothed, Seq(outCol ->
+    smoothed.withColumns(Map(outCol ->
       when(avgLoss === 0.0, when(avgGain > 0.0, lit(100.0)))
-        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))),
-      drop = Seq("__delta", "__avg_gain", "__avg_loss"))
+        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))))
+      .drop("__delta", "__avg_gain", "__avg_loss")
   }
 
   /** W4 — MACD: EMA(fast) − EMA(slow) with α = 2/(span+1) seeded at x₀;
@@ -167,9 +152,9 @@ object Indicators {
     def a(span: Int): Double = 2.0 / (span.toDouble + 1.0)
     val w = baseWindow(partitionCols, orderCol)
     val close = quoted(closeCol)
-    val line = project(df, Seq(macdCol -> (ewm(close, a(fast), 0).over(w) - ewm(close, a(slow), 0).over(w))))
-    val signal = project(line, Seq(signalCol -> ewm(quoted(macdCol), a(signalSpan), 0).over(w)))
-    project(signal, Seq(histCol -> (quoted(macdCol) - quoted(signalCol))))
+    val line = df.withColumns(Map(macdCol -> (ewm(close, a(fast), 0).over(w) - ewm(close, a(slow), 0).over(w))))
+    val signal = line.withColumns(Map(signalCol -> ewm(quoted(macdCol), a(signalSpan), 0).over(w)))
+    signal.withColumns(Map(histCol -> (quoted(macdCol) - quoted(signalCol))))
   }
 
   /** Stochastic oscillator: %K = 100·(close − min(low, kPeriod)) /
