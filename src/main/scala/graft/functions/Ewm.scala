@@ -93,9 +93,9 @@ case class Ewm(child: Expression, alpha: Double, minPeriods: Int,
     copy(child = newChildren.head)
 }
 
-/** Registration: `GraftFunctions.register(spark)` (or install
-  * [[GraftExtensions]] via `.withExtensions`) exposes `ewm(x, alpha,
-  * min_periods[, ignore_na])` to SQL and `expr(...)`.
+/** Registration: `GraftFunctions.register(spark)` exposes `ewm(x, alpha,
+  * min_periods[, ignore_na])` and the other graft functions to SQL and
+  * `expr(...)`, once per session.
   */
 object GraftFunctions {
   private[functions] def build(exprs: Seq[Expression]): Expression = {
@@ -122,91 +122,67 @@ object GraftFunctions {
     Ewm(exprs.head, alpha, minPeriods, ignoreNa)
   }
 
-  private[functions] def buildPsar(exprs: Seq[Expression]): Expression = {
-    require(exprs.size == 5, "psar(high, low, af0, step, af_max)")
-    def d(e: Expression, what: String): Double = e match {
-      case Literal(v: java.lang.Double, _) => v.doubleValue()
-      case Literal(v: Decimal, _) => v.toDouble
-      case Literal(v: java.lang.Integer, _) => v.doubleValue()
-      case other => throw new IllegalArgumentException(s"psar: $what must be a numeric literal, got $other")
-    }
-    Psar(exprs(0), exprs(1), d(exprs(2), "af0"), d(exprs(3), "step"), d(exprs(4), "af_max"))
+  /** A numeric literal argument of graft function `fn`. */
+  private def numLit(fn: String, what: String)(e: Expression): Double = e match {
+    case Literal(v: java.lang.Double, _) => v.doubleValue()
+    case Literal(v: Decimal, _) => v.toDouble
+    case Literal(v: java.lang.Integer, _) => v.doubleValue()
+    case other => throw new IllegalArgumentException(
+      s"$fn: $what must be a numeric literal, got $other")
   }
 
+  /** An integer literal argument of graft function `fn`. */
+  private def intLit(fn: String, what: String)(e: Expression): Int = e match {
+    case Literal(i: java.lang.Integer, _) => i.intValue()
+    case Literal(l: java.lang.Long, _) => l.intValue()
+    case other => throw new IllegalArgumentException(
+      s"$fn: $what must be an integer literal, got $other")
+  }
+
+  /** Every graft SQL function, by name. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "ewm" -> build,
+    "psar" -> { exprs =>
+      require(exprs.size == 5, "psar(high, low, af0, step, af_max)")
+      val d = (i: Int, what: String) => numLit("psar", what)(exprs(i))
+      Psar(exprs(0), exprs(1), d(2, "af0"), d(3, "step"), d(4, "af_max"))
+    },
+    "supertrend" -> { exprs =>
+      require(exprs.size == 3, "supertrend(basic_ub, basic_lb, close)")
+      SuperTrend(exprs(0), exprs(1), exprs(2))
+    },
+    "holt" -> { exprs =>
+      require(exprs.size == 3, "holt(value, alpha, beta)")
+      val d = (i: Int, what: String) => numLit("holt", what)(exprs(i))
+      HoltLinear(exprs(0), d(1, "alpha"), d(2, "beta"))
+    },
+    "holt_winters" -> { exprs =>
+      require(exprs.size == 5, "holt_winters(value, alpha, beta, gamma, period)")
+      val d = (i: Int, what: String) => numLit("holt_winters", what)(exprs(i))
+      HoltWinters(exprs(0), d(1, "alpha"), d(2, "beta"), d(3, "gamma"),
+        intLit("holt_winters", "period")(exprs(4)))
+    },
+    "var_ewm" -> { exprs =>
+      require(exprs.size == 2, "var_ewm(value, alpha)")
+      VarEwm(exprs(0), exprs(1))
+    },
+    "hash32" -> (exprs => Hash32Expr(exprs.head)),
+    "hash61" -> (exprs => Hash61Expr(exprs.head)),
+    "dotp" -> (exprs => DotProductExpr(exprs(0), exprs(1))),
+    "sig_matches" -> (exprs => SigMatchesExpr(exprs(0), exprs(1))),
+    "assign_cell" -> (exprs => AssignCellExpr(exprs(0), exprs(1), exprs(2))),
+    "mg_topk" -> (exprs =>
+      MgTopK(exprs.head, intLit("mg_topk", "k")(exprs(1))).toAggregateExpression()))
+
+  /** Registers every graft function the session does not hold yet: the
+    * first call per session installs them, later calls (every operator that
+    * uses one calls this) are no-ops instead of re-registering the lot.
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ewm", build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "psar", buildPsar, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "supertrend", exprs => {
-        require(exprs.size == 3, "supertrend(basic_ub, basic_lb, close)")
-        SuperTrend(exprs(0), exprs(1), exprs(2))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "holt", exprs => {
-        require(exprs.size == 3, "holt(value, alpha, beta)")
-        def d(e: Expression, what: String): Double = e match {
-          case Literal(v: java.lang.Double, _) => v.doubleValue()
-          case Literal(v: Decimal, _) => v.toDouble
-          case Literal(v: java.lang.Integer, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"holt: $what must be a numeric literal, got $other")
-        }
-        HoltLinear(exprs(0), d(exprs(1), "alpha"), d(exprs(2), "beta"))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "holt_winters", exprs => {
-        require(exprs.size == 5, "holt_winters(value, alpha, beta, gamma, period)")
-        def d(e: Expression, what: String): Double = e match {
-          case Literal(v: java.lang.Double, _) => v.doubleValue()
-          case Literal(v: Decimal, _) => v.toDouble
-          case Literal(v: java.lang.Integer, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"holt_winters: $what must be a numeric literal, got $other")
-        }
-        val m = exprs(4) match {
-          case Literal(i: java.lang.Integer, _) => i.intValue()
-          case Literal(i: java.lang.Long, _) => i.intValue()
-          case other => throw new IllegalArgumentException(
-            s"holt_winters: period must be an integer literal, got $other")
-        }
-        HoltWinters(exprs(0), d(exprs(1), "alpha"), d(exprs(2), "beta"),
-          d(exprs(3), "gamma"), m)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "var_ewm", exprs => {
-        require(exprs.size == 2, "var_ewm(value, alpha)")
-        VarEwm(exprs(0), exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash32", exprs => Hash32Expr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash61", exprs => Hash61Expr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotp", exprs => DotProductExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_matches", exprs => SigMatchesExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assign_cell", exprs => AssignCellExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk", exprs => {
-        val k = exprs(1) match {
-          case Literal(i: java.lang.Integer, _) => i.intValue()
-          case Literal(l: java.lang.Long, _) => l.intValue()
-          case other => throw new IllegalArgumentException(
-            s"mg_topk: k must be an integer literal, got $other")
-        }
-        MgTopK(exprs.head, k).toAggregateExpression()
-      }, "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, b) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "scala_udf")
+    }
   }
-}
-
-/** `SparkSession.builder.withExtensions(new GraftExtensions)` installer. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectFunction((
-      FunctionIdentifier("ewm"),
-      new ExpressionInfo(classOf[Ewm].getName, "ewm"),
-      (exprs: Seq[Expression]) => GraftFunctions.build(exprs)))
 }

@@ -83,6 +83,24 @@ object Dedup {
     // long cluster run prefer reliable `checkpoint()` for multi-hour jobs.
     df.localCheckpoint(true)
 
+  /** [[cachedForReuse]] for a multi-consumer frame, unless it already IS
+    * materialized: a driver-local frame, or a scan of a persisted or
+    * checkpointed RDD (a prior checkpoint, possibly with empty-union
+    * branches pruned by the optimizer — a bootstrap `empty.unionByName(cp)`
+    * optimizes to `cp`'s own LogicalRDD, and re-checkpointing it would copy
+    * it once more for zero reuse). A LogicalRDD over an UNPERSISTED RDD
+    * (`createDataFrame(rdd, schema)`) re-runs its lineage per action, so it
+    * is materialized like any other plan.
+    */
+  def materializedOnce(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+            r.rdd.isCheckpointed => df
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+      case _ => cachedForReuse(df)
+    }
+
   /** Iterative-loop lineage cut: eagerly localCheckpoint `df` and hand back
     * the re-rooted frame plus a release thunk that unpersists the backing
     * blocks deterministically (loops shouldn't wait for the GC-driven

@@ -49,21 +49,6 @@ object Incremental {
       case _ => false
     }
 
-  /** Materialize a multi-consumer state frame ONCE — unless it already IS a
-    * materialized scan (a LogicalRDD: a prior checkpoint, possibly with
-    * empty-union branches pruned by the optimizer) or a driver-local frame.
-    * A bootstrap chain like `empty.unionByName(checkpointedDelta)` optimizes
-    * to the delta's own LogicalRDD, and re-checkpointing it copied the whole
-    * store once more per delivery (round 16: one store-sized job per
-    * contaminationDelta/quotaDelta delivery for zero reuse benefit).
-    */
-  private def materializedOnce(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ => Dedup.cachedForReuse(df)
-    }
-
   /** Split `corpus` into (delta, covered) by the processed-shard manifest:
     * rows whose `shardCol` is absent from / present in `manifest`. The
     * manifest side is broadcast (shard-count-sized by contract).
@@ -340,7 +325,7 @@ object Incremental {
     // pass the gate. With a kernel present the prior store is consumed
     // only by the grown-state union, so it is NOT materialized here.
     val prior =
-      if (sharedKernel.isEmpty && materializeState) materializedOnce(priorSigs)
+      if (sharedKernel.isEmpty && materializeState) Dedup.materializedOnce(priorSigs)
       else priorSigs
     val (deltaSigs, pairs) = sharedKernel match {
       case Some((sigs, p)) => (sigs, p)
@@ -446,7 +431,7 @@ object Incremental {
     val (delta, _) = deltaShards(corpus, manifest, shardCol)
     val carried0 = priorCounts.select(col(groupCol), col("n_kept"))
     val carried =
-      if (materializeState) materializedOnce(carried0)
+      if (materializeState) Dedup.materializedOnce(carried0)
       else carried0
     val w = Window.partitionBy(col(groupCol)).orderBy(col(orderCol))
     val kept = delta
@@ -763,7 +748,7 @@ object Incremental {
         Similarity.preparedCorpus(delta, idCol, vecCol), centroids))
     }
     val prior =
-      if (materializeState) materializedOnce(priorState)
+      if (materializeState) Dedup.materializedOnce(priorState)
       else priorState
     val dA = asg.select(col("cell"), col("vec_id").as("d_id"),
       col("v").as("dv"), col("nrm").as("dn"))
@@ -900,7 +885,7 @@ object Incremental {
     // union) — the family's materializeState knob; a store read from
     // bucketed parquet passes false and scans twice instead
     def mat(df: DataFrame) =
-      if (materializeState) materializedOnce(df) else df
+      if (materializeState) Dedup.materializedOnce(df) else df
     val prT = mat(priorTrainGrams.select(col("g")))
     val prE = mat(priorEvalGrams.select(col("doc_id"), col("g")))
     // 1. delta-new train grams (each gram enters the store exactly once)
@@ -985,7 +970,7 @@ object Incremental {
     // prior state stays materialized even under a sharedKernel — it feeds
     // both the label contraction and the store rewrite below
     val prior =
-      if (materializeState) materializedOnce(priorState)
+      if (materializeState) Dedup.materializedOnce(priorState)
       else priorState
     // sharedKernel — see nearDedupDelta: the verified pairs are IDENTICAL
     // between the keep/drop and cluster-label consumers (estVerifiedPairs

@@ -19,6 +19,23 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (5L, "Dog lazy the over jumps fox brown quick the")) // same tokens as 1-ish, reordered
     .toDF("doc_id", "text")
 
+  test("materializedOnce: an unpersisted RDD scan is materialized, a checkpoint passes through") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val evals = spark.sparkContext.longAccumulator("materializedOnce-evals")
+    val rdd = spark.sparkContext.parallelize(1L to 100L, 4)
+      .map { i => evals.add(1); Row(i) }
+    val df = spark.createDataFrame(rdd, new StructType().add("i", LongType))
+    val m = Dedup.materializedOnce(df)
+    // two actions over the result run the source lineage once between them
+    assert(m.count() == 100 && m.agg(sum("i")).head().getLong(0) == 5050L)
+    assert(evals.value == 100L, s"lineage ran ${evals.value / 100.0} times, not once")
+    // an eager local checkpoint already is materialized: returned as is, so
+    // no extra job copies it
+    val cp = spark.range(10).toDF("i").localCheckpoint(true)
+    assert(Dedup.materializedOnce(cp) eq cp)
+  }
+
   test("exact duplicate groups keep min id") {
     val groups = Dedup.exactDuplicateGroups(docs, "doc_id", "text")
     val dup = groups.filter($"dup_count" > 1).collect()

@@ -13,6 +13,23 @@ class EwmStreamingMultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("GraftFunctions.register installs each function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    // a re-registration stores a fresh ExpressionInfo next to the builder (the
+    // builders of non-capturing lambdas are JVM singletons, so they alone
+    // cannot tell a replacement apart)
+    def installed() = Seq("ewm", "psar", "mg_topk").map { n =>
+      val id = FunctionIdentifier(n)
+      (registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get)
+    }
+    GraftFunctions.register(spark)
+    val before = installed()
+    GraftFunctions.register(spark)
+    assert(before.zip(installed()).forall { case ((b0, i0), (b1, i1)) => (b0 eq b1) && (i0 eq i1) },
+      "a second register replaced an installed function")
+  }
+
   test("ewm window function matches the Ema partition scan bit-exactly") {
     GraftFunctions.register(spark)
     val data = (0 until 200).map(i => ("k" + (i % 3), i / 3, math.sin(i) * 50 + 100))

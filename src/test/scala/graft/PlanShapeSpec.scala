@@ -122,9 +122,8 @@ class PlanShapeSpec extends AnyFunSuite {
       graft.operators.Dedup.withStaticPlan(spark) {
         assert(fast.rdd.getNumPartitions > 1, "output must stay partitioned, not one task")
       }
-      // bucketed windowed path shuffles in Catalyst (ShuffledRowRDD); the
-      // sampled-range RDD fallback shuffles at the RDD level (ShuffledRDD) —
-      // either way the per-bucket order must come from a shuffle upstream
+      // the bucketed window shuffles in Catalyst (ShuffledRowRDD): the
+      // per-bucket order must come from a shuffle upstream
       assert(fast.rdd.toDebugString.contains("ShuffledR"),
         "order must come from a shuffle upstream")
       val naive = df.withColumn("off",

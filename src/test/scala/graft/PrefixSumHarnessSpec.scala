@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * coalesce FUSES downstream mapPartitions stages into one task — any
   * operator that indexes per-partition state by `TaskContext.getPartitionId()`
   * sees task id 0 for every parent split and silently corrupts its output.
-  * PrefixSum must therefore key its base-offset array by the SPLIT index
-  * (`mapPartitionsWithIndex`), which coalesce preserves.
+  * PrefixSum therefore keys its seeds by a bucket id carried in the DATA
+  * (joined back, never read from the running task), which coalesce cannot
+  * renumber.
   */
 class PrefixSumHarnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

@@ -438,6 +438,59 @@ class PropertySpec extends AnyFunSuite {
         assert(got == expect)
       }
     }
+    // the same kernel under its two siblings (start offsets, lag), on the
+    // small and the bucketed path, over adversarial unique keys
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.operators.PrefixSum
+    val n = 60
+    def asc[K](g: Gen[K], lt: (K, K) => Boolean): Gen[List[K]] =
+      Gen.listOfN(3 * n, g).map(_.distinct.sortWith(lt).take(n)).suchThat(_.size == n)
+    val longs = asc[Long](Gen.choose(-1000000L, 1000000L), _ < _)
+    // unique keys, generated in ascending Spark order (nulls first, NaN last);
+    // the scaled run's debug mode shows which bucket route each shape takes
+    val shapes: Seq[(String, DataType, Gen[List[Any]], String)] = Seq(
+      ("clustered", LongType,
+        asc[Long](Gen.choose(0L, 999L), _ < _).map(ks => (ks.init :+ (1L << 40)): List[Any]),
+        "equal-width-window-refined"),
+      ("long extremes", LongType,
+        longs.map(ks => (Long.MinValue +: ks.slice(1, n - 1) :+ Long.MaxValue): List[Any]),
+        "range-window"),
+      ("null key", LongType, longs.map(ks => (null +: ks.tail): List[Any]), "range-window"),
+      ("double", DoubleType,
+        asc[Double](Gen.choose(-1e6, 1e6), _ < _).map(ks => (ks.tail :+ Double.NaN): List[Any]),
+        "range-window"),
+      ("string", StringType,
+        asc[String](Gen.alphaNumStr.map(_.take(6)), _ < _).map(ks => ks: List[Any]),
+        "range-window"))
+    val vals = Gen.listOfN(n, Gen.choose(-50L, 50L))
+    for ((shape, keyType, keys, scaledMode) <- shapes; smallRows <- Seq("", "0")) {
+      val prev = spark.conf.get("spark.graft.prefixsum.smallRows", "")
+      if (smallRows.nonEmpty) spark.conf.set("spark.graft.prefixsum.smallRows", smallRows)
+      try forAll(Gen.zip(keys, vals), n = 2) { case (ks, vs) =>
+        val schema = new StructType().add("i", IntegerType).add("k", keyType)
+          .add("v", LongType, nullable = false)
+        val rows = ks.zip(vs).zipWithIndex.map { case ((k, v), i) => Row(i, k, v) }
+        // shuffled input: the kernel, not the layout, must produce the order
+        val df = spark.createDataFrame(
+          java.util.Arrays.asList(new scala.util.Random(7).shuffle(rows): _*), schema).repartition(3)
+        def run(f: org.apache.spark.sql.DataFrame, c: String) =
+          f.orderBy("i").select(c).collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+        val what = s"$shape keys, smallRows=${if (smallRows.isEmpty) "default" else smallRows}"
+        PrefixSum.drainDebug()
+        assert(run(PrefixSum.withStartOffset(df, "k", "v", "o"), "o") ==
+          vs.scanLeft(0L)(_ + _).init.map(Some(_)), s"start offsets, $what")
+        assert(run(PrefixSum.withCusum(df, "k", "v", "s"), "s") ==
+          vs.scanLeft(0L)((s, d) => math.max(0L, s + d)).tail.map(Some(_)), s"CUSUM, $what")
+        assert(run(PrefixSum.withLag(df, "k", "v", "l"), "l") == None +: vs.init.map(Some(_)),
+          s"lag, $what")
+        val modes = PrefixSum.drainDebug().map(_.mode).distinct
+        assert(modes == Seq(if (smallRows.isEmpty) "small-window" else scaledMode), what)
+      } finally {
+        if (prev.isEmpty) spark.conf.unset("spark.graft.prefixsum.smallRows")
+        else spark.conf.set("spark.graft.prefixsum.smallRows", prev)
+      }
+    }
   }
 
   test("sim8 MMR: independent sequential greedy re-derivation agrees") {
