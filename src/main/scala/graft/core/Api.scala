@@ -42,6 +42,16 @@ trait StatefulTransformer extends Transformer {
   def commit(): Unit
 }
 
+/** A sink. `load` consumes its whole frame, in actions that end only after
+  * their last row: the engine reads the delivery's cursor from an
+  * `Observation` on the extracted frame, which the first such action to
+  * finish completes. An action over part of the frame (a `limit`, an
+  * emptiness probe) or one that returns before its rows are read
+  * (`toLocalIterator`, whose SQL execution ends at once) would hand the
+  * engine the max of the rows it had seen. Every registered loader keeps
+  * this; a loader that runs no action leaves the engine to compute the
+  * cursor in a job of its own.
+  */
 trait Loader {
   def connect(): Unit = ()
   def load(df: DataFrame): Unit

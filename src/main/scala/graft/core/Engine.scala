@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import java.util.concurrent.TimeoutException
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
 import org.slf4j.LoggerFactory
 import graft.core.Config._
 
@@ -17,8 +20,16 @@ import graft.core.Config._
   *     context-managed (disconnect even on failure), retried
   *  5. new cursor = max(cursor_field) over the RAW extracted frame, before
   *     transforms (warn+skip if the field is missing; no value — an empty
-  *     delivery or an all-null field — leaves the cursor where it was),
-  *     computed in one Spark job ([[Engine.maxOf]])
+  *     delivery or an all-null field — leaves the cursor where it was).
+  *     On a chain without stateful stages the max is an [[Observation]] on
+  *     the raw frame, so the load's own action delivers it and the cursor
+  *     costs no Spark job. It is taken only when that action alone ran the
+  *     observed plan: the load passed on its first attempt and no transform
+  *     ran the plan before it, both known once the listener bus has
+  *     drained. Otherwise (those cases, a drain that timed out, a loader
+  *     that ran no action over the frame, or a stateful chain, whose
+  *     checkpoint hides the observation from the load) the cursor is
+  *     computed in one Spark job ([[Engine.maxOf]]) after the load.
   *  6. transform chain, strictly sequential, no retry
   *  7. load, context-managed, retried
   *  8. cursor persisted ONLY after a successful load (load failure ⇒ state
@@ -28,8 +39,13 @@ import graft.core.Config._
   * executed by the load action; per-stage row-count logging (which forces a
   * count per stage) is gated behind `settings.log_row_counts`, preserving the
   * single-plan fast path by default.
+  *
+  * `drainListenerBus` waits until the listener bus is empty and throws a
+  * `TimeoutException` when it gives up; it is a parameter so specs can make
+  * it give up.
   */
-class Engine(spark: SparkSession) {
+class Engine(spark: SparkSession,
+    drainListenerBus: SparkContext => Unit = ListenerBusDrain.waitUntilEmpty) {
   private val log = LoggerFactory.getLogger(getClass)
 
   def runFile(configPath: String, fullRefresh: Boolean = false): DataFrame =
@@ -65,24 +81,28 @@ class Engine(spark: SparkSession) {
     }
     if (cfg.settings.logRowCounts) log.info(s"extracted ${raw.count()} rows")
 
-    // 5. new cursor from the RAW frame, before transforms
-    val newCursor: Option[Any] = cfg.incremental.flatMap { inc =>
-      if (!raw.columns.contains(inc.cursorField)) {
-        log.warn(s"incremental: cursor field '${inc.cursorField}' missing from extracted data; cursor not advanced")
-        None
-      } else Engine.maxOf(raw, inc.cursorField)
+    // 5. the new cursor: max(cursor_field) over the RAW frame, before
+    // transforms. Observed on the frame and read after the load, unless a
+    // stateful stage will pin the chain to a checkpoint the load reads
+    // instead of the observed plan.
+    val cursorField: Option[String] = cfg.incremental.map(_.cursorField).filter { f =>
+      raw.columns.contains(f) || {
+        log.warn(s"incremental: cursor field '$f' missing from extracted data; cursor not advanced")
+        false
+      }
     }
+    val transformers = cfg.transform.map { step =>
+      step.stepType -> Registries.transformers.resolve(step.stepType)(spark, step.resolved)
+    }
+    val stateful = transformers.collect { case (_, st: StatefulTransformer) => st }
+    val cursorObs: Option[Observation] = cursorField.filter(_ => stateful.isEmpty).map(_ => Observation())
 
     // 6. transform chain
-    var df = raw
-    val stateful = scala.collection.mutable.Buffer.empty[StatefulTransformer]
-    cfg.transform.foreach { step =>
-      val mk = Registries.transformers.resolve(step.stepType)
-      val t = mk(spark, step.resolved)
+    var df = cursorField.zip(cursorObs).fold(raw) { case (f, obs) => raw.observe(obs, max(col(f))) }
+    transformers.foreach { case (stepType, t) =>
       t.validate(df)
       df = t.transform(df)
-      t match { case st: StatefulTransformer => stateful += st; case _ => () }
-      if (cfg.settings.logRowCounts) log.info(s"after ${step.stepType}: ${df.count()} rows")
+      if (cfg.settings.logRowCounts) log.info(s"after $stepType: ${df.count()} rows")
     }
 
     // 7. load. With stateful stages in the chain, the frame's lazy plan
@@ -93,7 +113,13 @@ class Engine(spark: SparkSession) {
     // instead of throwing FAILED_READ_FILE on the swapped-out files.
     val mkLoader = Registries.loaders.resolve(cfg.load.stepType)
     val out = if (stateful.nonEmpty) df.localCheckpoint(false) else df
+    // an action in the chain that already ran the observed plan (a
+    // row-count log, a transform's own pass) may have seen only part of it;
+    // a drain that timed out leaves that unknown, which counts as seen
+    val observedBeforeLoad = cursorObs.exists(obs => !settled(obs) || obs.future.isCompleted)
+    var loadAttempts = 0
     withRetry(cfg.settings.retry, s"load(${cfg.load.stepType})") {
+      loadAttempts += 1
       val ld = mkLoader(spark, cfg.load.resolved)
       ld.connect()
       try ld.load(out) finally ld.disconnect()
@@ -108,6 +134,16 @@ class Engine(spark: SparkSession) {
     // the loader actually read. (Partitions the load already materialized
     // are served from their blocks; only the remainder computes.)
     if (stateful.nonEmpty) { out.count(); () }
+
+    // 5, read back: the load's observation when it alone ran the observed
+    // plan (a failed attempt may have completed it from part of the
+    // frame), else one job over the raw frame
+    val newCursor: Option[Any] = cursorField.flatMap { f =>
+      val observed = cursorObs
+        .filter(obs => loadAttempts == 1 && !observedBeforeLoad && settled(obs))
+        .flatMap(Engine.observedMax)
+      observed.getOrElse(Engine.maxOf(raw, f))
+    }
 
     // 8. cursor persisted only after successful load
     (cfg.incremental, state, newCursor) match {
@@ -143,6 +179,16 @@ class Engine(spark: SparkSession) {
     out
   }
 
+  /** Whether `obs` has its final state: complete, or not completed by any
+    * action so far. An observation completes on the listener bus after its
+    * action returns, so an incomplete one is settled only once the bus has
+    * drained; false when the drain timed out.
+    */
+  private def settled(obs: Observation): Boolean =
+    obs.future.isCompleted ||
+      (try { drainListenerBus(spark.sparkContext); true }
+       catch { case _: TimeoutException => false })
+
   /** Exponential backoff: attempt 1..max, sleep backoff·2^(attempt−1), rethrow
     * the last failure (`engine.py:201-218`).
     */
@@ -163,6 +209,13 @@ class Engine(spark: SparkSession) {
 }
 
 object Engine {
+  /** What `obs` (a single `max`) delivered: `Some(value)` once an action that
+    * ran the observed plan has finished — `Some(None)` when no row held a
+    * value — and None before.
+    */
+  private def observedMax(obs: Observation): Option[Option[Any]] =
+    obs.future.value.flatMap(_.toOption).map(r => Option(r.get(0)))
+
   /** `max(field)` over `df` with `max`'s semantics — nulls ignored, NaN
     * greatest, None when no row holds a value — in ONE job: a descending,
     * nulls-last top-1 plans as `TakeOrderedAndProject` (a top-1 per

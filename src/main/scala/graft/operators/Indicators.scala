@@ -23,13 +23,22 @@ import org.apache.spark.sql.types._
   * correct, and matching the reference's single-series scope.
   *
   * Driver cost: each Dataset step analyzes its plan again, and on a small
-  * delivery that analysis outweighs the task compute. So the four components
-  * `technicalIndicators` composes build their columns with one
-  * `Dataset.withColumns` each (SMA, Bollinger) or one per dependent step
-  * (RSI: delta, EMAs, ratio, then the scratch-column drop; MACD: line, signal,
-  * histogram), and the pre-processing is one projection, where `withColumn`
-  * chains took about 22 steps. The expressions are the ones the
-  * chains used, so the values are bit-identical.
+  * delivery that analysis outweighs the task compute. Each formula is one
+  * column function (`trailingSums`, `smaCol`, `bollingerCols`, `rsiDeltaCol`,
+  * `rsiAvgCols`, `rsiCol`, `macdLineCol`, `macdSignalCol`), shared by the
+  * four components and by `technicalIndicators`. A component places its
+  * columns in one `Dataset.withColumns` per dependent step.
+  * `technicalIndicators` does not compose the components. It builds in two
+  * window levels and one projection:
+  *  1. one `withColumns` of every window over the raw series, which plans
+  *     as one WindowExec: the SMA's and the bands' trailing counts and sums
+  *     (each computed once), the RSI's lag and the MACD's fast and slow EMAs;
+  *  2. one `withColumns` of the three EMAs over level-1 columns: the RSI's
+  *     average gain and loss and the MACD signal;
+  *  3. one `select` of the formulas over those columns, in the contract's
+  *     column order.
+  * The expressions are the components', so the values are bit-identical to
+  * their composition.
   */
 object Indicators {
 
@@ -61,11 +70,26 @@ object Indicators {
   def withSma(
       df: DataFrame, closeCol: String, outCol: String, period: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    val w = baseWindow(partitionCols, orderCol).rowsBetween(-(period - 1), 0)
-    val cnt = count(col(closeCol)).over(w)
-    val s = sum(col(closeCol)).over(w)
-    df.withColumns(Map(outCol -> when(cnt === period, s / period.toDouble)))
+    val (cnt, s, _) = trailingSums(col(closeCol), period, baseWindow(partitionCols, orderCol))
+    df.withColumns(Map(outCol -> smaCol(cnt, s, period)))
   }
+
+  /** The count and sum of `c` over the trailing `period` rows of the base
+    * window `w`, and the sum of its squares: the windows of the SMA and the
+    * Bollinger bands. Plain double window sums of x and x·x. For
+    * integer-valued series (the oracle-checked path — see
+    * [[graft.queries.Series]]) these are exact and order-independent; for
+    * general series they carry the usual float-sum order caveat, same as
+    * pandas' rolling std.
+    */
+  private def trailingSums(c: Column, period: Int, w: WindowSpec): (Column, Column, Column) = {
+    val trailing = w.rowsBetween(-(period - 1), 0)
+    (count(c).over(trailing), sum(c).over(trailing), sum(c * c).over(trailing))
+  }
+
+  /** The SMA from the trailing count and sum; null until the window is full. */
+  private def smaCol(cnt: Column, s: Column, period: Int): Column =
+    when(cnt === period, s / period.toDouble)
 
   /** W3 — Bollinger bands: SMA ± k·(sample stddev) over the trailing window.
     * Variance is computed from exact decimal window sums of x and x², then
@@ -77,22 +101,20 @@ object Indicators {
       df: DataFrame, closeCol: String, upperCol: String, lowerCol: String,
       period: Int, k: Double, orderCol: String,
       partitionCols: Seq[String] = Nil): DataFrame = {
-    val w = baseWindow(partitionCols, orderCol).rowsBetween(-(period - 1), 0)
-    val c = col(closeCol)
-    val cnt = count(c).over(w)
-    // Plain double window sums of x and x·x. For integer-valued series (the
-    // oracle-checked path — see [[graft.queries.Series]]) these are exact and
-    // order-independent; for general series they carry the usual float-sum
-    // order caveat, same as pandas' rolling std.
-    val s1 = sum(c).over(w)
-    val s2 = sum(c * c).over(w)
+    val (cnt, s1, s2) = trailingSums(col(closeCol), period, baseWindow(partitionCols, orderCol))
+    val (upper, lower) = bollingerCols(cnt, s1, s2, period, k)
+    df.withColumns(Map(upperCol -> upper, lowerCol -> lower))
+  }
+
+  /** The upper and lower bands from the trailing count, sum and sum of
+    * squares; null until the window is full.
+    */
+  private def bollingerCols(cnt: Column, s1: Column, s2: Column, period: Int, k: Double): (Column, Column) = {
     val n = period.toDouble
     val mean = s1 / n
     val variance = greatest((s2 - s1 * s1 / n) / (n - 1.0), lit(0.0))
     val std = sqrt(variance)
-    df.withColumns(Map(
-      upperCol -> when(cnt === period, mean + lit(k) * std),
-      lowerCol -> when(cnt === period, mean - lit(k) * std)))
+    (when(cnt === period, mean + lit(k) * std), when(cnt === period, mean - lit(k) * std))
   }
 
   /** W2 — Wilder RSI: EMA(α=1/period) of gains and losses from one-step price
@@ -116,20 +138,29 @@ object Indicators {
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
-    val delta = col("__delta")
+    val (avgGain, avgLoss) = rsiAvgCols(col("__delta"), period, w)
+    df.withColumns(Map("__delta" -> rsiDeltaCol(col(closeCol), w)))
+      .withColumns(Map("__avg_gain" -> avgGain, "__avg_loss" -> avgLoss))
+      .withColumns(Map(outCol -> rsiCol(col("__avg_gain"), col("__avg_loss"))))
+      .drop("__delta", "__avg_gain", "__avg_loss")
+  }
+
+  /** The one-step price delta the RSI smooths. */
+  private def rsiDeltaCol(c: Column, w: WindowSpec): Column = c - lag(c, 1).over(w)
+
+  /** The RSI's average gain and loss: Wilder EMAs of the positive and
+    * negative parts of `delta` (null where the delta is).
+    */
+  private def rsiAvgCols(delta: Column, period: Int, w: WindowSpec): (Column, Column) = {
     val gain = when(delta > 0, delta).otherwise(when(delta.isNotNull, lit(0.0)))
     val loss = when(delta < 0, -delta).otherwise(when(delta.isNotNull, lit(0.0)))
     val alpha = 1.0 / period.toDouble
-    val withDelta = df.withColumns(Map("__delta" -> (col(closeCol) - lag(col(closeCol), 1).over(w))))
-    val smoothed = withDelta.withColumns(Map(
-      "__avg_gain" -> ewm(gain, alpha, period).over(w),
-      "__avg_loss" -> ewm(loss, alpha, period).over(w)))
-    val (avgGain, avgLoss) = (col("__avg_gain"), col("__avg_loss"))
-    smoothed.withColumns(Map(outCol ->
-      when(avgLoss === 0.0, when(avgGain > 0.0, lit(100.0)))
-        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))))
-      .drop("__delta", "__avg_gain", "__avg_loss")
+    (ewm(gain, alpha, period).over(w), ewm(loss, alpha, period).over(w))
   }
+
+  private def rsiCol(avgGain: Column, avgLoss: Column): Column =
+    when(avgLoss === 0.0, when(avgGain > 0.0, lit(100.0)))
+      .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))
 
   /** W4 — MACD: EMA(fast) − EMA(slow) with α = 2/(span+1) seeded at x₀;
     * signal = EMA(signalSpan) of the MACD line; histogram = macd − signal.
@@ -149,13 +180,20 @@ object Indicators {
       fast: Int, slow: Int, signalSpan: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    def a(span: Int): Double = 2.0 / (span.toDouble + 1.0)
     val w = baseWindow(partitionCols, orderCol)
-    val close = quoted(closeCol)
-    val line = df.withColumns(Map(macdCol -> (ewm(close, a(fast), 0).over(w) - ewm(close, a(slow), 0).over(w))))
-    val signal = line.withColumns(Map(signalCol -> ewm(quoted(macdCol), a(signalSpan), 0).over(w)))
-    signal.withColumns(Map(histCol -> (quoted(macdCol) - quoted(signalCol))))
+    df.withColumns(Map(macdCol -> macdLineCol(quoted(closeCol), fast, slow, w)))
+      .withColumns(Map(signalCol -> macdSignalCol(quoted(macdCol), signalSpan, w)))
+      .withColumns(Map(histCol -> (quoted(macdCol) - quoted(signalCol))))
   }
+
+  /** EMA span → α = 2/(span+1). */
+  private def spanAlpha(span: Int): Double = 2.0 / (span.toDouble + 1.0)
+
+  private def macdLineCol(c: Column, fast: Int, slow: Int, w: WindowSpec): Column =
+    ewm(c, spanAlpha(fast), 0).over(w) - ewm(c, spanAlpha(slow), 0).over(w)
+
+  private def macdSignalCol(line: Column, signalSpan: Int, w: WindowSpec): Column =
+    ewm(line, spanAlpha(signalSpan), 0).over(w)
 
   /** Stochastic oscillator: %K = 100·(close − min(low, kPeriod)) /
     * (max(high, kPeriod) − min(low, kPeriod)), %D = the `dPeriod`-row simple
@@ -827,14 +865,39 @@ object Indicators {
       prep(c.toLowerCase, quoted(c)).as(c.toLowerCase)
     }: _*)
 
-    val withInd = {
-      val s = withSma(prepped, "close", "sma_50", cfg.smaPeriod, "date", partitionCols)
-      val r = withRsi(s, "close", "rsi_14", cfg.rsiPeriod, "date", partitionCols)
-      val b = withBollinger(r, "close", "bb_upper", "bb_lower", cfg.bbPeriod, cfg.bbStd, "date", partitionCols)
-      withMacd(b, "close", "macd", "macd_signal", "macd_histogram",
-        cfg.macdFast, cfg.macdSlow, cfg.macdSignal, "date", partitionCols)
-    }
+    // Two window levels, then one projection (see the object doc): every
+    // window over the raw series, each computed once; the EMAs over level-1
+    // columns; then the formulas over both, in the contract's order.
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val w = baseWindow(partitionCols, "date")
+    val close = col("close")
+    val (smaN, smaS, _) = trailingSums(close, cfg.smaPeriod, w)
+    val (bbN, bbS1, bbS2) = trailingSums(close, cfg.bbPeriod, w)
+    val level1 = prepped.withColumns(Map(
+      "__sma_n" -> smaN, "__sma_s" -> smaS,
+      "__bb_n" -> bbN, "__bb_s1" -> bbS1, "__bb_s2" -> bbS2,
+      "macd" -> macdLineCol(close, cfg.macdFast, cfg.macdSlow, w),
+      "__delta" -> rsiDeltaCol(close, w)))
+    val (avgGain, avgLoss) = rsiAvgCols(col("__delta"), cfg.rsiPeriod, w)
+    val level2 = level1.withColumns(Map(
+      "__avg_gain" -> avgGain,
+      "__avg_loss" -> avgLoss,
+      "macd_signal" -> macdSignalCol(col("macd"), cfg.macdSignal, w)))
+    val (bbUpper, bbLower) =
+      bollingerCols(col("__bb_n"), col("__bb_s1"), col("__bb_s2"), cfg.bbPeriod, cfg.bbStd)
+    val formulas = Map(
+      "sma_50" -> smaCol(col("__sma_n"), col("__sma_s"), cfg.smaPeriod),
+      "rsi_14" -> rsiCol(col("__avg_gain"), col("__avg_loss")),
+      "bb_upper" -> bbUpper,
+      "bb_lower" -> bbLower,
+      "macd_histogram" -> (col("macd") - col("macd_signal")))
     val indicatorCols = Seq("sma_50", "rsi_14", "bb_upper", "bb_lower", "macd", "macd_signal", "macd_histogram")
+    // an indicator column the input already has keeps its place, as the
+    // components' `withColumns` keep it
+    val withInd = level2.select(
+      (prepped.columns.toSeq ++ indicatorCols.filterNot(prepped.columns.contains)).map { c =>
+        formulas.get(c).map(_.as(c)).getOrElse(col(c))
+      }: _*)
     withInd.na.drop("any", indicatorCols).orderBy((partitionCols :+ "date").map(col): _*)
   }
 }

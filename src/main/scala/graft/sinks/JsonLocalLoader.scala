@@ -3,7 +3,9 @@ package graft.sinks
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.core.JsonFactory
 import com.fasterxml.jackson.core.util.DefaultPrettyPrinter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 import graft.core.Loader
 import graft.core.PluginConfig._
 
@@ -14,7 +16,8 @@ import graft.core.PluginConfig._
   *
   * Deliberately NOT `df.write.json` (that emits JSONL part-files): the
   * contract is a single ordered array file, so rows stream to the driver —
-  * `toLocalIterator()` + an incremental `JsonGenerator`, holding ONE
+  * one partition at a time, as `toLocalIterator()` fetches them, into an
+  * incremental `JsonGenerator`, holding ONE
   * partition's rows and O(1) JSON state rather than the whole result plus a
   * materialized document tree, so the sink's driver footprint is bounded by
   * the largest partition, not the table. Correct for this sink's
@@ -53,7 +56,7 @@ class JsonLocalLoader(conf: Conf) extends Loader {
       // output (JsonLocalLoaderSpec pins it), streaming production
       if (indent > 0) gen.setPrettyPrinter(new DefaultPrettyPrinter())
       gen.writeStartArray()
-      df.toLocalIterator().forEachRemaining { row =>
+      JsonLocalLoader.foreachRow(df) { row =>
         gen.writeStartObject()
         var i = 0
         while (i < cols.length) {
@@ -86,6 +89,23 @@ class JsonLocalLoader(conf: Conf) extends Loader {
               java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         }
       else Files.deleteIfExists(tmp)
+    }
+  }
+}
+
+object JsonLocalLoader {
+  /** `df`'s rows in order to `f`, fetched one partition at a time as
+    * `toLocalIterator()` fetches them, but inside one SQL execution that
+    * ends after the last row. `toLocalIterator()`'s own execution ends
+    * before the first row is fetched, so metrics observed on the frame
+    * (the engine's cursor) would be read before any row had passed.
+    */
+  private def foreachRow(df: DataFrame)(f: Row => Unit): Unit = {
+    val qe = df.queryExecution
+    val fromRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeToIterator().foreach(r => f(fromRow(r)))
     }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.core._
+import graft.TestSpark.jobsDuring
 
 /** End-to-end pipeline runs + incremental cursor lifecycle, mirroring the
   * reference's `tests/test_pipeline_e2e.py` and `tests/test_cli.py:186-472`
@@ -188,10 +189,7 @@ class EnginePipelineSpec extends AnyFunSuite {
     * the cursor's).
     */
   private def cursorRun(field: String): (Option[Any], Int) = {
-    Registries.bootstrap()
-    try Registries.extractors.register("cursor_probe")((_, _) => new Extractor {
-      def extract(): DataFrame = probeFrame
-    }) catch { case _: IllegalStateException => () }
+    registerProbe()
     try Registries.loaders.register("cursor_noop")((_, _) => new Loader {
       def load(df: DataFrame): Unit = ()
     }) catch { case _: IllegalStateException => () }
@@ -202,20 +200,42 @@ class EnginePipelineSpec extends AnyFunSuite {
       extract = Config.StepConfig("cursor_probe"), load = Config.StepConfig("cursor_noop"),
       incremental = Some(Config.IncrementalConfig(cursorField = field, cursorParam = "since",
         statePath = statePath)))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      new Engine(spark).run(cfg)
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    (new StateManager(statePath).get("cursor_pipe"), jobs.get())
+    val jobs = jobsDuring { new Engine(spark).run(cfg); () }
+    (new StateManager(statePath).get("cursor_pipe"), jobs)
   }
+
+  /** Registers the `cursor_probe` extractor, which hands the engine `probeFrame`. */
+  private def registerProbe(): Unit = {
+    Registries.bootstrap()
+    try Registries.extractors.register("cursor_probe")((_, _) => new Extractor {
+      def extract(): DataFrame = probeFrame
+    }) catch { case _: IllegalStateException => () }
+  }
+
+  /** Ids 5, 3 | 42, 7 | 11, 2 in three partitions: the max is not in the
+    * first one, so an action that read only the first row sees 5.
+    */
+  private def spreadIds(): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val rows = Seq(5L, 3L, 42L, 7L, 11L, 2L).map(i => Row(i, s"v$i"))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  /** A `cursor_probe` pipeline incremental on `id` (or not), with the given
+    * transforms and load, its state under `dir`.
+    */
+  private def probePipeline(dir: Path, load: Config.StepConfig, incremental: Boolean = true,
+      transform: Seq[Config.StepConfig] = Nil, maxAttempts: Int = 1): Config.PipelineConfig =
+    Config.PipelineConfig(name = "observed_pipe", extract = Config.StepConfig("cursor_probe"),
+      transform = transform, load = load,
+      incremental = if (incremental) Some(Config.IncrementalConfig(cursorField = "id",
+        cursorParam = "since", statePath = dir.resolve("state.json").toString)) else None,
+      settings = Config.Settings(retry = Config.RetrySettings(maxAttempts, 0.0)))
+
+  private def storedCursor(dir: Path): Option[Any] =
+    new StateManager(dir.resolve("state.json").toString).get("observed_pipe")
 
   test("cursor equals max() over nulls for long, string, timestamp and double fields, in one job") {
     import org.apache.spark.sql.Row
@@ -249,6 +269,138 @@ class EnginePipelineSpec extends AnyFunSuite {
     val (empty, emptyJobs) = cursorRun("n")
     assert(empty.contains(41))
     assert(emptyJobs <= 1, s"empty-delivery cursor took $emptyJobs jobs")
+  }
+
+  test("the load's own action delivers the cursor: the max, at no job of its own, through three loaders") {
+    registerProbe()
+    probeFrame = spreadIds()
+    val dir = tmp()
+    // each loader twice, to a fresh target each time: without the cursor,
+    // then with it — the cursor may add no job to the run
+    def load(loader: String, run: Int) = Config.StepConfig(loader, inlineConfig = loader match {
+      case "sql_database" => Map("connection_string" -> s"jdbc:derby:memory:observed_cursor_$run;create=true",
+        "table" -> "t", "if_exists" -> "upsert", "primary_keys" -> Seq("id"))
+      case "parquet_local" => Map("path" -> dir.resolve(s"out_$run.parquet").toString)
+      case "json_local" => Map("path" -> dir.resolve(s"out_$run.json").toString)
+    })
+    for ((loader, i) <- Seq("sql_database", "parquet_local", "json_local").zipWithIndex) {
+      val plain = jobsDuring { new Engine(spark).run(probePipeline(dir, load(loader, 2 * i), incremental = false)); () }
+      val withCursor = jobsDuring { new Engine(spark).run(probePipeline(dir, load(loader, 2 * i + 1))); () }
+      assert(storedCursor(dir).map(_.toString).contains("42"), s"$loader: cursor ${storedCursor(dir)}")
+      assert(withCursor == plain, s"$loader: $withCursor jobs with the cursor, $plain without")
+      Files.delete(dir.resolve("state.json"))
+    }
+  }
+
+  test("an action over part of the frame ahead of the load's does not stand in for the cursor") {
+    registerProbe()
+    probeFrame = spreadIds()
+    // a transform that reads the first row, and a loader whose failed first
+    // attempt read the first row: either completes the observation with 5
+    registerPeek()
+    try Registries.loaders.register("fails_once") { (_, _) =>
+      new Loader {
+        def load(df: DataFrame): Unit = {
+          failsOnceAttempts += 1
+          if (failsOnceAttempts == 1) { df.limit(1).collect(); throw new RuntimeException("first attempt") }
+          df.collect(); ()
+        }
+      }
+    } catch { case _: IllegalStateException => () }
+    val dir = tmp()
+    val parquetOut = Config.StepConfig("parquet_local",
+      inlineConfig = Map("path" -> dir.resolve("out.parquet").toString, "if_exists" -> "replace"))
+    new Engine(spark).run(probePipeline(dir, parquetOut, transform = Seq(Config.StepConfig("first_row_peek"))))
+    assert(storedCursor(dir).map(_.toString).contains("42"), s"after a peeking transform: ${storedCursor(dir)}")
+    Files.delete(dir.resolve("state.json"))
+    failsOnceAttempts = 0
+    new Engine(spark).run(probePipeline(dir, Config.StepConfig("fails_once"), maxAttempts = 2))
+    assert(failsOnceAttempts == 2)
+    assert(storedCursor(dir).map(_.toString).contains("42"), s"after a retried load: ${storedCursor(dir)}")
+  }
+
+  @volatile private var failsOnceAttempts = 0
+
+  /** Registers `first_row_peek`, a transform that collects its frame's first row. */
+  private def registerPeek(): Unit =
+    try Registries.transformers.register("first_row_peek")((_, _) => new Transformer {
+      def transform(df: DataFrame): DataFrame = { df.limit(1).collect(); df }
+    }) catch { case _: IllegalStateException => () }
+
+  test("a listener-bus drain that times out before the load leaves the cursor to its own job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    registerProbe()
+    registerPeek()
+    probeFrame = spreadIds()
+    // hold the listener bus from the peek's job on, so the peek's completion
+    // of the observation (with 5) is still queued when the engine checks
+    // before the load; the first drain, that check's, gives up, and any
+    // later one lets the bus go
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val hold = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { held.await(); () }
+    }
+    var drains = 0
+    val drain: org.apache.spark.SparkContext => Unit = { sc =>
+      drains += 1
+      if (drains == 1) throw new java.util.concurrent.TimeoutException("bus held")
+      held.countDown()
+      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(sc)
+    }
+    val dir = tmp()
+    val parquetOut = Config.StepConfig("parquet_local",
+      inlineConfig = Map("path" -> dir.resolve("out.parquet").toString, "if_exists" -> "replace"))
+    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(hold)
+    try new Engine(spark, drain).run(
+      probePipeline(dir, parquetOut, transform = Seq(Config.StepConfig("first_row_peek"))))
+    finally {
+      held.countDown()
+      spark.sparkContext.removeSparkListener(hold)
+    }
+    assert(drains >= 1)
+    assert(storedCursor(dir).map(_.toString).contains("42"), s"after a timed-out drain: ${storedCursor(dir)}")
+  }
+
+  test("a stateful chain stores the cursor of the raw delivery (the fallback job)") {
+    val dir = tmp()
+    def jsonl(name: String, rows: Seq[String]): String = {
+      val p = dir.resolve(name); Files.writeString(p, rows.mkString("\n")); p.toString
+    }
+    val d1 = jsonl("d1.jsonl", Seq(
+      """{"doc_id": 1, "source": "s0", "text": "alpha beta gamma"}""",
+      """{"doc_id": 3, "source": "s0", "text": "delta epsilon zeta"}"""))
+    // the max id of delivery 2 is a duplicate the dedup drops: the cursor
+    // still comes from the raw delivery
+    val d2 = jsonl("d2.jsonl", Seq(
+      """{"doc_id": 12, "source": "s1", "text": "eta theta iota"}""",
+      """{"doc_id": 40, "source": "s1", "text": "alpha beta gamma"}"""))
+    def cfg(in: String, out: String) = Config.parse(
+      s"""pipeline:
+         |  name: stateful_cursor
+         |  extract:
+         |    type: jsonl_file
+         |    inline_config: {path: "$in"}
+         |  transform:
+         |    - type: incremental_dedup
+         |      inline_config: {id_column: doc_id, text_column: text,
+         |                      shard_column: source, state_dir: "${dir.resolve("incstate")}"}
+         |  load:
+         |    type: jsonl_local
+         |    inline_config: {path: "$out", if_exists: replace}
+         |  incremental:
+         |    cursor_field: doc_id
+         |    cursor_param: since
+         |    state_path: ${dir.resolve("state.json")}
+         |""".stripMargin)
+    val st = new StateManager(dir.resolve("state.json").toString)
+    new Engine(spark).run(cfg(d1, dir.resolve("out1").toString))
+    assert(st.get("stateful_cursor").map(_.toString).contains("3"))
+    val out2 = dir.resolve("out2").toString
+    new Engine(spark).run(cfg(d2, out2))
+    assert(new graft.sources.JsonlFileExtractor(spark, Map("path" -> out2)).extract()
+      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(12L))
+    assert(st.get("stateful_cursor").map(_.toString).contains("40"))
   }
 
   test("incremental_dedup plugin: fingerprint/manifest state travels across engine runs; save-after-load") {

@@ -8,7 +8,8 @@ import graft.queries.{DedupQueries, SimilarityQueries, WindowQueries}
   * future change that silently reintroduces a driver funnel or a single-task
   * coalesce fails loudly.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -23,6 +24,28 @@ class PlanShapeSpec extends AnyFunSuite {
     val windows = p.linesIterator.count(_.contains("- Window ["))
     assert(windows == 2, s"expected 2 Window nodes, got $windows")
     assert(p.contains("ewm("))
+  }
+
+  test("technicalIndicators: two WindowExecs in the final AQE plan, over one exchange") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val sess = spark
+    import sess.implicits._
+    val bars = for (s <- 0 until 3; d <- 0 until 80) yield {
+      val c = 100.0 + s * 10 + (d * 7 % 11) - (d % 5)
+      (s"S$s", java.time.LocalDate.of(2020, 1, 1).plusDays(d.toLong).toString, c, c + 2, c - 2, c + 1, 1000.0 + d)
+    }
+    val df = graft.operators.Indicators.technicalIndicators(
+      bars.toDF("symbol", "date", "open", "high", "low", "close", "volume"), partitionCols = Seq("symbol"))
+    assert(df.collect().length == 3 * (80 - 49))
+    // level 1: every window over the raw series; level 2: the three EMAs
+    // over level-1 columns — both above the one symbol exchange
+    val windows = collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
+    assert(windows.size == 2, df.queryExecution.executedPlan.toString)
+    windows.foreach { w =>
+      val exchanges = collect(w) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"exchanges below a WindowExec: ${exchanges.size}\n$w")
+    }
   }
 
   test("dd5 embedding near-dup: block-pair compare is a grouped kernel after a key shuffle") {

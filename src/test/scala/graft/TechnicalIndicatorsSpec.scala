@@ -227,4 +227,47 @@ class TechnicalIndicatorsSpec extends AnyFunSuite {
     }.toDF("date", "open", "high", "low", "close", "volume")
     assert(Indicators.technicalIndicators(flat).count() == 0)
   }
+
+  test("technicalIndicators equals the composition of the four components, Row for Row") {
+    // several symbols of different lengths, null closes inside and at the
+    // start of a series, periods short enough that most rows survive, and
+    // two stale indicator columns (as in rows enriched once before), which
+    // are replaced where they stand
+    val cfg = Indicators.Config(rsiPeriod = 5, smaPeriod = 7, bbPeriod = 4, bbStd = 1.5,
+      macdFast = 3, macdSlow = 6, macdSignal = 2)
+    val input = (for (s <- 0 until 5; (b, i) <- bars(60 + 11 * s).zipWithIndex) yield {
+      val close: Option[Double] = if ((i + s) % 13 == 0 || (i == 0 && s == 2)) None else Some(b._5 + s)
+      (s"S$s", "stale", b._1, b._2, b._3, b._4, close, b._6, -1.0)
+    }).toDF("sym", "MACD", "Date", "Open", "High", "Low", "Close", "Volume", "sma_50")
+    val fused = Indicators.technicalIndicators(input, cfg, partitionCols = Seq("sym"))
+
+    // the reference pre-processing, then the four components in turn
+    val prepped = input.select(col("sym"), col("MACD").as("macd"),
+      date_format(try_to_timestamp(col("Date")), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("date"),
+      col("Open").cast("double").as("open"), col("High").cast("double").as("high"),
+      col("Low").cast("double").as("low"), col("Close").cast("double").as("close"),
+      col("Volume").cast("double").as("volume"), col("sma_50"))
+    val p = Seq("sym")
+    val composed = Indicators.withMacd(
+      Indicators.withBollinger(
+        Indicators.withRsi(
+          Indicators.withSma(prepped, "close", "sma_50", cfg.smaPeriod, "date", p),
+          "close", "rsi_14", cfg.rsiPeriod, "date", p),
+        "close", "bb_upper", "bb_lower", cfg.bbPeriod, cfg.bbStd, "date", p),
+      "close", "macd", "macd_signal", "macd_histogram",
+      cfg.macdFast, cfg.macdSlow, cfg.macdSignal, "date", p)
+      .na.drop("any", IndicatorCols).orderBy("sym", "date")
+
+    assert(fused.columns.toSeq == composed.columns.toSeq)
+    assert(fused.columns.take(2).toSeq == Seq("sym", "macd") && fused.columns(8) == "sma_50",
+      fused.columns.mkString(","))
+    // bit patterns, so -0.0/0.0 or a last-ulp difference would show
+    def bits(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+    val (f, c) = (bits(fused.collect()), bits(composed.collect()))
+    assert(f.size > 5 * 30 && f.map(_.head).distinct.size == 5, s"${f.size} rows")
+    assert(f == c, s"${f.zip(c).count { case (a, b) => a != b }} rows differ")
+  }
 }
