@@ -128,27 +128,6 @@ object Bench {
 
   private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
-  /** Counts Spark jobs, completed stages, and launched tasks — the
-    * BENCH_r06 diagnosis made job count THE driver-environment scale lever
-    * (the stall there charges wall-clock per sequential job, and a 100×-data
-    * run multiplies per-job overhead identically), so the per-query telemetry
-    * records it directly: a job-count regression is a one-line diff instead
-    * of forensics.
-    */
-  private final class JobStageCounter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks.toLong); ()
-    }
-  }
-
   /** Where [[logTelemetry]] appends: the repo-root `BENCH_TELEMETRY.txt`
     * unless the `graft.bench.telemetry` system property names another file
     * (specs point it under `target/` so a test run leaves the tree clean).
@@ -171,16 +150,7 @@ object Bench {
       sfDir: String, cpus: String, shardTag: String,
       slice: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       totalN: Int, stopSession: Boolean = true): Seq[(String, Double, Boolean)] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.events normalizes NTZ parquet through a session-TZ-sensitive
-      // cast; Verify pins UTC and the DuckDB oracle is UTC, so the bench
-      // session must match or event instants shift on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus.toInt)
     // Warm up the session (codegen, parquet footers, FS cache) so the first
     // timed query doesn't absorb one-time startup cost.
     Tables.names.foreach { n =>
@@ -237,32 +207,29 @@ object Bench {
       logTelemetry(f"[bench$shardTag] warmup pass: ${slice.size}%d queries at " +
         f"$wd in ${(System.nanoTime() - w0) / 1e9}%.1f s (untimed)")
     }
-    val counter = new JobStageCounter
-    spark.sparkContext.addSparkListener(counter)
-    def drainedCounts(): (Long, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      (counter.jobs.get, counter.stages.get, counter.tasks.get)
-    }
     val rerunFloorSec = 3.0
     val results = slice.zipWithIndex.map { case ((name, fn), idx) =>
       def timedRun(): (Double, String, Option[String]) = {
         val (jit0, gc0) = jitGcMs()
-        val (jobs0, stages0, tasks0) = drainedCounts()
-        val t0 = System.nanoTime()
-        // a query that throws is an ERROR, never a timing (r13 swallowed
-        // the Throwable and recorded elapsed-until-throw as a success)
-        val err =
-          try { fn(spark, sfDir).count(); None }
-          catch { case e: Throwable =>
-            Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val (jobs1, stages1, tasks1) = drainedCounts()
+        // job, stage and task counts per query: the BENCH_r06 diagnosis made
+        // job count the driver-environment scale lever, so a job-count
+        // regression reads as a one-line telemetry diff
+        val ((dt, err), m) = graft.core.Meter.during(spark) {
+          val t0 = System.nanoTime()
+          // a query that throws is an ERROR, never a timing (r13 swallowed
+          // the Throwable and recorded elapsed-until-throw as a success)
+          val err =
+            try { fn(spark, sfDir).count(); None }
+            catch { case e: Throwable =>
+              Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+            }
+          ((System.nanoTime() - t0) / 1e9, err)
+        }
         sweepCaches()
         val (jit1, gc1) = jitGcMs()
         (dt,
-          f"jit +${jit1 - jit0}%dms gc +${gc1 - gc0}%dms  jobs ${jobs1 - jobs0}%d " +
-            f"stages ${stages1 - stages0}%d tasks ${tasks1 - tasks0}%d", err)
+          f"jit +${jit1 - jit0}%dms gc +${gc1 - gc0}%dms  jobs ${m.jobs}%d " +
+            f"stages ${m.stages}%d tasks ${m.tasks}%d", err)
       }
       val memoBefore = graft.queries.Shared.memoKeys
       graft.queries.Shared.drainConsumed() // reset hit tracking for this query
@@ -422,8 +389,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = Session.cpus.toString
     // dev-only subset filter (comma-separated names): reproduce one shard
     // region in isolation when attributing a slow entry to shard context
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)

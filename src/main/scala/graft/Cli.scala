@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core.{Engine, Registries}
 
 /** Command-line entry point mirroring the reference's `__main__.py`:
@@ -47,15 +46,7 @@ object Cli {
       return
     }
     val configPath = args.config.get
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try new Engine(spark).runFile(configPath, args.fullRefresh)
     finally spark.stop()
   }

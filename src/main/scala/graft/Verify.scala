@@ -128,15 +128,7 @@ object Verify {
     // Optional trailing args: run only these queries (mirrors tools/check.py's
     // `[query ...]` filter — dev loop; the driver passes exactly 2 args).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // Stale-proofing: a query's output dir is DELETED before the attempt and
     // a `_FAILED` marker is written on exception, so a transient mid-suite

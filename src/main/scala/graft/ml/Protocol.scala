@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Indicators, Validation}
 import graft.sinks.JdbcLoader
@@ -25,15 +24,7 @@ import graft.sources.JsonFileExtractor
   */
 object Protocol {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val bars = new JsonFileExtractor(spark,
       Map[String, Any]("path" -> "configs/sample_ohlcv.json")).extract()

@@ -96,14 +96,20 @@ object Indicators {
     * combined in double — deterministic cross-engine, unlike `stddev_samp`
     * whose accumulation order is engine-internal.
     * Inputs are expected 4-decimal-canonical (see [[graft.exprs.Exact]]).
+    *
+    * The trailing count, sum and sum of squares are named first, then the
+    * bands use them, then the scratch columns go: inline in both bands,
+    * each occurrence would be its own window aggregate (10 where 3 differ).
     */
   def withBollinger(
       df: DataFrame, closeCol: String, upperCol: String, lowerCol: String,
       period: Int, k: Double, orderCol: String,
       partitionCols: Seq[String] = Nil): DataFrame = {
     val (cnt, s1, s2) = trailingSums(col(closeCol), period, baseWindow(partitionCols, orderCol))
-    val (upper, lower) = bollingerCols(cnt, s1, s2, period, k)
-    df.withColumns(Map(upperCol -> upper, lowerCol -> lower))
+    val (upper, lower) = bollingerCols(col("__bb_n"), col("__bb_s1"), col("__bb_s2"), period, k)
+    df.withColumns(Map("__bb_n" -> cnt, "__bb_s1" -> s1, "__bb_s2" -> s2))
+      .withColumns(Map(upperCol -> upper, lowerCol -> lower))
+      .drop("__bb_n", "__bb_s1", "__bb_s2")
   }
 
   /** The upper and lower bands from the trailing count, sum and sum of

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries so the
   * scan pushdown (`PushedFilters`/`ReadSchema`), join strategy (broadcast vs
   * shuffle), and WholeStageCodegen spans can be reviewed.
@@ -14,13 +12,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSet else
       Set("q1_pricing_summary", "q3_top_revenue_orders", "q5_nation_revenue",
         "q18_large_orders", "q_sessionize", "dd2_minhash_lsh", "sim1_ann_brute_topk")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.contains(name)) {
         println(s"\n################ $name ################")

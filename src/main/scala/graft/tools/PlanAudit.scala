@@ -2,11 +2,7 @@ package graft.tools
 import graft.queries._
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val qs = Seq(AnalyticsQueries.qScd2, AnalyticsQueries.qResampleFfill,
       TextQueries.tx11VocabZipf, TextQueries.tx12Bigrams,

@@ -1,55 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.operators.Dedup
-
-/** Scratch profiler for the dedup pipeline stages. */
+/** Per-query profile: runs each named query `n` times against an SF dir and
+  * prints, per run, the wall time, the JIT compile-time delta, the Spark
+  * jobs, stages and tasks, the shuffle MB, and the stages grouped by call
+  * site, heaviest first. Caches and shared memos are dropped between runs,
+  * so every run recomputes from parquet; the first run's JIT delta shows
+  * its warmup. Usage:
+  * runMain graft.tools.Prof <sfDir> <n> <query...>
+  */
 object Prof {
-  def t[A](name: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    println(f"$name%-20s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    r
-  }
+  private def jitMs(): Long =
+    Option(java.lang.management.ManagementFactory.getCompilationMXBean)
+      .filter(_.isCompilationTimeMonitoringSupported)
+      .map(_.getTotalCompilationTime).getOrElse(0L)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val docs = graft.Tables.documents(spark, sfDir)
-    println(s"docs: ${docs.count()} partitions: ${docs.rdd.getNumPartitions}")
-    // mirror minhashNearDuplicates stage by stage, spread like the library
-    val base = docs.select(col("doc_id"), col("text").as("txt")).repartition(32)
-    val withSh = base
-      .withColumn("ts", split(lower(col("txt")), " "))
-      .filter(size(col("ts")) >= 3)
-      .withColumn("sh", Dedup.wordShinglesExpr("ts", 3))
-      .withColumn("hv", Dedup.shingleHashesExpr("sh"))
-      .withColumn("sig", Dedup.minhashSignatureExpr("hv", 64))
-      .select("doc_id", "sh", "sig")
-      .persist()
-    t("sig materialize")(withSh.count())
-    val bandsDf = withSh.select(col("doc_id"),
-      posexplode(expr(s"""transform(sequence(0, 15), b ->
-        array_join(transform(slice(sig, b*4 + 1, 4), x -> cast(x as string)), '-'))""")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
-    t("bands")(bandsDf.count())
-    val a = bandsDf.as("a"); val b = bandsDf.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    t("candidates")(cand.count())
-    t("verify")(Dedup.verifyJaccard(cand, withSh.select(col("doc_id"), col("sh")), 0.8).count())
-    withSh.unpersist()
-    val full = t("full pipeline")(
-      Dedup.minhashNearDuplicates(docs, "doc_id", "text").count())
-    println(s"pairs: $full")
+    require(args.length >= 3 && args(1).forall(_.isDigit),
+      s"usage: Prof <sfDir> <n> <query...> (got: ${args.mkString(" ")})")
+    val sfDir = args(0)
+    val n = args(1).toInt
+    val spark = graft.Session()
+    args.drop(2).foreach { name =>
+      val query = graft.SparkEntry.queries(name)
+      (1 to n).foreach { run =>
+        val jit0 = jitMs()
+        val t0 = System.nanoTime()
+        val (_, m) = graft.core.Meter.during(spark)(query(spark, sfDir).count())
+        val wall = (System.nanoTime() - t0) / 1e9
+        println(f"== $name run $run: $wall%.2f s  jit +${jitMs() - jit0}%dms  " +
+          f"jobs ${m.jobs}%d stages ${m.stages}%d tasks ${m.tasks}%d  " +
+          f"shuffle ${m.shuffleMb}%.1f MB")
+        m.stageRows.groupBy(_.site).toSeq
+          .map { case (site, rows) =>
+            (site, rows.size, rows.map(_.tasks).sum, rows.map(_.wallMs).sum, rows.map(_.taskRunMs).sum)
+          }
+          .sortBy(-_._4).take(14).foreach { case (site, stages, tasks, wallMs, runMs) =>
+            println(f"   ${wallMs / 1e3}%6.2f s wall ${runMs / 1e3}%7.2f s task  " +
+              f"$stages%3d stages $tasks%5d tasks  $site")
+          }
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.queries.Shared.clear()
+      }
+    }
     spark.stop()
   }
 }

@@ -36,21 +36,6 @@ object RelTier {
 
   private val Off = 100000000L // replica key shift; 9 replicas stay < 2³¹ for int keys
 
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-      ()
-    }
-    def reset(): Unit = { read.set(0); write.set(0) }
-  }
-
   private def gen(spark: SparkSession, src: String, out: String, reps: Int): Unit = {
     def load(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {
@@ -109,35 +94,28 @@ object RelTier {
         n -> ("(?<![A-Za-z])" + n + "(?![A-Za-z])").r.findAllIn(planStr).length
       }.filter(_._2 > 0).toMap
 
-  private def runTier(spark: SparkSession, meter: ShuffleMeter,
-      name: String, dir: String): (Double, Long, Long, Map[String, Int]) = {
-    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    meter.reset()
-    val t0 = System.nanoTime()
-    val df = graft.SparkEntry.queries(name)(spark, dir)
-    df.write.format("noop").mode("overwrite").save()
-    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    val wall = (System.nanoTime() - t0) / 1e9
+  private def runTier(spark: SparkSession, name: String,
+      dir: String): (Double, graft.core.Meter.Report, Map[String, Int]) = {
+    val ((wall, df), m) = graft.core.Meter.during(spark) {
+      val t0 = System.nanoTime()
+      val df = graft.SparkEntry.queries(name)(spark, dir)
+      df.write.format("noop").mode("overwrite").save()
+      ((System.nanoTime() - t0) / 1e9, df)
+    }
     val shape = planShape(df.queryExecution.executedPlan.toString)
     // release per-query reuse caches so tiers don't cross-subsidize
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.catalog.clearCache()
     graft.queries.Shared.clear()
-    (wall, meter.read.get, meter.write.get, shape)
+    (wall, m, shape)
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     args.toList match {
       case "gen" :: src :: out :: rest =>
         gen(spark, src, out, rest.headOption.map(_.toInt).getOrElse(10))
       case "run" :: sf01 :: sf1 :: rest =>
-        val meter = new ShuffleMeter
-        spark.sparkContext.addSparkListener(meter)
         val queries = if (rest.nonEmpty) rest else DefaultQueries.toList
         var flipped = List.empty[String]
         println(f"${"query"}%-24s ${"sf0.1 wall"}%10s ${"sf1 wall"}%9s ${"×"}%5s " +
@@ -145,15 +123,15 @@ object RelTier {
         queries.foreach { q =>
           // warm each tier's JIT on the SMALL tier first (untimed), so the
           // sf1/sf0.1 wall ratio compares plans, not first-run compilation
-          runTier(spark, meter, q, sf01)
-          val (w0, r0, s0, shape0) = runTier(spark, meter, q, sf01)
-          val (w1, r1, s1, shape1) = runTier(spark, meter, q, sf1)
+          runTier(spark, q, sf01)
+          val (w0, m0, shape0) = runTier(spark, q, sf01)
+          val (w1, m1, shape1) = runTier(spark, q, sf1)
           val same = shape0 == shape1
           val documented = !same && DocumentedFlips.contains(q)
           if (!same && !documented) flipped ::= q
           println(f"$q%-24s $w0%10.2f $w1%9.2f ${w1 / w0}%5.1f " +
-            f"${(r0 + s0) / 1048576.0}%13.1f ${(r1 + s1) / 1048576.0}%12.1f " +
-            f"${if (r0 + s0 == 0) 0.0 else (r1 + s1).toDouble / (r0 + s0)}%5.1f  " +
+            f"${m0.shuffleMb}%13.1f ${m1.shuffleMb}%12.1f " +
+            f"${if (m0.shuffleMb == 0) 0.0 else m1.shuffleMb / m0.shuffleMb}%5.1f  " +
             (if (same) s"stable $shape1"
              else if (documented)
                s"flip DOCUMENTED sf0.1=$shape0 sf1=$shape1 — ${DocumentedFlips(q)}"

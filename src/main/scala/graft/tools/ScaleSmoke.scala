@@ -18,45 +18,24 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
 
-  /** Aggregated shuffle traffic + stage count across one smoke item. */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-      // attribute failures to the operator call site (stage details carry it)
-      s.stageInfo.failureReason.foreach { why =>
-        System.err.println(s"[smoke] FAILED stage ${s.stageInfo.stageId} " +
-          s"'${s.stageInfo.name}': ${why.linesIterator.take(2).mkString(" | ")}\n" +
-          s"  details: ${s.stageInfo.details.linesIterator.take(4).mkString(" | ")}")
-      }
-      stages.incrementAndGet(); ()
-    }
-    def reset(): Unit = { read.set(0); write.set(0); stages.set(0) }
+  /** Run one smoke item under [[graft.core.Meter]] and print its wall time,
+    * stage count and shuffle read/write; a failed stage's reason goes to
+    * stderr. Returns the item's value and its shuffle read and write bytes.
+    */
+  private def t[A](spark: SparkSession, name: String)(body: => A): (A, Long, Long) = {
+    var t0 = 0L
+    val (r, m) = graft.core.Meter.during(spark) { t0 = System.nanoTime(); body }
+    println(f"$name%-52s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
+      f"stages ${m.stages}%3d  shuffle r/w " +
+      f"${m.shuffleReadBytes / 1048576.0}%.0f/${m.shuffleWriteBytes / 1048576.0}%.0f MB")
+    m.failures.foreach(f => System.err.println(s"[smoke] FAILED $f"))
+    (r, m.shuffleReadBytes, m.shuffleWriteBytes)
   }
 
   private def graphTier(spark: SparkSession, n: Long): Unit = {
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): A = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-34s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
+    def sweep(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      r
-    }
-    t(s"cc_star chains n=$n (distributed)") {
+    t(spark, s"cc_star chains n=$n (distributed)") {
       // n/10 disjoint 10-node chains: ~0.9n edges, ~17× past smallGraphMax
       // (2²⁰) → the full large-star/small-star loop; closed-form label
       // check as in the 2M tier
@@ -76,7 +55,8 @@ object ScaleSmoke {
       require(got.getDecimal(1).compareTo(expect) == 0,
         s"Σcomp ${got.getDecimal(1)} != closed form $expect")
     }
-    t(s"kcore n=$n edges=$n (distributed peel)") {
+    sweep()
+    t(spark, s"kcore n=$n edges=$n (distributed peel)") {
       // n/4 triangles + n/4 pendants = n edges, past the driver bucket-
       // queue threshold → the distributed peel; 2-core = exactly the
       // triangles, every survivor at within-core degree 2
@@ -94,7 +74,8 @@ object ScaleSmoke {
       require(chk.getLong(0) == 3 * m, s"core size ${chk.getLong(0)} != ${3 * m}")
       require(chk.getLong(1) == 2L && chk.getLong(2) == 2L, "cycle degrees must be 2")
     }
-    t(s"pagerank ring nodes=${n * 2 / 5} edges=${n * 4 / 5} (5 rounds)") {
+    sweep()
+    t(spark, s"pagerank ring nodes=${n * 2 / 5} edges=${n * 4 / 5} (5 rounds)") {
       // q_pagerank's exact round loop (integer micro-unit ranks, damped
       // floor update, per-round localCheckpoint re-rooting) on a symmetric
       // 2-regular ring: every node has outdeg 2, so the uniform start is
@@ -131,6 +112,7 @@ object ScaleSmoke {
       require(chk.getLong(1) == 1000000L && chk.getLong(2) == 1000000L,
         s"ring fixed point violated: [${chk.getLong(1)}, ${chk.getLong(2)}]")
     }
+    sweep()
   }
 
   /** The 20M-doc STATE-TRAVEL tier (`runMain graft.tools.ScaleSmoke incr
@@ -157,19 +139,6 @@ object ScaleSmoke {
     // the measured 16g G1-region cliff); the bench JVM's 8 g leaves the
     // late phases' aggregates execution-starved (AGGREGATE_OUT_OF_MEMORY).
     import spark.implicits._
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): (A, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-44s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
-      (r, meter.read.get, meter.write.get)
-    }
     def sweep(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     // free each phase's internal reuse caches WITHOUT truncating a carried
@@ -203,14 +172,14 @@ object ScaleSmoke {
       when(col("id") % 20 === 19, "s1").otherwise("s0").as("shard"),
       concat(lit("t"), expr("id div 2")).as("text"))
     if (!bdOnly && !bkOnly) {
-    val (store1, _, _) = t(s"dedup_delta d1 store build n=$n") {
+    val (store1, _, _) = t(spark, s"dedup_delta d1 store build n=$n") {
       val (s1, fp1) = graft.operators.Incremental.dedupDelta(
         dDocs.filter(col("shard") === "s0"), manifest0, "shard", emptyFp, "id", "text")
       val c1 = s1.count()
       require(c1 == n / 2, s"d1 survivors $c1 != ${n / 2}")
       graft.operators.Dedup.cachedForReuse(fp1)
     }
-    t(s"dedup_delta d2 delta n=${n / 20} vs ${n / 2}-row store") {
+    t(spark, s"dedup_delta d2 delta n=${n / 20} vs ${n / 2}-row store") {
       val (s2, _) = graft.operators.Incremental.dedupDelta(
         dDocs, manifest1, "shard", store1, "id", "text")
       val c2 = s2.count()
@@ -247,7 +216,7 @@ object ScaleSmoke {
     // multipliers over GF(2^61−1)) removes both causes; this tier now
     // asserts the tail is ZERO at 20M docs — the estimator's answers no
     // longer degrade with corpus size (the r13 judge's #1).
-    val (store2, _, _) = t(s"neardedup_delta d1 store build n=${n - n / 80}") {
+    val (store2, _, _) = t(spark, s"neardedup_delta d1 store build n=${n - n / 80}") {
       val (s1, sigs1) = graft.operators.Incremental.nearDedupDelta(
         nDocs.filter(col("shard") === "s0"), manifest0, "shard", emptySigs,
         "id", "text", shingleK = 3, bands = 8, rowsPerBand = 4)
@@ -270,12 +239,12 @@ object ScaleSmoke {
       // AGGREGATE_OUT_OF_MEMORY at the 14g heap; a disk scan is also the
       // production shape). Fresh JVM per measurement, as before.
       val stagedDir = s"target/scalesmoke_bd_$n"
-      val (storeDisk, _, _) = t("store staging write (plain parquet, release cache)") {
+      val (storeDisk, _, _) = t(spark, "store staging write (plain parquet, release cache)") {
         store2.write.mode("overwrite").parquet(stagedDir)
         sweep()
         spark.read.parquet(stagedDir)
       }
-      t(s"neardedup_delta d2 delta (broadcastDelta — store scanned, not shuffled)") {
+      t(spark, s"neardedup_delta d2 delta (broadcastDelta — store scanned, not shuffled)") {
         val (s2b, _) = graft.operators.Incremental.nearDedupDelta(
           nDocs, manifest1, "shard", storeDisk, "id", "text",
           shingleK = 3, bands = 8, rowsPerBand = 4,
@@ -309,12 +278,12 @@ object ScaleSmoke {
       // carried localCheckpoint blocks otherwise squat on (measured
       // UNABLE_TO_ACQUIRE_MEMORY at the 14g heap with the cache live).
       // Production plugins never hit this: their old store is a disk scan.
-      val (plainSigs, _, _) = t(s"store staging write (plain parquet, release cache)") {
+      val (plainSigs, _, _) = t(spark, s"store staging write (plain parquet, release cache)") {
         store2.write.mode("overwrite").parquet(s"$stateRoot/_staged")
         sweep()
         spark.read.parquet(s"$stateRoot/_staged")
       }
-      t(s"bucketed store COMMIT (one-time layout cost, ${n - n / 80} docs)") {
+      t(spark, s"bucketed store COMMIT (one-time layout cost, ${n - n / 80} docs)") {
         // buckets sized to THIS session's shuffle parallelism (128) — the
         // deployment rule the IncrState scaladoc pins: an at-rest bucket
         // count below spark.sql.shuffle.partitions makes EnsureRequirements
@@ -335,7 +304,7 @@ object ScaleSmoke {
       val idxAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/band_index",
         IncrState.BandIndexVersion, acceptUnversioned = false,
         Seq("band", "key"), Seq("band", "key"), sys.error("index missing"))
-      val (_, r2, w2) = t(s"neardedup_delta d2 (bucketed store at rest, default path)") {
+      val (_, r2, w2) = t(spark, s"neardedup_delta d2 (bucketed store at rest, default path)") {
         val (s2, _) = graft.operators.Incremental.nearDedupDelta(
           nDocs, manifest1, "shard", storeAtRest, "id", "text",
           shingleK = 3, bands = 8, rowsPerBand = 4,
@@ -345,7 +314,7 @@ object ScaleSmoke {
           println(s2.queryExecution.executedPlan.toString)
       }
       sweep()
-      val (_, rc, wc) = t(s"neardedup_delta d2 CONTROL (empty store)") {
+      val (_, rc, wc) = t(spark, s"neardedup_delta d2 CONTROL (empty store)") {
         val (s2c, _) = graft.operators.Incremental.nearDedupDelta(
           d2, manifest0, "shard", emptySigs, "id", "text",
           shingleK = 3, bands = 8, rowsPerBand = 4)
@@ -363,7 +332,7 @@ object ScaleSmoke {
       rmState()
       return
     }
-    val (_, r2, w2) = t(s"neardedup_delta d2 delta n=${n / 80} vs store") {
+    val (_, r2, w2) = t(spark, s"neardedup_delta d2 delta n=${n / 80} vs store") {
       val (s2, _) = graft.operators.Incremental.nearDedupDelta(
         nDocs, manifest1, "shard", store2, "id", "text",
         shingleK = 3, bands = 8, rowsPerBand = 4, materializeState = false)
@@ -371,7 +340,7 @@ object ScaleSmoke {
       require(c2 == 0, s"d2 survivors $c2 != 0 (all twin-seconds)")
     }
     sweepExcept(keepStore)
-    val (_, rc, wc) = t(s"neardedup_delta d2 CONTROL (empty store)") {
+    val (_, rc, wc) = t(spark, s"neardedup_delta d2 CONTROL (empty store)") {
       val (s2c, _) = graft.operators.Incremental.nearDedupDelta(
         d2, manifest0, "shard", emptySigs, "id", "text",
         shingleK = 3, bands = 8, rowsPerBand = 4)
@@ -416,7 +385,7 @@ object ScaleSmoke {
         when(col("vec_id") - m < nDup, gen(dupSrc))
           .otherwise(gen(col("vec_id") + 7777777L)).as("embedding"))
     val semCorpus = store.unionByName(deltaVecs)
-    val (prep, _, _) = t(s"semdedup_delta prepare+assign store n=$m cells=1024") {
+    val (prep, _, _) = t(spark, s"semdedup_delta prepare+assign store n=$m cells=1024") {
       val p = graft.operators.Dedup.cachedForReuse(
         graft.operators.Similarity.preparedCorpus(store, "vec_id", "embedding"))
       val cents = p.filter(col("nrm") > 0).orderBy(col("vec_id")).limit(1024)
@@ -429,7 +398,7 @@ object ScaleSmoke {
       (cents, state)
     }
     val (cents, state1) = prep
-    t(s"semdedup_delta d2 delta n=$nDelta (dups $nDup) vs $m-row store") {
+    t(spark, s"semdedup_delta d2 delta n=$nDelta (dups $nDup) vs $m-row store") {
       val (_, st2) = graft.operators.Incremental.semDedupDelta(
         semCorpus, manifest1, "shard", cents, state1,
         "vec_id", "embedding", threshold = 0.999999, materializeState = false)
@@ -486,19 +455,6 @@ object ScaleSmoke {
     import spark.implicits._
     import graft.transformers.Transformers.IncrState
     import graft.operators.{Dedup, Incremental, Similarity}
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): (A, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-52s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
-      (r, meter.read.get, meter.write.get)
-    }
     def sweep(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc() // release broadcast/checkpoint blocks via ContextCleaner
@@ -557,7 +513,7 @@ object ScaleSmoke {
           .select(col("vec_id"), lit("s1").as("shard"),
             when(col("vec_id") - m < nDup, gen((col("vec_id") - m) * stride))
               .otherwise(gen(col("vec_id") + 7777777L)).as("embedding"))
-        t(s"sem state bootstrap build n=$m cells=1024 (staged plain)") {
+        t(spark, s"sem state bootstrap build n=$m cells=1024 (staged plain)") {
           val p = Dedup.cachedForReuse(
             Similarity.preparedCorpus(store, "vec_id", "embedding"))
           p.filter(col("nrm") > 0).orderBy(col("vec_id")).limit(1024)
@@ -568,7 +524,7 @@ object ScaleSmoke {
             .write.mode("overwrite").parquet(s"$stateRoot/_staged")
           sweep()
         }
-        t(s"bucketed store COMMIT (one-time layout cost, $m rows)") {
+        t(spark, s"bucketed store COMMIT (one-time layout cost, $m rows)") {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_staged"),
               s"$stateRoot/state", IncrState.SemStoreVersion,
@@ -578,7 +534,7 @@ object ScaleSmoke {
           IncrState.SemStoreVersion, acceptUnversioned = false,
           Seq("cell"), Seq("cell"), sys.error("store missing"))
         val cents = spark.read.parquet(s"$stateRoot/_cents")
-        val (_, r2, w2) = t(s"semdedup_delta d2 (bucketed store at rest) delta=$nDelta") {
+        val (_, r2, w2) = t(spark, s"semdedup_delta d2 (bucketed store at rest) delta=$nDelta") {
           val (verdicts, _) = Incremental.semDedupDelta(
             store.unionByName(deltaVecs), manifest1, "shard", cents, stateAtRest,
             "vec_id", "embedding", threshold = 0.999999, materializeState = false)
@@ -594,7 +550,7 @@ object ScaleSmoke {
           .add("nrm", DoubleType).add("cell", LongType)
           .add("cell_cos", DoubleType).add("grp", LongType)
           .add("keep", BooleanType)
-        val (_, rc, wc) = t("semdedup_delta d2 CONTROL (empty store)") {
+        val (_, rc, wc) = t(spark, "semdedup_delta d2 CONTROL (empty store)") {
           val (vc, _) = Incremental.semDedupDelta(
             deltaVecs, manifest0, "shard", cents, emptyFrame(semSchema),
             "vec_id", "embedding", threshold = 0.999999)
@@ -613,14 +569,14 @@ object ScaleSmoke {
           concat(lit("c w"), expr("id div 2")).as("text"))
         val emptyVocab = emptyFrame(new StructType()
           .add("term", StringType).add("df", LongType))
-        t(s"vocab d1 store build (${n - n / 80} docs, ${n / 2 + 1} terms, staged plain)") {
+        t(spark, s"vocab d1 store build (${n - n / 80} docs, ${n / 2 + 1} terms, staged plain)") {
           val (_, v1) = Incremental.vocabDelta(
             d.filter(col("shard") === "s0"), manifest0, "shard", emptyVocab,
             "text", materializeState = false)
           v1.write.mode("overwrite").parquet(s"$stateRoot/_staged")
           sweep()
         }
-        t(s"bucketed store COMMIT (one-time layout cost, ${n / 2 + 1} terms)") {
+        t(spark, s"bucketed store COMMIT (one-time layout cost, ${n / 2 + 1} terms)") {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_staged"),
               s"$stateRoot/vocab", IncrState.VocabStoreVersion,
@@ -629,7 +585,7 @@ object ScaleSmoke {
         val vocabAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/vocab",
           IncrState.VocabStoreVersion, acceptUnversioned = false,
           Seq("term"), Seq("term"), sys.error("store missing"))
-        val (_, r2, w2) = t(s"vocab_delta d2 (bucketed store at rest) delta=${n / 80}") {
+        val (_, r2, w2) = t(spark, s"vocab_delta d2 (bucketed store at rest) delta=${n / 80}") {
           val (rep, _) = Incremental.vocabDelta(
             d, manifest1, "shard", vocabAtRest, "text", materializeState = false)
           val chk = rep.agg(count(lit(1)),
@@ -642,7 +598,7 @@ object ScaleSmoke {
           require(chk.getLong(3) == n / 40, s"delta df mass ${chk.getLong(3)} != ${n / 40}")
         }
         sweep()
-        val (_, rc, wc) = t("vocab_delta d2 CONTROL (empty store)") {
+        val (_, rc, wc) = t(spark, "vocab_delta d2 CONTROL (empty store)") {
           val (repC, _) = Incremental.vocabDelta(
             d.filter(col("shard") === "s1"), manifest0, "shard", emptyVocab,
             "text", materializeState = false)
@@ -677,7 +633,7 @@ object ScaleSmoke {
           .add("doc_id", LongType).add("g", StringType))
         val emptyH = emptyFrame(new StructType().add("doc_id", LongType)
           .add("n_grams", LongType).add("n_hit", LongType))
-        t(s"gram d1 store build (${n - 3 * n / 80} docs, staged plain)") {
+        t(spark, s"gram d1 store build (${n - 3 * n / 80} docs, staged plain)") {
           val (t1, e1, h1) = Incremental.contaminationDelta(
             docs.filter(col("shard") === "s0"), manifest0, "shard",
             emptyT, emptyE, emptyH, "id", "text", col("is_bench"),
@@ -694,7 +650,7 @@ object ScaleSmoke {
               "(evals ≡3 mod 80 must be unhit before their gram arrives)")
           sweep()
         }
-        t(s"bucketed store COMMIT (one-time layout cost)") {
+        t(spark, s"bucketed store COMMIT (one-time layout cost)") {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_stagedT"),
               s"$stateRoot/train_grams", IncrState.GramStoreVersion,
@@ -715,7 +671,7 @@ object ScaleSmoke {
         val hitsAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/hits",
           IncrState.GramStoreVersion, acceptUnversioned = false,
           Seq("doc_id"), Seq("doc_id"), sys.error("hits store missing"))
-        val (_, r2, w2) = t(s"contamination_delta d2 (bucketed stores at rest) delta=${3 * n / 80}") {
+        val (_, r2, w2) = t(spark, s"contamination_delta d2 (bucketed stores at rest) delta=${3 * n / 80}") {
           val (_, _, h2) = Incremental.contaminationDelta(
             docs, manifest1, "shard", trainAtRest, evalAtRest, hitsAtRest,
             "id", "text", col("is_bench"), shingleK = 5, materializeState = false)
@@ -731,7 +687,7 @@ object ScaleSmoke {
           require(chk.getLong(4) == 1L && chk.getLong(5) == 1L, "n_grams must be 1")
         }
         sweep()
-        val (_, rc, wc) = t("contamination_delta d2 CONTROL (empty stores)") {
+        val (_, rc, wc) = t(spark, "contamination_delta d2 CONTROL (empty stores)") {
           val (_, _, hc) = Incremental.contaminationDelta(
             docs.filter(col("shard") === "s1"), manifest0, "shard",
             emptyT, emptyE, emptyH, "id", "text", col("is_bench"),
@@ -748,25 +704,28 @@ object ScaleSmoke {
     rmState()
   }
 
+  /** The session of the 20M tiers: 128 shuffle partitions, ~150k edge rows
+    * per task, keep every round's per-task state well inside the 8g
+    * measured heap (the per-partition sizing a cluster submit would set via
+    * spark.sql.files.maxPartitionBytes / shuffle.partitions).
+    */
+  private def tier20M(): SparkSession = {
+    val spark = graft.Session()
+    spark.conf.set("spark.sql.shuffle.partitions", "128")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.exists(a => a.startsWith("incr-bk-"))) {
       val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = tier20M()
       bucketedStoreTier(spark, n, args.head.stripPrefix("incr-bk-"))
       spark.stop()
       return
     }
     if (args.headOption.exists(a => a == "incr" || a == "incr-bd" || a == "incr-bk")) {
       val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = tier20M()
       incrTier(spark, n, bdOnly = args.headOption.contains("incr-bd"),
         bkOnly = args.headOption.contains("incr-bk"))
       spark.stop()
@@ -774,56 +733,40 @@ object ScaleSmoke {
     }
     if (args.headOption.contains("graph")) {
       val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      // 128 shuffle partitions at the 20M tier: ~150k edge rows per task
-      // keeps every peel/star round's per-task state well inside the 8g
-      // measured heap (the per-partition sizing a cluster submit would set
-      // via spark.sql.files.maxPartitionBytes / shuffle.partitions)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = tier20M()
       graphTier(spark, n)
       spark.stop()
       return
     }
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def t[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
+    val spark = graft.Session()
     val docs = spark.range(1, n + 1).toDF("doc_id")
       .withColumn("n_tokens", (col("doc_id") * 131 % 997) + 1)
-    t(s"prefix_sum n=$n") {
+    t(spark, s"prefix_sum n=$n") {
       val out = graft.operators.PrefixSum
         .withStartOffset(docs, "doc_id", "n_tokens", "off")
       val mx = out.agg(max(col("off") + col("n_tokens"))).head.getLong(0)
       val expect = docs.agg(sum("n_tokens")).head.getLong(0)
       require(mx == expect, s"prefix sum end $mx != total $expect")
     }
-    t(s"context_windows n=$n") {
+    t(spark, s"context_windows n=$n") {
       val bad = graft.operators.PrefixSum
         .contextWindows(docs, "doc_id", "n_tokens", budget = 2048L)
         .filter(col("window_offset") >= 2048 || col("window_offset") < 0).count()
       require(bad == 0)
     }
-    t(s"packing n=$n") {
+    t(spark, s"packing n=$n") {
       val packed = graft.operators.Packing
         .packSequences(docs, "doc_id", "n_tokens", budget = 2048L)
       val over = packed.groupBy("bin_id").agg(sum("n_tokens").as("t"))
         .filter(col("t") > 2048L).count()
       require(over == 0, s"$over over-budget bins")
     }
-    t(s"hash_sample n=$n") {
+    t(spark, s"hash_sample n=$n") {
       val m = graft.operators.Sampling.hashSample(docs, "doc_id", 0.25, "s").count()
       require(math.abs(m - n * 0.25) < n * 0.01, s"sample size $m far from 25%")
     }
-    t(s"sliding_windows n=$n") {
+    t(spark, s"sliding_windows n=$n") {
       // synthetic text: token count varies 1..96 per doc; chunk math must
       // hold for every row (window 64 / stride 32)
       val texts = docs.withColumn("text",
@@ -837,13 +780,13 @@ object ScaleSmoke {
       require(bad == 0, s"$bad malformed chunks")
       require(nChunks >= n, "every doc must emit at least one chunk")
     }
-    t(s"gini n=$n") {
+    t(spark, s"gini n=$n") {
       // all-equal values → exactly 0 at any n (and the rank kernel scales)
       val g = graft.operators.Eval
         .giniCoefficient(docs.withColumn("v", lit(5L)), "doc_id", "v").head()
       require(g.getLong(3) == 0L, s"uniform gini ${g.getLong(3)} != 0")
     }
-    t(s"rolling_distinct n=$n") {
+    t(spark, s"rolling_distinct n=$n") {
       // key k active every day → every full 7-day window counts all keys
       val ev = docs.select(
         date_add(lit(java.sql.Date.valueOf("2024-01-01")),
@@ -853,13 +796,13 @@ object ScaleSmoke {
       val low = out.filter(col("active_keys") < 5000L).count()
       require(low == 0, s"$low windows lost keys")
     }
-    t(s"ordinal_assoc n=$n") {
+    t(spark, s"ordinal_assoc n=$n") {
       // y = x (mod-quantized): strictly concordant on the grid → gamma 10000
       val xy = docs.select((col("doc_id") % 50).as("x"), (col("doc_id") % 50).as("y"))
       val r = graft.operators.Eval.ordinalAssociation(xy, "x", "y").head()
       require(r.getLong(4) == 10000L, s"gamma ${r.getLong(4)}")
     }
-    t(s"poisson_bootstrap n=$n") {
+    t(spark, s"poisson_bootstrap n=$n") {
       val r = graft.operators.Eval
         .poissonBootstrap(docs.withColumn("v", lit(100L)), "doc_id", "v", 4)
         .collect()
@@ -869,7 +812,7 @@ object ScaleSmoke {
         require(row.getLong(3) == 100000L, "constant series mean must be exact")
       }
     }
-    t(s"mg_topk n=$n") {
+    t(spark, s"mg_topk n=$n") {
       graft.functions.GraftFunctions.register(spark)
       // one key holds 20% of the stream; must survive any merge order
       val vals = docs.select(
@@ -879,7 +822,7 @@ object ScaleSmoke {
         .getSeq[org.apache.spark.sql.Row](0)
       require(sk.exists(_.getString(0) == "hot"), "heavy hitter lost at scale")
     }
-    t(s"hilbert n=$n") {
+    t(spark, s"hilbert n=$n") {
       // bijectivity of the curve key over the full normalized grid at n rows
       val pts = docs.select((col("doc_id") % 256).as("x"),
         (expr("doc_id div 256") % 256).as("y"))
@@ -887,7 +830,7 @@ object ScaleSmoke {
       val mm = h.agg(min("h"), max("h"), count_distinct(col("h"))).head()
       require(mm.getLong(0) == 0L && mm.getLong(1) == 65535L && mm.getLong(2) == 65536L)
     }
-    t(s"psar n=$n keys=1000") {
+    t(spark, s"psar n=$n keys=1000") {
       // 1000 parallel symbol partitions, deterministic jagged bars; exactly
       // one warmup NULL per key and a defined SAR everywhere else
       val bars = spark.range(0, n).toDF("i").select(
@@ -902,7 +845,7 @@ object ScaleSmoke {
       require(row.getLong(0) == n, "row count changed")
       require(row.getLong(1) == 1000L, s"expected 1000 warmup NULLs, got ${row.getLong(1)}")
     }
-    t(s"connected_components chains n=$n") {
+    t(spark, s"connected_components chains n=$n") {
       // n edges forming n/10 disjoint 10-node chains (diameter 10): the
       // pointer-jumped loop must close them in O(log) rounds and label
       // every node with its chain head — verified in aggregate against the
@@ -922,7 +865,7 @@ object ScaleSmoke {
       require(got.getDecimal(1).compareTo(expect) == 0,
         s"Σcomp ${got.getDecimal(1)} != closed form $expect")
     }
-    t(s"cc_star chains n=$n (distributed path)") {
+    t(spark, s"cc_star chains n=$n (distributed path)") {
       // same chain family through the STAR loop with the edge count
       // (~0.9n > 2^20) past smallGraphMax — exercises the distributed
       // rounds AND the measured-size loop-partition clamp at scale; the
@@ -942,7 +885,7 @@ object ScaleSmoke {
       require(got.getDecimal(1).compareTo(expect) == 0,
         s"Σcomp ${got.getDecimal(1)} != closed form $expect")
     }
-    t(s"near_dedup_delta n=${n / 20} (two deliveries, state travel)") {
+    t(spark, s"near_dedup_delta n=${n / 20} (two deliveries, state travel)") {
       // n/20 docs in two shard deliveries; every doc whose id is ≡0 (mod 4)
       // has an exact twin at id+1 (same 25-token text), other ids are
       // unique. Twins straddle the shards by construction (shard = id mod 2
@@ -979,7 +922,7 @@ object ScaleSmoke {
         s"twin survivors $twinsKept != ${m / 4} (one per exact pair)")
       require(saltedKept == m / 2, s"salted survivors $saltedKept != ${m / 2}")
     }
-    t(s"vocab_delta n=$n (two deliveries, additive df state)") {
+    t(spark, s"vocab_delta n=$n (two deliveries, additive df state)") {
       // every doc carries the corpus-wide token "c" plus one of 1000 key
       // tokens "w{id mod 1000}"; deliveries split by id parity, so
       // delivery 1 (even ids) sees ONLY the 500 even key residues and
@@ -1014,7 +957,7 @@ object ScaleSmoke {
       require(vAll.exceptAll(v2).count() == 0 && v2.exceptAll(vAll).count() == 0,
         "two-delivery store != one-global store")
     }
-    t(s"ivf_delta n=${n / 10} dim=8 cells=16 (two deliveries)") {
+    t(spark, s"ivf_delta n=${n / 10} dim=8 cells=16 (two deliveries)") {
       // n/10 synthetic 8-dim vectors in two shard deliveries against 16
       // carried centroids: assignment is per-row stateless, so the carried
       // counts after delivery 2 must equal the one-shot global counts, and
@@ -1052,7 +995,7 @@ object ScaleSmoke {
       require(two == one, "two deliveries must equal the one-shot counts")
       require(two.map(_._2).sum == m, s"count mass ${two.map(_._2).sum} != $m")
     }
-    t(s"semdedup n=${n / 100} dim=8 k=64") {
+    t(spark, s"semdedup n=${n / 100} dim=8 k=64") {
       // pseudo-random 8-dim points duplicated in id pairs (vec_id div 2):
       // each duplicate pair shares one exact direction (cos = 1), distinct
       // bases are far apart, and k = 64 cells keep the in-cell pair space
@@ -1077,7 +1020,7 @@ object ScaleSmoke {
         s"${chk.getLong(0)} groups for $m rows — pair duplicates not detected")
       require(out.count() == m, "row count changed")
     }
-    t(s"semdedup_delta n=${n / 100} dim=8 (two deliveries, state travel)") {
+    t(spark, s"semdedup_delta n=${n / 100} dim=8 (two deliveries, state travel)") {
       // the semdedup fixture (id-pair duplicates, far-apart bases) split
       // into two deliveries by pair parity, against centroids CARRIED from
       // delivery 1 (k = 64, 2 Lloyd rounds). Invariants: two-delivery
@@ -1122,7 +1065,7 @@ object ScaleSmoke {
       val keepsPerGrp = two.groupBy(_._3).values.map(_.count(_._4))
       require(keepsPerGrp.forall(_ == 1), "every group must keep exactly one member")
     }
-    t(s"ivf_retrain n=${n / 10} dim=8 cells=16 queries=${n / 10 / 10000}") {
+    t(spark, s"ivf_retrain n=${n / 10} dim=8 cells=16 queries=${n / 10 / 10000}") {
       // the ivf_delta fixture through the full drift→retrain→repair→recall
       // chain: the report must hold its invariants (two phases, total =
       // queries×k, hits ≤ total, recall exact-rational) while every stage
@@ -1152,7 +1095,7 @@ object ScaleSmoke {
         require(bp == hits * 10000 / total, s"$ph recall_bp $bp inconsistent")
       }
     }
-    t(s"trix n=$n keys=1000") {
+    t(spark, s"trix n=$n keys=1000") {
       // 1000 parallel symbols, per-key CONSTANT closes: e1=e2=e3=close every
       // step, so trix is exactly 0.0 from each key's second row and NULL on
       // its first — closed form at any n, and the three stacked Ewm calls
@@ -1169,7 +1112,7 @@ object ScaleSmoke {
       require(row.getLong(1) == 1000L, s"expected 1000 warmup NULLs, got ${row.getLong(1)}")
       require(row.getLong(2) == n - 1000L, "constant series must give trix = 0 everywhere else")
     }
-    t(s"mann_whitney n=$n grid=100") {
+    t(spark, s"mann_whitney n=$n grid=100") {
       // both groups see the IDENTICAL value multiset → R₁ = R₂ exactly, so
       // 2U₁ = n₁n₂ and z = 0 — closed form from the exact-integer pipeline
       val gv = docs.select((col("doc_id") % 2 === 0).as("g"),
@@ -1180,7 +1123,7 @@ object ScaleSmoke {
         s"u1_x2 ${r.getLong(2)} != n1*n2 ${n1 * n2}")
       require(r.getLong(4) == 0L, s"z_bp ${r.getLong(4)} != 0")
     }
-    t(s"bigram_fluency n=${n / 10}") {
+    t(spark, s"bigram_fluency n=${n / 10}") {
       // every doc is the same 20-token sentence: each bigram's count equals
       // its context count, so P(w2|w1) = 1 and fluency is exactly 10⁶ ppm
       // for every doc — while the window shuffles still see n/10 × 19 rows
@@ -1195,7 +1138,7 @@ object ScaleSmoke {
         "identical docs must score exactly 10^6 ppm")
       require(chk.getLong(3) == 19L && chk.getLong(4) == 19L)
     }
-    t(s"kcore n=$n") {
+    t(spark, s"kcore n=$n") {
       // n/4 disjoint 3-cycles (2M·3/4 edges) + n/4 pendant chains hanging
       // off them: the 2-core is EXACTLY the cycles — every pendant peels,
       // and each survivor has within-core degree 2. Closed form at any n.
@@ -1213,7 +1156,7 @@ object ScaleSmoke {
       require(chk.getLong(0) == 3 * m, s"core size ${chk.getLong(0)} != ${3 * m}")
       require(chk.getLong(1) == 2L && chk.getLong(2) == 2L, "cycle degrees must be 2")
     }
-    t(s"vortex n=$n keys=1000") {
+    t(spark, s"vortex n=$n keys=1000") {
       // 1000 symbols, deterministic jagged bars: every full window must
       // satisfy vi+ + vi- >= 0 with both defined, and warmup NULLs are
       // exactly period+... per key (first `period` rows lack 14 TR terms)
@@ -1231,7 +1174,7 @@ object ScaleSmoke {
       require(row.getLong(1) == 14000L, s"expected 14 warmup NULLs per key, got ${row.getLong(1)}")
       require(row.getLong(2) >= 0L && row.getLong(3) >= 0L)
     }
-    t(s"holt_winters n=$n keys=1000") {
+    t(spark, s"holt_winters n=$n keys=1000") {
       // per-key CONSTANT series (a different constant per key, so key
       // mixing is detectable): zero-seeded HW stays at the fixed point —
       // level = c, trend = 0, seasonal = 0, fitted = c from row 2. Closed
@@ -1254,7 +1197,7 @@ object ScaleSmoke {
       require(row.getLong(3) == 1000L, s"expected 1 NULL fitted per key, got ${row.getLong(3)}")
       require(row.getLong(4) == 0L, "fitted must equal the constant from row 2")
     }
-    t(s"kama n=$n keys=1000") {
+    t(spark, s"kama n=$n keys=1000") {
       // per-key constant series: the 10-bar volatility sum is 0, er pins
       // to 0, and the recursion holds kama = c exactly from row 11 (warmup
       // NULLs are exactly 10 per key). Closed form at any n.

@@ -199,26 +199,19 @@ class JdbcLoaderSpec extends AnyFunSuite {
 
   /** Jobs run, and the executed plans of the SQL actions, during `body`. */
   private def traced(body: => Unit): (Int, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val jl = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     val ql = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val drain = () => org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    drain()
-    spark.sparkContext.addSparkListener(jl)
-    spark.listenerManager.register(ql)
-    try { body; drain() }
-    finally { spark.sparkContext.removeSparkListener(jl); spark.listenerManager.unregister(ql) }
+    // registered inside, after the meter's drain, so no earlier action's plan is seen
+    val jobs =
+      try TestSpark.jobsDuring { spark.listenerManager.register(ql); body }
+      finally spark.listenerManager.unregister(ql)
     import scala.jdk.CollectionConverters._
-    (jobs.get(), plans.asScala.toSeq)
+    (jobs, plans.asScala.toSeq)
   }
 
   private def queryRows(url: String, table: String): Seq[Seq[Any]] = {

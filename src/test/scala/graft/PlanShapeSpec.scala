@@ -48,6 +48,14 @@ class PlanShapeSpec extends AnyFunSuite
     }
   }
 
+  test("w3 bollinger: the trailing count, sum and sum of squares are one window aggregate each") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = WindowQueries.w3Bollinger.run(spark, sf)
+    df.collect()
+    val windows = collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
+    assert(windows.map(_.windowExpression.size) == Seq(3), df.queryExecution.executedPlan.toString)
+  }
+
   test("dd5 embedding near-dup: block-pair compare is a grouped kernel after a key shuffle") {
     val p = plan(SimilarityQueries.dd5EmbeddingNearDup.run(spark, sf))
     // no n×n cartesian: the only nested-loop join is the broadcast of the

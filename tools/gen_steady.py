@@ -5,7 +5,7 @@ records (BENCH_QUERIES.json files, or any JSON whose "queries" object maps
 name -> seconds).
 
 Steady = per-query MIN across the given records (quiet-box runs), optionally
-overridden by explicit ProfQueries-measured values via --override name=sec
+overridden by explicit values measured with graft.tools.Prof via --override name=sec
 (e.g. mx27's standalone steady, which bench-session memo riding understates).
 
 Usage: python3 tools/gen_steady.py out.json rec1.json [rec2.json ...] \
