@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * The session runs on `SPARK_MASTER`, or else `local[cpus]`, with one
   * shuffle partition per core, UTC session time (`Tables.events` normalizes
   * NTZ parquet through a session-TZ-sensitive cast, and the DuckDB oracle is
-  * UTC), no UI and WARN logging. A caller that needs another partition count
-  * sets `spark.sql.shuffle.partitions` on the built session.
+  * UTC) and no UI; `log4j2.properties` keeps logging at WARN from JVM start.
+  * A caller that needs another partition count sets
+  * `spark.sql.shuffle.partitions` on the built session.
   */
 object Session {
 
@@ -24,11 +25,8 @@ object Session {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  def apply(cpus: Int = Session.cpus): SparkSession = {
-    val spark = settings(cpus)
+  def apply(cpus: Int = Session.cpus): SparkSession =
+    settings(cpus)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -292,18 +292,18 @@ object ScaleSmoke {
         // ~0 with matching counts)
         IncrState.commitAll(manifest1, s"$stateRoot/manifest",
           IncrState.Staged(plainSigs, s"$stateRoot/signatures",
-            IncrState.SigStoreVersion, Seq("doc_id"), Seq("doc_id"), buckets = 128),
+            IncrState.SigStoreVersion, Seq("doc_id"), buckets = 128),
           IncrState.Staged(graft.operators.Dedup.bandIndex(plainSigs),
             s"$stateRoot/band_index",
-            IncrState.BandIndexVersion, Seq("band", "key"), Seq("band", "key"),
+            IncrState.BandIndexVersion, Seq("band", "key"),
             buckets = 128))
       }
       val storeAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/signatures",
         IncrState.SigStoreVersion, acceptUnversioned = false,
-        Seq("doc_id"), Seq("doc_id"), sys.error("store missing"))
+        Seq("doc_id"), sys.error("store missing"))
       val idxAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/band_index",
         IncrState.BandIndexVersion, acceptUnversioned = false,
-        Seq("band", "key"), Seq("band", "key"), sys.error("index missing"))
+        Seq("band", "key"), sys.error("index missing"))
       val (_, r2, w2) = t(spark, s"neardedup_delta d2 (bucketed store at rest, default path)") {
         val (s2, _) = graft.operators.Incremental.nearDedupDelta(
           nDocs, manifest1, "shard", storeAtRest, "id", "text",
@@ -528,11 +528,11 @@ object ScaleSmoke {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_staged"),
               s"$stateRoot/state", IncrState.SemStoreVersion,
-              Seq("cell"), Seq("cell"), buckets = 128))
+              Seq("cell"), buckets = 128))
         }
         val stateAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/state",
           IncrState.SemStoreVersion, acceptUnversioned = false,
-          Seq("cell"), Seq("cell"), sys.error("store missing"))
+          Seq("cell"), sys.error("store missing"))
         val cents = spark.read.parquet(s"$stateRoot/_cents")
         val (_, r2, w2) = t(spark, s"semdedup_delta d2 (bucketed store at rest) delta=$nDelta") {
           val (verdicts, _) = Incremental.semDedupDelta(
@@ -580,11 +580,11 @@ object ScaleSmoke {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_staged"),
               s"$stateRoot/vocab", IncrState.VocabStoreVersion,
-              Seq("term"), Seq("term"), buckets = 128))
+              Seq("term"), buckets = 128))
         }
         val vocabAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/vocab",
           IncrState.VocabStoreVersion, acceptUnversioned = false,
-          Seq("term"), Seq("term"), sys.error("store missing"))
+          Seq("term"), sys.error("store missing"))
         val (_, r2, w2) = t(spark, s"vocab_delta d2 (bucketed store at rest) delta=${n / 80}") {
           val (rep, _) = Incremental.vocabDelta(
             d, manifest1, "shard", vocabAtRest, "text", materializeState = false)
@@ -654,23 +654,23 @@ object ScaleSmoke {
           IncrState.commitAll(manifest1, s"$stateRoot/manifest",
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_stagedT"),
               s"$stateRoot/train_grams", IncrState.GramStoreVersion,
-              Seq("g"), Seq("g"), buckets = 128),
+              Seq("g"), buckets = 128),
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_stagedE"),
               s"$stateRoot/eval_grams", IncrState.GramStoreVersion,
-              Seq("g"), Seq("g"), buckets = 128),
+              Seq("g"), buckets = 128),
             IncrState.Staged(spark.read.parquet(s"$stateRoot/_stagedH"),
               s"$stateRoot/hits", IncrState.GramStoreVersion,
-              Seq("doc_id"), Seq("doc_id"), buckets = 128))
+              Seq("doc_id"), buckets = 128))
         }
         val trainAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/train_grams",
           IncrState.GramStoreVersion, acceptUnversioned = false,
-          Seq("g"), Seq("g"), sys.error("train store missing"))
+          Seq("g"), sys.error("train store missing"))
         val evalAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/eval_grams",
           IncrState.GramStoreVersion, acceptUnversioned = false,
-          Seq("g"), Seq("g"), sys.error("eval store missing"))
+          Seq("g"), sys.error("eval store missing"))
         val hitsAtRest = IncrState.readOrBucketed(spark, s"$stateRoot/hits",
           IncrState.GramStoreVersion, acceptUnversioned = false,
-          Seq("doc_id"), Seq("doc_id"), sys.error("hits store missing"))
+          Seq("doc_id"), sys.error("hits store missing"))
         val (_, r2, w2) = t(spark, s"contamination_delta d2 (bucketed stores at rest) delta=${3 * n / 80}") {
           val (_, _, h2) = Incremental.contaminationDelta(
             docs, manifest1, "shard", trainAtRest, evalAtRest, hitsAtRest,
@@ -787,13 +787,15 @@ object ScaleSmoke {
       require(g.getLong(3) == 0L, s"uniform gini ${g.getLong(3)} != 0")
     }
     t(spark, s"rolling_distinct n=$n") {
-      // key k active every day → every full 7-day window counts all keys
+      // key k active every day → every full 7-day window counts all keys;
+      // each day holds n/30 or more consecutive values of doc_id div 30
+      val keys = math.min(5000L, n / 30)
       val ev = docs.select(
         date_add(lit(java.sql.Date.valueOf("2024-01-01")),
           (col("doc_id") % 30).cast("int")).as("d"),
-        (expr("doc_id div 30") % 5000).as("k")) // independent of the day coord
+        (expr("doc_id div 30") % keys).as("k")) // independent of the day coord
       val out = graft.operators.Temporal.rollingDistinct(ev, "d", "k", 7)
-      val low = out.filter(col("active_keys") < 5000L).count()
+      val low = out.filter(col("active_keys") < keys).count()
       require(low == 0, s"$low windows lost keys")
     }
     t(spark, s"ordinal_assoc n=$n") {
@@ -823,12 +825,16 @@ object ScaleSmoke {
       require(sk.exists(_.getString(0) == "hot"), "heavy hitter lost at scale")
     }
     t(spark, s"hilbert n=$n") {
-      // bijectivity of the curve key over the full normalized grid at n rows
-      val pts = docs.select((col("doc_id") % 256).as("x"),
-        (expr("doc_id div 256") % 256).as("y"))
+      // bijectivity of the curve key over the largest aligned grid the n
+      // rows fill (the full 256×256 grid from n = 65536): the curve maps
+      // [0, side)² onto [0, side²)
+      val side = Iterator.iterate(256L)(_ / 2).find(s => s * s <= n).get
+      val pts = docs.select((col("doc_id") % side).as("x"),
+        (expr(s"doc_id div $side") % side).as("y"))
       val h = graft.operators.Layout.hilbert8(pts, "x", "y", "h")
       val mm = h.agg(min("h"), max("h"), count_distinct(col("h"))).head()
-      require(mm.getLong(0) == 0L && mm.getLong(1) == 65535L && mm.getLong(2) == 65536L)
+      require(mm.getLong(0) == 0L && mm.getLong(1) == side * side - 1 &&
+        mm.getLong(2) == side * side)
     }
     t(spark, s"psar n=$n keys=1000") {
       // 1000 parallel symbol partitions, deterministic jagged bars; exactly
@@ -1065,7 +1071,7 @@ object ScaleSmoke {
       val keepsPerGrp = two.groupBy(_._3).values.map(_.count(_._4))
       require(keepsPerGrp.forall(_ == 1), "every group must keep exactly one member")
     }
-    t(spark, s"ivf_retrain n=${n / 10} dim=8 cells=16 queries=${n / 10 / 10000}") {
+    t(spark, s"ivf_retrain n=${n / 10} dim=8 cells=16 queries=${(n / 10 + 9998) / 10000}") {
       // the ivf_delta fixture through the full drift→retrain→repair→recall
       // chain: the report must hold its invariants (two phases, total =
       // queries×k, hits ≤ total, recall exact-rational) while every stage
@@ -1087,7 +1093,7 @@ object ScaleSmoke {
           vecs, Seq("s0").toDF("shard"), "shard", cents, "vec_id", "embedding",
           queryPred = col("vec_id") % 10000 === 1, k = 10, nProbe = 2)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      val nq = m / 10000
+      val nq = (m + 9998) / 10000 // the ids ≡ 1 (mod 10000) in [0, m)
       Seq("before", "after").foreach { ph =>
         val (hits, total, bp) = out(ph)
         require(total == nq * 10, s"$ph total $total != ${nq * 10}")

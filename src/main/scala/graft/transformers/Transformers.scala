@@ -1,10 +1,12 @@
 package graft.transformers
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, LongType, StringType, StructType}
 import graft.core.{Registries, Transformer}
 import graft.core.PluginConfig._
-import graft.operators.{Cleaning, Indicators, Validation}
+import graft.operators.{Cleaning, Dedup, Incremental, Indicators, Similarity, Validation}
 
 /** Config-driven transformer plugins wrapping the operator library — the four
   * transformer types of the reference
@@ -319,50 +321,31 @@ object Transformers {
         minTokens = minTokens, threshold = threshold)
   }
 
-  /** Incremental EXACT dedup as a config-driven pipeline stage — the
-    * state-travel family ([[graft.operators.Incremental.dedupDelta]])
-    * exposed through the SAME engine machinery that drives the reference's
-    * cursor-style incrementality (S9–S11): `state_dir` holds the
-    * processed-shard manifest and the md5 fingerprint store as parquet;
-    * each run deduplicates ONLY the shards the manifest doesn't cover —
-    * against the store and within the delta — and emits the survivors.
-    * The grown state is STAGED at transform time and persisted by the
-    * engine's post-load [[graft.core.StatefulTransformer.commit]] hook,
-    * the cursor's save-after-load discipline extended to operator state: a
-    * failed load leaves both stores untouched, so the next run re-processes
-    * the same delta (EnginePipelineSpec pins this with a failing loader).
-    *
-    * Scale: state IO is store-sized parquet (production would bucket the
-    * fingerprint store by `fp` so only the delta side of the anti-join
-    * moves — BucketedJoinSpec's layout); the commit's rewrite-the-store
-    * write is the simple-filesystem stand-in for a transactional table
-    * format, staged to a temp dir and swapped in.
-    */
-  /** Parquet state IO shared by the incremental stage plugins: read a
-    * store directory or bootstrap from a schema-matched empty frame, and
-    * commit the grown store by writing a temp sibling (the plan READS the
-    * old store) then swapping — crash-safe up to the final directory move
-    * (the simple-filesystem stand-in for a transactional table format).
-    *
-    * Round 14:
-    *  - all path operations go through Hadoop `FileSystem`, so a
-    *    `state_dir` on hdfs:// or s3a:// behaves like a local one (the
-    *    java.nio calls this replaces silently saw every remote store as
-    *    "missing" and re-bootstrapped empty state every run);
-    *  - swaps are RENAME-ASIDE (live → .bak, tmp → live, delete .bak): no
-    *    window where the live store is deleted but its replacement not yet
-    *    in place. A crash inside the narrow rename window leaves a `.bak`
-    *    that reads fail LOUDLY on (with the recovery rename spelled out)
-    *    instead of silently bootstrapping an empty store over history;
-    *  - stores carry a `_GRAFT_STATE_VERSION` stamp: readers reject a
-    *    store whose values a kernel change invalidated (the round-14
-    *    61-bit MinHash migration) instead of silently mixing hash spaces;
-    *  - partial state (manifest without stores, or vice versa) fails
-    *    loudly instead of half-bootstrapping;
-    *  - id/band-keyed stores persist BUCKETED (bucketBy + a catalog
-    *    re-register on read), so a delivery's store-side joins read
-    *    co-located — only the delta moves, at rest, without broadcast
-    *    hints (the BucketedJoinSpec layout).
+  /** Carried operator state under a stage's `state_dir`: the processed-
+    * shard manifest plus the stage's stores, as parquet, all path
+    * operations through Hadoop `FileSystem` (a `state_dir` on hdfs:// or
+    * s3a:// behaves like a local one). [[Stage]] is the one owner of the
+    * protocol; it enforces:
+    *  - save-after-load: `transform` only STAGES the grown manifest and
+    *    stores; the engine calls `commit()` after a successful load, so a
+    *    failed load leaves every store as the last loaded delivery left it
+    *    and the next run re-processes the same delta (the reference's cursor
+    *    discipline extended to operator state);
+    *  - all-or-nothing presence: the manifest and the stores exist together
+    *    or not at all; partial state fails loudly instead of bootstrapping
+    *    empty state beside history;
+    *  - version gate: each store carries a `_GRAFT_STATE_VERSION` stamp; a
+    *    store whose values a kernel change invalidated (the 61-bit MinHash
+    *    migration) is rejected, never mixed, and a version-gated store that
+    *    makes the state look partial gets the rebuild message instead;
+    *  - bucketed layout carried in the stamp (`<version>;buckets=N`): the
+    *    reader re-registers the store with that layout, so a delivery's
+    *    store-side joins read co-located and only the delta moves; a store
+    *    without the rider reads as plain parquet;
+    *  - rename-aside swap: every grown store writes to a temp sibling first
+    *    (its plan still READS the old store), then each swaps in as live →
+    *    `.bak`, tmp → live, delete `.bak`; a `.bak` left by a crash inside
+    *    that window fails reads loudly with the recovery rename.
     */
   private[graft] object IncrState {
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -453,9 +436,8 @@ object Transformers {
       * manifest, no band_index) must be told "clear the state_dir and
       * re-deliver", because restoring the missing dir is impossible for it.
       */
-    def requireTogether(spark: SparkSession, what: String,
-        paths: Map[String, String],
-        versions: Map[String, String] = Map.empty): Unit = {
+    private def requireTogether(spark: SparkSession, what: String,
+        paths: Map[String, String], versions: Map[String, String]): Unit = {
       paths.foreach { case (nm, p) =>
         if (!dirExists(spark, p) && dirExists(spark, s"$p.bak"))
           throw new IllegalStateException(
@@ -518,14 +500,8 @@ object Transformers {
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
     }
 
-    def readOr(spark: SparkSession, path: String, expect: String,
-        acceptUnversioned: Boolean, fallback: => DataFrame): DataFrame =
-      if (dirExists(spark, path)) {
-        checkVersion(spark, path, expect, acceptUnversioned)
-        if (hasParquet(spark, path)) spark.read.parquet(path) else fallback
-      } else fallback
-
-    /** Read a store committed by [[writeTmpBucketed]] with its bucketing
+    /** Read a store, or `fallback` when it is missing or committed empty.
+      * A store committed by [[writeTmpBucketed]] reads with its bucketing
       * VISIBLE to the planner: datasource-table bucket metadata lives in
       * the (session-scoped) catalog, so re-register an external table over
       * the store path with the layout the version stamp guarantees. A
@@ -533,7 +509,7 @@ object Transformers {
       */
     def readOrBucketed(spark: SparkSession, path: String, expect: String,
         acceptUnversioned: Boolean, bucketCols: Seq[String],
-        sortCols: Seq[String], fallback: => DataFrame): DataFrame =
+        fallback: => DataFrame): DataFrame =
       if (dirExists(spark, path)) {
         checkVersion(spark, path, expect, acceptUnversioned)
         val stamp = readVersion(spark, path)
@@ -544,7 +520,7 @@ object Transformers {
         // bucket-pruned joins (e.g. an r14-era hits store read by the
         // round-15 doc_id-bucketed path)
         if (!hasParquet(spark, path)) fallback // empty committed store
-        else if (stamp.isEmpty || stamp.flatMap(bucketsPart).isEmpty)
+        else if (bucketCols.isEmpty || stamp.flatMap(bucketsPart).isEmpty)
           spark.read.parquet(path)
         else {
           val buckets = stamp.flatMap(bucketsPart).get
@@ -557,11 +533,10 @@ object Transformers {
           val colsDdl = schema.fields
             .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
           spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+          val cols = bucketCols.map(c => s"`$c`").mkString(", ")
           spark.sql(
             s"""CREATE TABLE `$tbl` ($colsDdl) USING parquet
-               |CLUSTERED BY (${bucketCols.map(c => s"`$c`").mkString(", ")})
-               |${if (sortCols.nonEmpty) s"SORTED BY (${sortCols.map(c => s"`$c`").mkString(", ")})" else ""}
-               |INTO $buckets BUCKETS
+               |CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS
                |LOCATION '${qualified(spark, path)}'""".stripMargin)
           spark.table(tbl)
         }
@@ -571,8 +546,7 @@ object Transformers {
       * non-empty ⇒ committed via bucketBy in the StateBuckets layout.
       */
     case class Staged(df: DataFrame, path: String, version: String,
-        bucketCols: Seq[String] = Nil, sortCols: Seq[String] = Nil,
-        buckets: Int = StateBuckets)
+        bucketCols: Seq[String] = Nil, buckets: Int = StateBuckets)
 
     /** Two-phase store(s)+manifest commit: EVERY frame writes to a temp
       * sibling first (their plans still read the old stores), then the
@@ -594,7 +568,7 @@ object Transformers {
       val tStores = stores.map { s =>
         val tmp =
           if (s.bucketCols.isEmpty) writeTmp(s.df, s.path)
-          else writeTmpBucketed(s.df, s.path, s.bucketCols, s.sortCols, s.buckets)
+          else writeTmpBucketed(s.df, s.path, s.bucketCols, s.buckets)
         stampVersion(spark, tmp,
           if (s.bucketCols.isEmpty) s.version else s"${s.version};buckets=${s.buckets}")
         (tmp, s.path)
@@ -603,13 +577,6 @@ object Transformers {
       swap(spark, tMani, manifestPath)
       tStores.foreach { case (tmp, path) => swap(spark, tmp, path) }
     }
-
-    def commitPair(store: DataFrame, storePath: String, version: String,
-        manifest: DataFrame, manifestPath: String,
-        bucketCols: Seq[String] = Nil, sortCols: Seq[String] = Nil,
-        buckets: Int = StateBuckets): Unit =
-      commitAll(manifest, manifestPath,
-        Staged(store, storePath, version, bucketCols, sortCols, buckets))
 
     private def writeTmp(df: DataFrame, path: String): String = {
       val tmp = s"$path.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -625,14 +592,14 @@ object Transformers {
       * the carried side.
       */
     private def writeTmpBucketed(df: DataFrame, path: String,
-        bucketCols: Seq[String], sortCols: Seq[String], buckets: Int): String = {
+        bucketCols: Seq[String], buckets: Int): String = {
       val id = java.util.UUID.randomUUID().toString.take(8)
       val tmp = s"$path.tmp-$id"
       val tbl = s"graft_state_tmp_$id"
-      val w0 = df.write.bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      val w = (if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0)
+      df.write.bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+        .sortBy(bucketCols.head, bucketCols.tail: _*)
         .option("path", qualified(df.sparkSession, tmp)).mode("overwrite")
-      w.saveAsTable(tbl)
+        .saveAsTable(tbl)
       df.sparkSession.sql(s"DROP TABLE `$tbl`")
       tmp
     }
@@ -656,7 +623,7 @@ object Transformers {
       * source (JDBC, API) is never re-queried after the load, and the
       * committed state can never describe rows that were not loaded.
       */
-    def snapshot(df: DataFrame): DataFrame = df.localCheckpoint(false)
+    private def snapshot(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
     def requireCols(what: String, df: DataFrame, cols: Seq[String]): Unit = {
       val have = df.columns.toSet
@@ -664,115 +631,150 @@ object Transformers {
         s"$what: requires columns ${cols.mkString("'", "', '", "'")}, " +
           s"got ${have.mkString(", ")}")
     }
-  }
 
-  class IncrementalDedupTransformer(conf: Conf) extends graft.core.StatefulTransformer {
-    private val idCol = conf.strOr("id_column", "doc_id")
-    private val buckets = conf.intOr("state_buckets", IncrState.StateBuckets)
-    private val textCol = conf.strOr("text_column", "text")
-    private val shardCol = conf.strOr("shard_column", "source")
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_dedup: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame)] = None
+    /** A read-only consumer's view of a committed, version-gated store: a
+      * missing or empty store fails with `missing` instead of reading as
+      * empty (serving from an uncommitted index must never silently return
+      * nothing).
+      */
+    def readCommitted(spark: SparkSession, path: String, version: String,
+        missing: => String): DataFrame =
+      readOrBucketed(spark, path, version, acceptUnversioned = false, Nil,
+        throw new IllegalStateException(missing))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_dedup", df, Seq(idCol, textCol, shardCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      IncrState.requireTogether(spark, "incremental_dedup", Map(
-        "fingerprints" -> s"$stateDir/fingerprints",
-        "manifest" -> s"$stateDir/manifest"))
-      // bucketed by fp at rest: the delta's anti-join lands in the store's
-      // buckets — only the delta side shuffles (the operator's documented
-      // production layout). Pre-stamping stores read plain (md5 values are
-      // kernel-independent) and upgrade to the bucketed layout on commit.
-      val fps = IncrState.readOrBucketed(spark, s"$stateDir/fingerprints",
-        IncrState.FpStoreVersion, acceptUnversioned = true,
-        Seq("fp"), Seq("fp"),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new org.apache.spark.sql.types.StructType()
-            .add("fp", org.apache.spark.sql.types.StringType)))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.FpStoreVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (survivors, newFps) = graft.operators.Incremental.dedupDelta(
-        df, manifest, shardCol, fps, idCol, textCol)
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((newFps, newManifest))
-      survivors
+    /** The codebook `(c_id, cv, cn)` stored as parquet `(c_id, cv[, cn])`
+      * at `path` — e.g. a [[Similarity.kmeansCentroids]] dump; `cn` is
+      * derived from `cv` when absent.
+      */
+    def codebook(spark: SparkSession, what: String, path: String): DataFrame = {
+      val raw = spark.read.parquet(path)
+      require(raw.columns.contains("c_id") && raw.columns.contains("cv"),
+        s"$what: centroids at $path need (c_id, cv), got ${raw.columns.mkString(", ")}")
+      if (raw.columns.contains("cn")) raw.select(col("c_id"), col("cv"), col("cn"))
+      else raw.select(col("c_id"), col("cv"), Similarity.norm(col("cv")).as("cn"))
     }
 
-    def commit(): Unit = staged.foreach { case (fps, manifest) =>
-      IncrState.commitPair(fps, s"$stateDir/fingerprints",
-        IncrState.FpStoreVersion, manifest, s"$stateDir/manifest",
-        bucketCols = Seq("fp"), sortCols = Seq("fp"), buckets = buckets)
-      staged = None
+    /** One store of a [[Stage]]: its directory under `state_dir`, version
+      * stamp, at-rest bucket columns (empty = plain parquet), whether an
+      * unstamped legacy store is accepted (kinds whose values no kernel
+      * change invalidates), and the frame a first delivery starts from,
+      * given the stage input.
+      */
+    case class Store(name: String, version: String, init: DataFrame => DataFrame,
+        bucketCols: Seq[String] = Nil, acceptUnversioned: Boolean = false)
+
+    /** The empty frame of `schema`, as a [[Store]]'s `init`. */
+    def empty(schema: StructType): DataFrame => DataFrame =
+      in => in.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+    /** The base of every stateful stage. A stage declares its [[stores]],
+      * its required columns and one [[step]]; the base reads `state_dir`,
+      * `shard_column` and `state_buckets`, snapshots the input, checks
+      * presence and versions, reads the manifest and every store, grows
+      * the manifest by the delivery's shards and stages the result for
+      * [[commit]].
+      */
+    abstract class Stage(conf: Conf, kind: String) extends graft.core.StatefulTransformer {
+      protected val shardCol: String = conf.strOr("shard_column", "source")
+      private val buckets = conf.intOr("state_buckets", StateBuckets)
+      protected val stateDir: String = conf.str("state_dir").getOrElse(
+        throw new IllegalArgumentException(s"$kind: state_dir is required"))
+      private var staged: Option[(DataFrame, Map[String, DataFrame])] = None
+
+      /** The carried stores, in commit order. */
+      protected def stores: Seq[Store]
+      /** The input columns the stage reads, in the order errors name them. */
+      protected def requiredCols: Seq[String]
+      /** One delivery: the snapshot input, the carried manifest and stores
+        * by name ⇒ the stage output and every grown store by name.
+        */
+      protected def step(df: DataFrame, manifest: DataFrame,
+          carried: Map[String, DataFrame]): (DataFrame, Map[String, DataFrame])
+
+      override def validate(df: DataFrame): Unit = requireCols(kind, df, requiredCols)
+
+      def transform(df0: DataFrame): DataFrame = {
+        val df = IncrState.snapshot(df0)
+        val spark = df.sparkSession
+        def dir(name: String) = s"$stateDir/$name"
+        requireTogether(spark, kind,
+          ListMap(stores.map(s => s.name -> dir(s.name)) :+ ("manifest" -> dir("manifest")): _*),
+          stores.filterNot(_.acceptUnversioned).map(s => s.name -> s.version).toMap)
+        val carried = stores.map(s => s.name -> readOrBucketed(spark, dir(s.name),
+          s.version, s.acceptUnversioned, s.bucketCols, s.init(df))).toMap
+        // the manifest carries no stamp
+        val manifest = readOrBucketed(spark, dir("manifest"), stores.head.version,
+          acceptUnversioned = true, Nil, df.select(col(shardCol)).limit(0))
+        val (out, grown) = step(df, manifest, carried)
+        staged = Some((manifest.select(col(shardCol))
+          .union(df.select(col(shardCol))).distinct(), grown))
+        out
+      }
+
+      def commit(): Unit = staged.foreach { case (manifest, grown) =>
+        commitAll(manifest, s"$stateDir/manifest", stores.map(s => Staged(
+          grown(s.name), s"$stateDir/${s.name}", s.version, s.bucketCols, buckets)): _*)
+        staged = None
+      }
+    }
+  }
+
+  /** Incremental EXACT dedup ([[graft.operators.Incremental.dedupDelta]])
+    * as a pipeline stage: the carried md5 fingerprint store, bucketed by
+    * `fp` so the delta's anti-join lands in the store's buckets and only
+    * the delta side shuffles. A run deduplicates ONLY the shards the
+    * manifest doesn't cover — against the store and within the delta — and
+    * emits the survivors. Fingerprints are kernel-independent, so an
+    * unstamped legacy store reads plain and upgrades on commit.
+    */
+  class IncrementalDedupTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_dedup") {
+    private val idCol = conf.strOr("id_column", "doc_id")
+    private val textCol = conf.strOr("text_column", "text")
+    protected def requiredCols = Seq(idCol, textCol, shardCol)
+    protected val stores = Seq(IncrState.Store("fingerprints", IncrState.FpStoreVersion,
+      IncrState.empty(new StructType().add("fp", StringType)), Seq("fp"),
+      acceptUnversioned = true))
+
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val (survivors, fps) = Incremental.dedupDelta(
+        df, manifest, shardCol, carried("fingerprints"), idCol, textCol)
+      (survivors, Map("fingerprints" -> fps))
     }
   }
 
   /** [[IncrementalDedupTransformer]]'s banded-LSH sibling — mx26's
     * [[graft.operators.Incremental.nearDedupDelta]] as a config-driven
-    * stage: the carried `(doc_id, sig, bk)` MinHash-signature store and
-    * the processed-shard manifest live as parquet under `state_dir`, a
-    * run near-deduplicates only uncovered shards against (store ∪ delta),
-    * and the grown store commits save-after-load. `broadcast_delta: true`
-    * opts into the scan-only store path for shard-sized deliveries
-    * (measured 25× less delivery shuffle at a 20M-doc store — SCALE.md
-    * round 13).
+    * stage: the carried `(doc_id, sig, bk)` MinHash-signature store
+    * (bucketed by doc_id, so the verify join's store side reads
+    * co-located) and its `(doc_id, band, key)` band index (bucketed by
+    * (band, key), so the banding join does); a run near-deduplicates only
+    * uncovered shards against (store ∪ delta). Both stores are
+    * value-version-gated: a pre-round-14 signature store was computed in
+    * the 32-bit hash space and is NOT comparable to current signatures.
+    * `broadcast_delta: true` opts into the scan-only store path for
+    * shard-sized deliveries (measured 25× less delivery shuffle at a
+    * 20M-doc store — SCALE.md round 13).
     */
-  class IncrementalNearDedupTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalNearDedupTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_near_dedup") {
     private val idCol = conf.strOr("id_column", "doc_id")
-    private val buckets = conf.intOr("state_buckets", IncrState.StateBuckets)
     private val textCol = conf.strOr("text_column", "text")
-    private val shardCol = conf.strOr("shard_column", "source")
     private val shingleK = conf.intOr("shingle_k", 3)
     private val bands = conf.intOr("bands", 16)
     private val rowsPerBand = conf.intOr("rows_per_band", 4)
     private val maxBucket = conf.intOr("max_bucket", 100000)
     private val broadcastDelta = conf.bool("broadcast_delta")
-    // the carried store arrives from parquet: scanning it per consumer
-    // beats writing a transient state-sized checkpoint copy first — the
-    // operator's own documented storage discipline, so the default is OFF
-    private val materializeState = conf.bool("materialize_state")
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_near_dedup: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame)] = None
+    protected def requiredCols = Seq(idCol, textCol, shardCol)
+    private def noSigs(in: DataFrame) = Dedup.minhashSignaturesWithBands(
+      in.limit(0), idCol, textCol, shingleK, bands * rowsPerBand, bands)
+    protected val stores = Seq(
+      IncrState.Store("signatures", IncrState.SigStoreVersion, noSigs, Seq("doc_id")),
+      IncrState.Store("band_index", IncrState.BandIndexVersion,
+        in => Dedup.bandIndex(noSigs(in)), Seq("band", "key")))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_near_dedup", df, Seq(idCol, textCol, shardCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      IncrState.requireTogether(spark, "incremental_near_dedup", Map(
-        "signatures" -> s"$stateDir/signatures",
-        "band_index" -> s"$stateDir/band_index",
-        "manifest" -> s"$stateDir/manifest"),
-        // a pre-round-14 store (signatures without band_index) is partial
-        // AND unmigratable — the stamp check turns "restore the missing
-        // dirs" into the correct "clear the state_dir and re-deliver"
-        versions = Map("signatures" -> IncrState.SigStoreVersion,
-          "band_index" -> IncrState.BandIndexVersion))
-      // value-version-gated (acceptUnversioned = false): a pre-round-14
-      // signature store was computed in the 32-bit hash space and is NOT
-      // comparable to current signatures — reject loudly, never mix.
-      // Bucketed by doc_id at rest so the verify join's store side reads
-      // co-located; the banding side reads the (band, key)-bucketed index.
-      val sigs = IncrState.readOrBucketed(spark, s"$stateDir/signatures",
-        IncrState.SigStoreVersion, acceptUnversioned = false,
-        Seq("doc_id"), Seq("doc_id"),
-        graft.operators.Dedup.minhashSignaturesWithBands(
-          df.limit(0), idCol, textCol, shingleK, bands * rowsPerBand, bands))
-      val bandIdx =
-        if (stagedFirstRun(spark)) None
-        else Some(IncrState.readOrBucketed(spark, s"$stateDir/band_index",
-          IncrState.BandIndexVersion, acceptUnversioned = false,
-          Seq("band", "key"), Seq("band", "key"),
-          graft.operators.Dedup.bandIndex(sigs.limit(0))))
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val sigs = carried("signatures")
       // a store trained under DIFFERENT banding parameters must fail fast:
       // zip_with over mismatched signature lengths null-pads, the verify
       // predicate goes null, and every store-side pair silently drops
@@ -783,94 +785,37 @@ object Transformers {
             s"bands=$bands — signature stores are parameter-bound; retrain or " +
             "point state_dir elsewhere")
       }
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.SigStoreVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (survivors, newSigs) = graft.operators.Incremental.nearDedupDelta(
+      // the carried store arrives from parquet: scanning it per consumer
+      // beats writing a transient state-sized checkpoint copy first
+      val (survivors, grown) = Incremental.nearDedupDelta(
         df, manifest, shardCol, sigs, idCol, textCol,
         shingleK = shingleK, bands = bands, rowsPerBand = rowsPerBand,
-        maxBucket = maxBucket, materializeState = materializeState,
-        broadcastDelta = broadcastDelta, priorBandIndex = bandIdx)
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((newSigs, newManifest))
-      survivors
-    }
-
-    private def stagedFirstRun(spark: org.apache.spark.sql.SparkSession): Boolean = {
-      // band_index arrived with the v2 layout; requireTogether already
-      // rejected half-present state, so "missing" here means bootstrap
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/band_index")
-      !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-
-    def commit(): Unit = staged.foreach { case (sigs, manifest) =>
-      // the band index is the exploded view of the SAME grown signature
-      // frame — committed beside it so the next delivery's banding join
-      // reads (band, key)-co-located. Both stores rewrite in full (the
-      // swap design's cost; a transactional table format would append) but
-      // the bucketed writes are shuffle-free.
-      IncrState.commitAll(manifest, s"$stateDir/manifest",
-        IncrState.Staged(sigs, s"$stateDir/signatures",
-          IncrState.SigStoreVersion, Seq("doc_id"), Seq("doc_id"), buckets = buckets),
-        IncrState.Staged(graft.operators.Dedup.bandIndex(sigs),
-          s"$stateDir/band_index",
-          IncrState.BandIndexVersion, Seq("band", "key"), Seq("band", "key"),
-          buckets = buckets))
-      staged = None
+        maxBucket = maxBucket, materializeState = false,
+        broadcastDelta = broadcastDelta, priorBandIndex = Some(carried("band_index")))
+      (survivors, Map("signatures" -> grown, "band_index" -> Dedup.bandIndex(grown)))
     }
   }
 
   /** The vocabulary/document-frequency store ([[graft.operators
     * .Incremental.vocabDelta]]) as a config-driven stage: carried
-    * `(term, df)` state under `state_dir`, delta-only tokenization, and
-    * the stage's OUTPUT is the touched-term drift report
+    * `(term, df)` state, bucketed by term so the delta-count merge join
+    * lands in the store's buckets, and delta-only tokenization. The
+    * stage's OUTPUT is the touched-term drift report
     * `(term, df_prior, df_delta, df_total)` — the feed a tokenizer health
-    * monitor loads (new terms are `df_prior = 0`). Store commits
-    * save-after-load like its siblings.
+    * monitor loads (new terms are `df_prior = 0`).
     */
-  class IncrementalVocabTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalVocabTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_vocab") {
     private val textCol = conf.strOr("text_column", "text")
-    private val buckets = conf.intOr("state_buckets", IncrState.StateBuckets)
-    private val shardCol = conf.strOr("shard_column", "source")
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_vocab: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame)] = None
+    protected def requiredCols = Seq(textCol, shardCol)
+    protected val stores = Seq(IncrState.Store("vocab", IncrState.VocabStoreVersion,
+      IncrState.empty(new StructType().add("term", StringType).add("df", LongType)),
+      Seq("term"), acceptUnversioned = true))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_vocab", df, Seq(textCol, shardCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      IncrState.requireTogether(spark, "incremental_vocab", Map(
-        "vocab" -> s"$stateDir/vocab", "manifest" -> s"$stateDir/manifest"))
-      // bucketed by term at rest: the delta-count merge join lands in the
-      // store's buckets, only the delta's term counts shuffle
-      val vocab = IncrState.readOrBucketed(spark, s"$stateDir/vocab",
-        IncrState.VocabStoreVersion, acceptUnversioned = true,
-        Seq("term"), Seq("term"),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new org.apache.spark.sql.types.StructType()
-            .add("term", org.apache.spark.sql.types.StringType)
-            .add("df", org.apache.spark.sql.types.LongType)))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.VocabStoreVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (report, newVocab) = graft.operators.Incremental.vocabDelta(
-        df, manifest, shardCol, vocab, textCol)
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((newVocab, newManifest))
-      report
-    }
-
-    def commit(): Unit = staged.foreach { case (vocab, manifest) =>
-      IncrState.commitPair(vocab, s"$stateDir/vocab",
-        IncrState.VocabStoreVersion, manifest, s"$stateDir/manifest",
-        bucketCols = Seq("term"), sortCols = Seq("term"), buckets = buckets)
-      staged = None
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val (report, vocab) = Incremental.vocabDelta(
+        df, manifest, shardCol, carried("vocab"), textCol)
+      (report, Map("vocab" -> vocab))
     }
   }
 
@@ -878,80 +823,41 @@ object Transformers {
     * stage — the embedding-space member of the state-travel family
     * (SemDeDup, Abbas et al. 2023, arXiv:2303.09540): the carried state is
     * the full labeled vector frame `(vec_id, v, nrm, cell, cell_cos, grp,
-    * keep)` plus the shard manifest; a run semantically deduplicates ONLY
-    * uncovered shards against the carried groups (delta×touched-cell
-    * pairing, historical-label contraction, retroactive bridge merges —
-    * the mx29 semantics, oracle-pinned there). The stage OUTPUT is the
-    * delta's `(id, cell, grp, keep)` verdict frame. The quantizer arrives
-    * from `centroids_path` (parquet `(c_id, cv[, cn])` — e.g. a
-    * [[graft.operators.Similarity.kmeansCentroids]] dump) and is
-    * FROZEN for the lifetime of the state dir BY CONTRACT: group identity
-    * depends on cell pairing, so a changed codebook would silently change
-    * dedup semantics mid-history (carried rows keep their original `cell`;
-    * a delta assigned under different centroids would pair against the
-    * wrong cells). Retrain ⇒ new state_dir, full re-delivery.
+    * keep)`, bucketed by cell so the delta×store pairing reads the carried
+    * vectors co-located; a run semantically deduplicates ONLY uncovered
+    * shards against the carried groups (delta×touched-cell pairing,
+    * historical-label contraction, retroactive bridge merges — the mx29
+    * semantics, oracle-pinned there). The stage OUTPUT is the delta's
+    * `(id, cell, grp, keep)` verdict frame. The quantizer arrives from
+    * `centroids_path` ([[IncrState.codebook]]) and is FROZEN for the
+    * lifetime of the state dir BY CONTRACT: group identity depends on cell
+    * pairing, so a changed codebook would silently change dedup semantics
+    * mid-history (carried rows keep their original `cell`; a delta
+    * assigned under different centroids would pair against the wrong
+    * cells). Retrain ⇒ new state_dir, full re-delivery.
     */
-  class IncrementalSemDedupTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalSemDedupTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_sem_dedup") {
     private val idCol = conf.strOr("id_column", "vec_id")
-    private val buckets = conf.intOr("state_buckets", IncrState.StateBuckets)
     private val vecCol = conf.strOr("vector_column", "embedding")
-    private val shardCol = conf.strOr("shard_column", "source")
     private val threshold = conf.dblOr("threshold", 0.85)
     private val centroidsPath = conf.str("centroids_path").getOrElse(
       throw new IllegalArgumentException("incremental_sem_dedup: centroids_path is required"))
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_sem_dedup: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame)] = None
-
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_sem_dedup", df, Seq(idCol, vecCol, shardCol))
-
-    private def centroids(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      val raw = spark.read.parquet(centroidsPath)
-      require(raw.columns.contains("c_id") && raw.columns.contains("cv"),
-        s"incremental_sem_dedup: centroids at $centroidsPath need (c_id, cv), " +
-          s"got ${raw.columns.mkString(", ")}")
-      if (raw.columns.contains("cn")) raw.select(col("c_id"), col("cv"), col("cn"))
-      else raw.select(col("c_id"), col("cv"),
-        graft.operators.Similarity.norm(col("cv")).as("cn"))
-    }
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
-      IncrState.requireTogether(spark, "incremental_sem_dedup", Map(
-        "state" -> s"$stateDir/state", "manifest" -> s"$stateDir/manifest"))
-      import org.apache.spark.sql.types._
-      val stateSchema = new StructType()
+    protected def requiredCols = Seq(idCol, vecCol, shardCol)
+    protected val stores = Seq(IncrState.Store("state", IncrState.SemStoreVersion,
+      IncrState.empty(new StructType()
         .add("vec_id", LongType).add("v", ArrayType(DoubleType))
         .add("nrm", DoubleType).add("cell", LongType)
         .add("cell_cos", DoubleType).add("grp", LongType)
-        .add("keep", BooleanType)
-      // bucketed by cell at rest: the delta×store pairing joins on cell,
-      // so the carried vectors read co-located — only the delta moves
-      val state = IncrState.readOrBucketed(spark, s"$stateDir/state",
-        IncrState.SemStoreVersion, acceptUnversioned = false,
-        Seq("cell"), Seq("cell"),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), stateSchema))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.SemStoreVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (verdicts, newState) = graft.operators.Incremental.semDedupDelta(
-        df, manifest, shardCol, centroids(spark), state,
-        idCol, vecCol, threshold)
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((newState, newManifest))
-      verdicts
-    }
+        .add("keep", BooleanType)), Seq("cell")))
 
-    def commit(): Unit = staged.foreach { case (state, manifest) =>
-      IncrState.commitPair(state, s"$stateDir/state",
-        IncrState.SemStoreVersion, manifest, s"$stateDir/manifest",
-        bucketCols = Seq("cell"), sortCols = Seq("cell"), buckets = buckets)
-      staged = None
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val spark = df.sparkSession
+      graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
+      val (verdicts, state) = Incremental.semDedupDelta(df, manifest, shardCol,
+        IncrState.codebook(spark, "incremental_sem_dedup", centroidsPath),
+        carried("state"), idCol, vecCol, threshold)
+      (verdicts, Map("state" -> state))
     }
   }
 
@@ -969,75 +875,41 @@ object Transformers {
     * in) — the bounded, delivery-local answer to the drift signal the
     * counts expose (mx28's subject).
     */
-  class IncrementalIvfTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalIvfTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_ivf") {
     private val idCol = conf.strOr("id_column", "vec_id")
     private val vecCol = conf.strOr("vector_column", "embedding")
-    private val shardCol = conf.strOr("shard_column", "source")
     private val retrain = conf.bool("retrain")
     private val centroidsPath = conf.str("centroids_path").getOrElse(
       throw new IllegalArgumentException("incremental_ivf: centroids_path is required"))
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_ivf: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame, DataFrame)] = None
+    protected def requiredCols = Seq(idCol, vecCol, shardCol)
+    protected val stores = Seq(
+      IncrState.Store("centroids", IncrState.IvfCentroidsVersion,
+        in => IncrState.codebook(in.sparkSession, "incremental_ivf", centroidsPath)),
+      IncrState.Store("counts", IncrState.IvfCountsVersion,
+        IncrState.empty(new StructType().add("cell", LongType).add("n", LongType))))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_ivf", df, Seq(idCol, vecCol, shardCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
-      IncrState.requireTogether(spark, "incremental_ivf", Map(
-        "centroids" -> s"$stateDir/centroids", "counts" -> s"$stateDir/counts",
-        "manifest" -> s"$stateDir/manifest"))
-      import org.apache.spark.sql.types._
-      val cents = IncrState.readOr(spark, s"$stateDir/centroids",
-        IncrState.IvfCentroidsVersion, acceptUnversioned = false, {
-          val raw = spark.read.parquet(centroidsPath)
-          require(raw.columns.contains("c_id") && raw.columns.contains("cv"),
-            s"incremental_ivf: centroids at $centroidsPath need (c_id, cv), " +
-              s"got ${raw.columns.mkString(", ")}")
-          if (raw.columns.contains("cn")) raw.select(col("c_id"), col("cv"), col("cn"))
-          else raw.select(col("c_id"), col("cv"),
-            graft.operators.Similarity.norm(col("cv")).as("cn"))
-        })
-      val counts = IncrState.readOr(spark, s"$stateDir/counts",
-        IncrState.IvfCountsVersion, acceptUnversioned = false,
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new StructType().add("cell", LongType).add("n", LongType)))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.IvfCountsVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (assigned, newCounts) = graft.operators.Incremental.ivfDelta(
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      graft.functions.GraftFunctions.register(df.sparkSession) // dotp/assign_cell
+      val (cents, counts) = (carried("centroids"), carried("counts"))
+      val (assigned, _) = Incremental.ivfDelta(
         df, manifest, shardCol, cents, counts, idCol, vecCol)
       // assignment feeds the stage output, the grown counts, and (under
       // retrain) the Lloyd members — one delta-sized materialization
-      val asg = graft.operators.Dedup.cachedForReuse(
-        assigned.select(col(idCol), col("cell")))
+      val asg = Dedup.cachedForReuse(assigned.select(col(idCol), col("cell")))
       val newCents =
         if (!retrain) cents
         else {
-          val (delta, _) = graft.operators.Incremental.deltaShards(df, manifest, shardCol)
-          val members = graft.operators.Similarity.preparedCorpus(delta, idCol, vecCol)
+          val (delta, _) = Incremental.deltaShards(df, manifest, shardCol)
+          val members = Similarity.preparedCorpus(delta, idCol, vecCol)
             .join(asg.select(col(idCol).as("vec_id"), col("cell")), Seq("vec_id"))
             .select(col("cell"), col("vec_id"), col("v"))
-          graft.operators.Incremental.retrainCentroids(members, cents)
+          Incremental.retrainCentroids(members, cents)
         }
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
       val grownCounts = asg.groupBy(col("cell")).agg(count(lit(1)).as("n"))
         .unionByName(counts)
         .groupBy(col("cell")).agg(sum(col("n")).cast("long").as("n"))
-      staged = Some((newCents, grownCounts, newManifest))
-      asg
-    }
-
-    def commit(): Unit = staged.foreach { case (cents, counts, manifest) =>
-      IncrState.commitAll(manifest, s"$stateDir/manifest",
-        IncrState.Staged(counts, s"$stateDir/counts", IncrState.IvfCountsVersion),
-        IncrState.Staged(cents, s"$stateDir/centroids", IncrState.IvfCentroidsVersion))
-      staged = None
+      (asg, Map("centroids" -> newCents, "counts" -> grownCounts))
     }
   }
 
@@ -1081,27 +953,14 @@ object Transformers {
       graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
       val cents = stateDir match {
         case Some(dir) =>
-          // same state discipline as the maintenance stages: version-gated
-          // read, loud failure on a missing index (serving from an
-          // uncommitted index must never silently return zero neighbors)
-          IncrState.readOr(spark, s"$dir/centroids",
-            IncrState.IvfCentroidsVersion, acceptUnversioned = false,
-            throw new IllegalStateException(
-              s"ann_topk: no committed index at $dir/centroids — run the " +
-                "incremental_ivf maintenance pipeline first, or point " +
-                "centroids_path at a static codebook"))
-        case None =>
-          val raw = spark.read.parquet(centroidsPath.get)
-          require(raw.columns.contains("c_id") && raw.columns.contains("cv"),
-            s"ann_topk: centroids at ${centroidsPath.get} need (c_id, cv), " +
-              s"got ${raw.columns.mkString(", ")}")
-          if (raw.columns.contains("cn")) raw.select(col("c_id"), col("cv"), col("cn"))
-          else raw.select(col("c_id"), col("cv"),
-            graft.operators.Similarity.norm(col("cv")).as("cn"))
+          IncrState.readCommitted(spark, s"$dir/centroids", IncrState.IvfCentroidsVersion,
+            s"ann_topk: no committed index at $dir/centroids — run the " +
+              "incremental_ivf maintenance pipeline first, or point " +
+              "centroids_path at a static codebook")
+        case None => IncrState.codebook(spark, "ann_topk", centroidsPath.get)
       }
-      val p = graft.operators.Similarity.preparedCorpus(df, idCol, vecCol)
-      graft.operators.Similarity.ivfTopKWithCentroids(
-        p, cents, expr(queryFilter), k, nProbe)
+      val p = Similarity.preparedCorpus(df, idCol, vecCol)
+      Similarity.ivfTopKWithCentroids(p, cents, expr(queryFilter), k, nProbe)
     }
   }
 
@@ -1113,50 +972,28 @@ object Transformers {
     * order; `order_column` must be unique within a group (the operator's
     * pinned precondition). The stage OUTPUT is the delta's kept rows.
     */
-  class IncrementalQuotaTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalQuotaTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_quota") {
     private val groupCol = conf.strOr("group_column", "source")
     private val orderCol = conf.strOr("order_column", "doc_id")
-    private val shardCol = conf.strOr("shard_column", "source")
     private val quota = conf.intOr("quota", 10).toLong
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_quota: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame)] = None
+    protected def requiredCols = Seq(groupCol, orderCol, shardCol)
+    protected val stores = Seq(IncrState.Store("counts", IncrState.QuotaCountsVersion,
+      in => in.select(col(groupCol)).limit(0).withColumn("n_kept", lit(0L))))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_quota", df, Seq(groupCol, orderCol, shardCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      IncrState.requireTogether(spark, "incremental_quota", Map(
-        "counts" -> s"$stateDir/counts", "manifest" -> s"$stateDir/manifest"))
-      val counts = IncrState.readOr(spark, s"$stateDir/counts",
-        IncrState.QuotaCountsVersion, acceptUnversioned = false,
-        df.select(col(groupCol)).limit(0)
-          .withColumn("n_kept", org.apache.spark.sql.functions.lit(0L)))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.QuotaCountsVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (kept, newCounts) = graft.operators.Incremental.quotaDelta(
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val counts = carried("counts")
+      val (kept, _) = Incremental.quotaDelta(
         df, manifest, shardCol, counts, groupCol, orderCol, quota)
       // kept feeds the stage output AND the grown counts — pin one
       // evaluation (the operator's own documented consumer discipline)
-      val keptM = graft.operators.Dedup.cachedForReuse(kept)
+      val keptM = Dedup.cachedForReuse(kept)
       val grown = counts.select(col(groupCol), col("n_kept"))
         .unionByName(keptM.groupBy(col(groupCol))
           .agg(count(lit(1)).as("n_kept")))
         .groupBy(col(groupCol))
         .agg(sum(col("n_kept")).cast("long").as("n_kept"))
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((grown, newManifest))
-      keptM
-    }
-
-    def commit(): Unit = staged.foreach { case (counts, manifest) =>
-      IncrState.commitPair(counts, s"$stateDir/counts",
-        IncrState.QuotaCountsVersion, manifest, s"$stateDir/manifest")
-      staged = None
+      (keptM, Map("counts" -> grown))
     }
   }
 
@@ -1170,76 +1007,34 @@ object Transformers {
     * (boolean) marks the eval side inside the input frame. The stage
     * OUTPUT is the complete updated `(doc_id, n_grams, n_hit)` counter
     * report — the contamination monitor's feed. Gram stores commit
-    * BUCKETED by `g` so only the delta side of the gram joins moves.
+    * BUCKETED by `g` so only the delta side of the gram joins moves; the
+    * counters by doc_id, so the retroactive-increment merge reads the
+    * historical counters co-located.
     */
-  class IncrementalContaminationTransformer(conf: Conf) extends graft.core.StatefulTransformer {
+  class IncrementalContaminationTransformer(conf: Conf)
+      extends IncrState.Stage(conf, "incremental_contamination") {
     private val idCol = conf.strOr("id_column", "doc_id")
     private val textCol = conf.strOr("text_column", "text")
-    private val shardCol = conf.strOr("shard_column", "source")
     private val benchCol = conf.strOr("bench_column", "is_bench")
     private val shingleK = conf.intOr("shingle_k", 5)
-    private val buckets = conf.intOr("state_buckets", IncrState.StateBuckets)
-    private val stateDir = conf.str("state_dir").getOrElse(
-      throw new IllegalArgumentException("incremental_contamination: state_dir is required"))
-    private var staged: Option[(DataFrame, DataFrame, DataFrame, DataFrame)] = None
+    protected def requiredCols = Seq(idCol, textCol, shardCol, benchCol)
+    protected val stores = Seq(
+      IncrState.Store("train_grams", IncrState.GramStoreVersion,
+        IncrState.empty(new StructType().add("g", StringType)), Seq("g")),
+      IncrState.Store("eval_grams", IncrState.GramStoreVersion,
+        IncrState.empty(new StructType().add("doc_id", LongType).add("g", StringType)), Seq("g")),
+      IncrState.Store("hits", IncrState.GramStoreVersion,
+        IncrState.empty(new StructType().add("doc_id", LongType)
+          .add("n_grams", LongType).add("n_hit", LongType)), Seq("doc_id")))
 
-    override def validate(df: DataFrame): Unit =
-      IncrState.requireCols("incremental_contamination", df,
-        Seq(idCol, textCol, shardCol, benchCol))
-
-    def transform(df0: DataFrame): DataFrame = {
-      val df = IncrState.snapshot(df0)
-      val spark = df.sparkSession
-      IncrState.requireTogether(spark, "incremental_contamination", Map(
-        "train_grams" -> s"$stateDir/train_grams",
-        "eval_grams" -> s"$stateDir/eval_grams",
-        "hits" -> s"$stateDir/hits",
-        "manifest" -> s"$stateDir/manifest"))
-      import org.apache.spark.sql.types._
-      val trainGrams = IncrState.readOrBucketed(spark, s"$stateDir/train_grams",
-        IncrState.GramStoreVersion, acceptUnversioned = false, Seq("g"), Seq("g"),
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new StructType().add("g", StringType)))
-      val evalGrams = IncrState.readOrBucketed(spark, s"$stateDir/eval_grams",
-        IncrState.GramStoreVersion, acceptUnversioned = false, Seq("g"), Seq("g"),
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new StructType().add("doc_id", LongType).add("g", StringType)))
-      // bucketed by doc_id at rest (round 15): the retroactive-increment
-      // merge joins the full historical counter store on doc_id — bucketed,
-      // the store reads co-located and only the delta-sized increments move
-      // (an r14-era plain-committed store reads unbucketed via the
-      // stamp-rider check and upgrades on its next commit)
-      val hits = IncrState.readOrBucketed(spark, s"$stateDir/hits",
-        IncrState.GramStoreVersion, acceptUnversioned = false,
-        Seq("doc_id"), Seq("doc_id"),
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          new StructType().add("doc_id", LongType)
-            .add("n_grams", LongType).add("n_hit", LongType)))
-      val manifest = IncrState.readOr(spark, s"$stateDir/manifest",
-        IncrState.GramStoreVersion, acceptUnversioned = true,
-        df.select(col(shardCol)).limit(0))
-      val (newTrain, newEval, newHits) =
-        graft.operators.Incremental.contaminationDelta(
-          df, manifest, shardCol, trainGrams, evalGrams, hits,
-          idCol, textCol, col(benchCol) === true, shingleK = shingleK,
-          materializeState = false)
+    protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
+      val (train, eval_, hits) = Incremental.contaminationDelta(
+        df, manifest, shardCol, carried("train_grams"), carried("eval_grams"),
+        carried("hits"), idCol, textCol, col(benchCol) === true,
+        shingleK = shingleK, materializeState = false)
       // the counter report feeds the stage output AND the committed store
-      val hitsM = graft.operators.Dedup.cachedForReuse(newHits)
-      val newManifest = manifest.select(col(shardCol))
-        .union(df.select(col(shardCol))).distinct()
-      staged = Some((newTrain, newEval, hitsM, newManifest))
-      hitsM
-    }
-
-    def commit(): Unit = staged.foreach { case (train, eval_, hits, manifest) =>
-      IncrState.commitAll(manifest, s"$stateDir/manifest",
-        IncrState.Staged(train, s"$stateDir/train_grams",
-          IncrState.GramStoreVersion, Seq("g"), Seq("g"), buckets = buckets),
-        IncrState.Staged(eval_, s"$stateDir/eval_grams",
-          IncrState.GramStoreVersion, Seq("g"), Seq("g"), buckets = buckets),
-        IncrState.Staged(hits, s"$stateDir/hits", IncrState.GramStoreVersion,
-          Seq("doc_id"), Seq("doc_id"), buckets = buckets))
-      staged = None
+      val hitsM = Dedup.cachedForReuse(hits)
+      (hitsM, Map("train_grams" -> train, "eval_grams" -> eval_, "hits" -> hitsM))
     }
   }
 
