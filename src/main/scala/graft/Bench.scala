@@ -157,19 +157,15 @@ object Bench {
       try Tables(spark, sfDir, n).count() catch { case _: Throwable => () }
     }
     // drop caches a pipeline persisted for its own reuse so they don't
-    // squeeze later queries' memory: CacheManager entries (Dataset.persist)
-    // AND RDD-level blocks (the localCheckpoint reuse caches, which
-    // clearCache cannot see and ContextCleaner frees only on driver GC).
-    // EXCEPTION: blocks backing graft.queries.Shared memo entries — the
-    // cross-query frames dd11/dd12/dd14 share survive the sweep (bounded:
-    // one pair table + one label table per sf dir).
-    def sweepCaches(): Unit = {
-      spark.catalog.clearCache()
-      val keep = graft.queries.Shared.protectedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(false)
-      }
-    }
+    // squeeze later queries' memory: graft.core.Blocks.sweep frees the
+    // CacheManager entries (Dataset.persist) AND the RDD-level blocks (the
+    // localCheckpoint reuse caches, which clearCache cannot see and
+    // ContextCleaner frees only on driver GC). EXCEPTION: the blocks
+    // backing graft.queries.Shared memo entries — the cross-query frames
+    // dd11/dd12/dd14 share survive the sweep (bounded: one pair table + one
+    // label table per sf dir).
+    def sweepCaches(): Unit =
+      graft.core.Blocks.sweep(spark, keep = graft.queries.Shared.protectedRddIds)
     // Code-warm pass (see the protocol note above): run every query of the
     // slice once at the tiny warmup SF so Janino compilation and HotSpot
     // JIT of the generated kernels happen OUTSIDE the timed loop. Memo

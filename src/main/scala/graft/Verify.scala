@@ -192,8 +192,7 @@ object Verify {
             s"""{"status":"ok","checksum_error":${q(e.toString)}$bounds}"""
           }
         }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.core.Blocks.sweep(spark)
       name -> detail
     }
     // Run manifest: per-query status + content checksum, so a grader (or a

@@ -30,17 +30,4 @@ object Exact {
 
   /** Order-independent exact sum of a two-decimal double column, as double. */
   def dsum(c: Column): Column = sum(money(c)).cast(DoubleType)
-
-  /** Exact mean: exact decimal sum cast to double, divided by count (IEEE). */
-  def davg(c: Column): Column = dsum(c) / count(c)
-
-  /** Canonical 4-decimal value of an arbitrary double expression. Rounds via
-    * decimal cast; both engines agree except with probability ~ulp/1e-4 per
-    * value (negligible at our magnitudes). Use this before feeding a derived
-    * double into further exact aggregation.
-    */
-  def canon4(c: Column): Column = c.cast(DecimalType(18, 4)).cast(DoubleType)
-
-  /** Exact sum over a 4-decimal-canonical double column, as double. */
-  def dsum4(c: Column): Column = sum(c.cast(DecimalType(28, 4))).cast(DoubleType)
 }

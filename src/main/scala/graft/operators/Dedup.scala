@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Blocks
 
 /** Deduplication operators for web-scale corpora: exact (hash group-by),
   * MinHash+LSH (shingle → minhash → band → bucket-join → verify), SimHash,
@@ -37,17 +38,6 @@ object Dedup {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Cache an expensive kernel output that feeds SEVERAL downstream plan
-    * branches (band explode + both sides of a verify join) WITHOUT a
-    * session-lifetime leak. `Dataset.persist` blocks are pinned by the
-    * session's CacheManager until an explicit `unpersist()`/`clearCache()` —
-    * impossible to time correctly when the returned result is lazy (the
-    * pattern r3 removed from `Similarity.lshNearDuplicatePairs`). An
-    * RDD-level persist has no such pin: once the caller drops the returned
-    * frame (the only reference to the RDD), Spark's ContextCleaner GC hook
-    * auto-unpersists the blocks. Same cached-compute-once semantics, bounded
-    * lifetime.
-    */
   /** Run `body` (whose contained ACTIONS execute now, not lazily) with
     * adaptive query execution disabled, restoring the previous setting
     * after. For ITERATIVE loops only: each round's plan is a fixed one- or
@@ -71,6 +61,17 @@ object Dedup {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Cache an expensive kernel output that feeds SEVERAL downstream plan
+    * branches (band explode + both sides of a verify join) WITHOUT a
+    * session-lifetime leak. `Dataset.persist` blocks are pinned by the
+    * session's CacheManager until an explicit `unpersist()`/`clearCache()` —
+    * impossible to time correctly when the returned result is lazy (the
+    * pattern r3 removed from `Similarity.lshNearDuplicatePairs`). An
+    * RDD-level persist has no such pin: once the caller drops the returned
+    * frame (the only reference to the RDD), Spark's ContextCleaner GC hook
+    * auto-unpersists the blocks. Same cached-compute-once semantics, bounded
+    * lifetime.
+    */
   def cachedForReuse(df: DataFrame): DataFrame =
     // eager localCheckpoint: materializes ONCE into an RDD-level cache of
     // InternalRows (no row-format conversion on read, unlike a df.rdd
@@ -83,41 +84,15 @@ object Dedup {
     // long cluster run prefer reliable `checkpoint()` for multi-hour jobs.
     df.localCheckpoint(true)
 
-  /** [[cachedForReuse]] for a multi-consumer frame, unless it already IS
-    * materialized: a driver-local frame, or a scan of a persisted or
-    * checkpointed RDD (a prior checkpoint, possibly with empty-union
-    * branches pruned by the optimizer — a bootstrap `empty.unionByName(cp)`
-    * optimizes to `cp`'s own LogicalRDD, and re-checkpointing it would copy
-    * it once more for zero reuse). A LogicalRDD over an UNPERSISTED RDD
-    * (`createDataFrame(rdd, schema)`) re-runs its lineage per action, so it
-    * is materialized like any other plan.
+  /** [[cachedForReuse]] for a multi-consumer frame, unless it already IS a
+    * materialized table ([[Blocks.materialized]]): a driver-local frame, or
+    * a scan of a live checkpoint or persisted RDD (a prior checkpoint,
+    * possibly with empty-union branches pruned by the optimizer — a
+    * bootstrap `empty.unionByName(cp)` optimizes to `cp`'s own scan, and
+    * re-checkpointing it would copy it once more for zero reuse).
     */
   def materializedOnce(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-          if r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-            r.rdd.isCheckpointed => df
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ => cachedForReuse(df)
-    }
-
-  /** Iterative-loop lineage cut: eagerly localCheckpoint `df` and hand back
-    * the re-rooted frame plus a release thunk that unpersists the backing
-    * blocks deterministically (loops shouldn't wait for the GC-driven
-    * ContextCleaner — at scale each round's table is large). A loop of the
-    * form `x = f(x)` where `f` references `x` more than once (union + join)
-    * multiplies the LOGICAL plan size every round even when the data is
-    * cached — exponential analyzer memory, the classic iterative-Spark
-    * failure. Re-rooting each round's result on a materialized RDD keeps
-    * plan size O(1) per round.
-    */
-  private def cutLineage(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(true)
-    val release = () => cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false); ()
-    }.getOrElse(())
-    (cp, release)
-  }
+    if (Blocks.materialized(df)) df else cachedForReuse(df)
 
   /** Exact big-integer sum accumulator (long fast path, BigInteger on
     * overflow) — lets an iterative loop read a convergence statistic out of
@@ -153,59 +128,45 @@ object Dedup {
       big.add(java.math.BigInteger.valueOf(small))
   }
 
-  /** [[cutLineage]] for an (id, comp) label frame that ALSO returns the
-    * exact Σcomp, accumulated DURING the materialization job — one action
-    * per CC round instead of two. The accumulator value is read once,
-    * immediately after the eager checkpoint, and never after a cached-block
-    * recompute, so it cannot double-count from re-reads; task RETRIES can
-    * still inflate it on a real cluster, which is why
-    * [[connectedComponents]] confirms a claimed fixpoint with the
-    * retry-safe aggregate before trusting it.
+  /** Iterative-loop lineage cut over a two-long-column frame (a CC label
+    * frame (id, comp), or an edge frame (u, v)): eagerly checkpoint `df`
+    * and return the re-rooted frame with the fingerprint (count, Σ first
+    * column, Σ second column), accumulated DURING the materialization job
+    * — one action per round instead of a checkpoint plus an aggregate.
+    *
+    * A loop of the form `x = f(x)` where `f` references `x` more than once
+    * (union + join) multiplies the LOGICAL plan size every round even when
+    * the data is cached — exponential analyzer memory, the classic
+    * iterative-Spark failure. Re-rooting each round's result on a
+    * materialized RDD keeps plan size O(1) per round; the loop frees the
+    * previous round's blocks with [[Blocks.release]] once the next one is
+    * materialized (at scale each round's table is too large to wait for
+    * the GC-driven ContextCleaner).
+    *
+    * The fingerprint is read once, right after the eager checkpoint, and
+    * never after a cached-block recompute, so re-reads cannot double-count
+    * it; task RETRIES can still inflate it on a real cluster, and distinct
+    * frames can collide. Equal consecutive fingerprints are therefore only
+    * a CLAIMED fixpoint, which every caller confirms with a retry-safe
+    * exact comparison before trusting it: correctness never rests on the
+    * fingerprint, only the fast path (zero extra jobs per non-final round)
+    * does.
     */
-  /** [[cutLineageSummed]] for the star-CC loop's (u, v) edge frames: the
-    * materialization job also accumulates (count, Σu, Σv) — a fingerprint
-    * that is EQUAL for equal edge multisets. Equality of consecutive
-    * fingerprints is only a CLAIMED fixpoint (accumulators can over-count
-    * under task retries, and distinct multisets can collide): the loop
-    * confirms with the retry-safe exact count+exceptAll before exiting, so
-    * correctness never rests on the fingerprint — only the fast path
-    * (zero extra jobs per non-final round) does.
-    */
-  private def cutLineageEdgeSummed(df: DataFrame)
-      : (DataFrame, () => Unit, Seq[java.math.BigInteger]) = {
+  private def cutLineageSummed(df: DataFrame): (DataFrame, Seq[java.math.BigInteger]) = {
     val spark = df.sparkSession
-    val accs = Seq("cc_star_cnt", "cc_star_su", "cc_star_sv").map { n =>
-      val a = new BigSumAccumulator
-      spark.sparkContext.register(a, n)
-      a
+    val Array(a, b) = df.columns
+    val accs = Seq("cut_count", s"cut_sum_$a", s"cut_sum_$b").map { n =>
+      val acc = new BigSumAccumulator
+      spark.sparkContext.register(acc, n)
+      acc
     }
     import spark.implicits._
-    val pair = df.select(col("u").cast(LongType), col("v").cast(LongType))
+    val cp = df.select(col(a).cast(LongType), col(b).cast(LongType))
       .as[(Long, Long)]
       .map { t => accs(0).add(1L); accs(1).add(t._1); accs(2).add(t._2); t }
-      .toDF("u", "v")
-    val cp = pair.localCheckpoint(true)
-    val release = () => cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false); ()
-    }.getOrElse(())
-    (cp, release, accs.map(_.value))
-  }
-
-  private def cutLineageSummed(
-      df: DataFrame): (DataFrame, () => Unit, java.math.BigInteger) = {
-    val spark = df.sparkSession
-    val acc = new BigSumAccumulator
-    spark.sparkContext.register(acc, "cc_label_sum")
-    import spark.implicits._
-    val pair = df.select(col("id").cast(LongType), col("comp").cast(LongType))
-      .as[(Long, Long)]
-      .map { t => acc.add(t._2); t }
-      .toDF("id", "comp")
-    val cp = pair.localCheckpoint(true)
-    val release = () => cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false); ()
-    }.getOrElse(())
-    (cp, release, acc.value)
+      .toDF(a, b)
+      .localCheckpoint(true)
+    (cp, accs.map(_.value))
   }
 
   // ---------------------------------------------------------------- exact
@@ -235,13 +196,6 @@ object Dedup {
     array_distinct(expr(
       s"transform(sequence(1, size($tokensCol) - ${k - 1}), i -> concat_ws(' ', $parts))"))
   }
-
-  /** Distinct character n-grams over a text column (by name). Callers must
-    * pre-filter rows shorter than n characters.
-    */
-  def charNgramsExpr(textCol: String, n: Int): Column =
-    array_distinct(expr(
-      s"transform(sequence(1, length($textCol) - ${n - 1}), i -> substring($textCol, i, $n))"))
 
   // -------------------------------------------------------------- minhash
 
@@ -1109,9 +1063,10 @@ object Dedup {
         .getOrElse(java.math.BigDecimal.ZERO)
       side(0).compareTo(side(1)) == 0
     }
-    var (labels, labelsRelease, sum0) = cutLineageSummed(
+    // the claim compares Σcomp, the fingerprint's third component
+    var (labels, fp0) = cutLineageSummed(
       sym.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
-    var prevSum = sum0
+    var prevSum = fp0(2)
     var iter = 0
     var done = prevSum.signum == 0 && labels.isEmpty // empty edge set
     while (!done && iter < maxIter) {
@@ -1126,19 +1081,20 @@ object Dedup {
       val hop = labels.as("l1").join(labels.as("l2"),
           col("l1.comp") === col("l2.id"))
         .select(col("l1.id").as("id"), col("l2.comp").as("comp"))
-      val (next, nextRelease, s) = cutLineageSummed(
+      val (next, fp) = cutLineageSummed(
         labels.select("id", "comp").union(nbr).union(hop)
           .groupBy("id").agg(min("comp").as("comp")))
+      val s = fp(2)
       if (s == prevSum)            // claimed fixpoint → retry-safe confirm
         done = exactSumsEqual(labels, next)
-      labelsRelease()              // `next` is already materialized (eager
-      labels = next; labelsRelease = nextRelease // checkpoint) — releasing
-      prevSum = s                  // the old labels cannot recompute-cascade
+      Blocks.release(labels)       // `next` is already materialized (eager
+      labels = next                // checkpoint) — releasing the old labels
+      prevSum = s                  // cannot recompute-cascade
       iter += 1
     }
     sym.unpersist()
     if (!done) {
-      labelsRelease()
+      Blocks.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not reach its fixpoint within $maxIter rounds; " +
           "labels would silently diverge from transitive-closure semantics — " +
@@ -1193,13 +1149,13 @@ object Dedup {
     // final node set (for self-loop singletons) both derive from it, and
     // `pairs` can be an arbitrarily expensive upstream pipeline we must not
     // execute twice
-    val (raw, rawRelease) = cutLineage(pairs
+    val raw = cachedForReuse(pairs
       .select(col(srcCol).cast(LongType).as("u"), col(dstCol).cast(LongType).as("v")))
-    // re-rooted on a materialized RDD every round (cutLineageEdgeSummed) —
+    // re-rooted on a materialized RDD every round (cutLineageSummed) —
     // the round body references `edges` several times (sym union + two
     // grouped joins), so a carried logical plan would multiply in size per
     // round; the (count, Σu, Σv) fingerprint rides each materialization
-    var (edges, edgesRelease, stat) = cutLineageEdgeSummed(raw
+    var (edges, stat) = cutLineageSummed(raw
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct())
@@ -1280,8 +1236,7 @@ object Dedup {
         // harmless round over an empty frame)
         var done = stat.head.signum == 0
         while (!done && iter < maxIter) {
-          val (next, nextRelease, nstat) = cutLineageEdgeSummed(
-            smallStar(largeStar(edges)))
+          val (next, nstat) = cutLineageSummed(smallStar(largeStar(edges)))
           // CLAIMED fixpoint when the materialization-job fingerprints match;
           // confirmed with the retry-safe exact comparison (both sides are
           // materialized checkpoints, so releasing the old edges cannot
@@ -1292,8 +1247,8 @@ object Dedup {
               next.repartition(loopParts, col("u"), col("v"))
                 .exceptAll(edges.repartition(loopParts, col("u"), col("v")))
                 .isEmpty
-          edgesRelease()
-          edges = next; edgesRelease = nextRelease; stat = nstat
+          Blocks.release(edges)
+          edges = next; stat = nstat
           iter += 1
         }
         if (!done && iter >= maxIter) {
@@ -1324,8 +1279,8 @@ object Dedup {
       .withColumn("comp", col("id"))
     cachedForReuse(labeled.union(singletons))
     } finally {
-      rawRelease()
-      edgesRelease()
+      Blocks.release(raw)
+      Blocks.release(edges)
     }
     out
     }
@@ -1591,7 +1546,7 @@ object Dedup {
     * Loop discipline = [[connectedComponents]]'s: the edge set re-roots on
     * a materialized RDD each round (the round body references it twice),
     * with the round's edge COUNT accumulated DURING the materialization
-    * job ([[cutLineageEdgeSummed]]) — ONE action per round, no separate
+    * job ([[cutLineageSummed]]) — ONE action per round, no separate
     * count. Counts strictly decrease until the fixpoint, so an unchanged
     * fingerprint is a CLAIMED fixpoint; because accumulators can
     * over-count under task retries on a real cluster, the claim is
@@ -1615,14 +1570,14 @@ object Dedup {
     require(k >= 1, "k must be >= 1")
     val e0 = pairs.select(col(srcCol).cast(LongType).as("u"),
       col(dstCol).cast(LongType).as("v"))
-    var (edges, release, fp0) = cutLineageEdgeSummed(
+    var (edges, fp0) = cutLineageSummed(
       e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct())
     var n = fp0.head.longValueExact()
     if (n > 0 && n <= smallGraphMax) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val arr = edges.select(col("u"), col("v")).as[(Long, Long)].collect()
-      release()
+      Blocks.release(edges)
       // adjacency over the SAME symmetric deduped edge list the loop uses
       // (self-loops appear once and count once toward degree, both paths)
       val adj = scala.collection.mutable.LongMap
@@ -1660,15 +1615,15 @@ object Dedup {
       val kept = edges.join(good, Seq("u"))
         .join(good.select(col("u").as("v")), Seq("v"))
         .select(col("u"), col("v"))
-      val (cp, rel2, fp) = cutLineageEdgeSummed(kept)
+      val (cp, fp) = cutLineageSummed(kept)
       val m = fp.head.longValueExact()
-      if (m == 0) { release(); edges = cp; release = rel2; done = true }
+      if (m == 0) { Blocks.release(edges); edges = cp; done = true }
       else if (m == n) {
         // claimed fixpoint: confirm with the retry-safe exact counts
         val exactM = cp.count(); val exactN = edges.count()
-        release(); edges = cp; release = rel2
+        Blocks.release(edges); edges = cp
         if (exactM == exactN) done = true else n = exactM
-      } else { release(); edges = cp; release = rel2; n = m }
+      } else { Blocks.release(edges); edges = cp; n = m }
     }
     edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     }

@@ -876,8 +876,8 @@ object AnalyticsQueries {
       // edge row, no per-round rank⋈deg join. The raw edge frame is the
       // memoized [[Shared.partEdges]] (also consumed by q_reachability);
       // the degree-annotated copy is materialized once, pre-partitioned on
-      // the join key `u`, and its LogicalRDD keeps that partitioning, so
-      // only the (much smaller) rank side shuffles per round (SCALE.md
+      // the join key `u`, and its checkpoint scan keeps that partitioning,
+      // so only the (much smaller) rank side shuffles per round (SCALE.md
       // invariant #3).
       val ed = Shared.partEdges(spark, dir)
       val ranks = graft.operators.Dedup.withStaticPlan(spark) {
@@ -885,9 +885,9 @@ object AnalyticsQueries {
           .withColumn("r", lit(1000000L))
         // Each round re-roots on a materialized RDD (O(1) plan size across
         // rounds — the iterative-Spark lineage rule) and frees the previous
-        // round's blocks deterministically.
-        var release: () => Unit = () => ()
-        for (_ <- 1 to 5) {
+        // round's blocks deterministically (round 1's input is a plan over
+        // the memoized edges, which are not this loop's to free).
+        for (round <- 1 to 5) {
           // shuffled-HASH on the rank side: the checkpointed rank frame has
           // no size statistics, so the static planner would fall back to
           // sort-merge and re-sort the stationary edge partitions EVERY
@@ -900,11 +900,7 @@ object AnalyticsQueries {
               .cast(LongType).as("r"))
             .select(col("v").as("node"), col("r"))
             .localCheckpoint(true)
-          release()
-          release = () => next.queryExecution.analyzed.collectFirst {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              lr.rdd.unpersist(false); ()
-          }.getOrElse(())
+          if (round > 1) graft.core.Blocks.release(rk)
           rk = next
         }
         rk
@@ -1422,8 +1418,7 @@ object AnalyticsQueries {
           var dist = Tables.part(spark, dir)
             .filter(col("p_partkey") <= 10)
             .select(col("p_partkey").as("node"), lit(0L).as("d"))
-          var release: () => Unit = () => ()
-          for (_ <- 1 to 3) {
+          for (round <- 1 to 3) {
             val next = dist
               // shuffled-hash on the frontier side — the q_pagerank round
               // treatment: never re-sort the stationary edge partitions
@@ -1431,11 +1426,7 @@ object AnalyticsQueries {
                 .select(col("v").as("node"), (col("d") + 1L).as("d")))
               .groupBy(col("node")).agg(min(col("d")).as("d"))
               .localCheckpoint(true)
-            release()
-            release = () => next.queryExecution.analyzed.collectFirst {
-              case lr: org.apache.spark.sql.execution.LogicalRDD =>
-                lr.rdd.unpersist(false); ()
-            }.getOrElse(())
+            if (round > 1) graft.core.Blocks.release(dist)
             dist = next
           }
           dist.select(col("node").as("l_partkey"), col("d").as("dist"))

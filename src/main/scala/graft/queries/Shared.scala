@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.core.Blocks
 import graft.operators.Dedup
 
 /** Cross-query memo for expensive kernels that several suite queries share
@@ -22,36 +23,30 @@ import graft.operators.Dedup
   * Lifecycle contract:
   *  - entries hold an eagerly-materialized frame (localCheckpoint blocks,
   *    see [[Dedup.cachedForReuse]]) keyed by (SparkContext identity, sf dir);
-  *  - a reuse first verifies the backing RDD blocks are still registered —
-  *    if anything unpersisted them the entry rebuilds transparently, so a
-  *    stale memo can produce a slow run but never a wrong one;
-  *  - [[graft.Bench]] consults [[protectedRddIds]] in its per-query cache
-  *    sweep so the memo survives the suite's isolation cleanup;
+  *  - a reuse first checks [[graft.core.Blocks.materialized]] — the frame's
+  *    backing blocks are still registered — and if anything freed them the
+  *    entry rebuilds transparently, so a stale memo can produce a slow run
+  *    but never a wrong one;
+  *  - [[graft.Bench]] passes [[protectedRddIds]] (the entries'
+  *    [[graft.core.Blocks.backing]]) as the `keep` set of its per-query
+  *    [[graft.core.Blocks.sweep]], so the memo survives the suite's
+  *    isolation cleanup; [[evict]] frees an entry with
+  *    [[graft.core.Blocks.release]];
   *  - [[graft.Verify]] calls [[clear]] before every query: the CORRECTNESS
   *    gate stays hermetic — each verified query computes its full pipeline.
   */
 object Shared {
 
-  private final case class Entry(ctxId: Int, df: DataFrame, rddIds: Set[Int]) {
-    /** A LocalRelation result (no distributed backing at all) — valid for
-      * the whole session; there is nothing to unpersist out from under it.
-      * Checked on the OPTIMIZED plan so a projection wrapper folded by
-      * ConvertToLocalRelation still counts.
-      */
-    def local: Boolean = df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
-  }
+  private final case class Entry(ctxId: Int, df: DataFrame)
   private val memo = scala.collection.concurrent.TrieMap.empty[String, Entry]
 
   /** RDD ids whose cached blocks back live memo entries — Bench's per-query
     * unpersist sweep must skip these.
     */
-  def protectedRddIds: Set[Int] = memo.values.flatMap(_.rddIds).toSet
+  def protectedRddIds: Set[Int] = memo.values.flatMap(e => Blocks.backing(e.df)).toSet
 
   /** Forget all entries (blocks are released by ContextCleaner once the
-    * frames are unreachable, or by the caller's own unpersist sweep).
+    * frames are unreachable, or by the caller's [[graft.core.Blocks.sweep]]).
     */
   def clear(): Unit = memo.clear()
 
@@ -89,18 +84,8 @@ object Shared {
     * the build and the recorded min never silently deletes shared-frame
     * cost (while an ambient stall in either run is still absorbed).
     */
-  def evict(keys: Set[String]): Unit = keys.foreach { k =>
-    memo.remove(k).foreach { e =>
-      val ctx = e.df.sparkSession.sparkContext
-      val live = ctx.getPersistentRDDs
-      e.rddIds.foreach(id => live.get(id).foreach(_.unpersist(false)))
-    }
-  }
-
-  private def backingRddIds(df: DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
+  def evict(keys: Set[String]): Unit =
+    keys.foreach(k => memo.remove(k).foreach(e => Blocks.release(e.df)))
 
   /** Memoize `build` under `key` for this session's SparkContext. `build`
     * must return a frame whose validity is CHECKABLE: an eagerly-
@@ -112,19 +97,16 @@ object Shared {
     * rebuilds.
     */
   def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val ctx = spark.sparkContext
-    val ctxId = System.identityHashCode(ctx)
+    val ctxId = System.identityHashCode(spark.sparkContext)
     memo.get(key) match {
-      case Some(e) if e.ctxId == ctxId &&
-          (e.rddIds.nonEmpty || e.local) &&
-          e.rddIds.forall(ctx.getPersistentRDDs.contains) =>
+      case Some(e) if e.ctxId == ctxId && Blocks.materialized(e.df) =>
         consumedKeys.add(key)
         e.df
       case _ =>
         val t0 = System.nanoTime()
         val df = build
         buildSecs.update(key, (System.nanoTime() - t0) / 1e9)
-        memo.update(key, Entry(ctxId, df, backingRddIds(df)))
+        memo.update(key, Entry(ctxId, df))
         df
     }
   }
@@ -149,18 +131,6 @@ object Shared {
       }
     }
 
-  /** The part co-occurrence edge table over `lineitem` — DISTINCT
-    * symmetric (u, v) part pairs sharing an order, annotated with the
-    * source's out-degree and pre-partitioned on `u` — shared verbatim by
-    * q_pagerank (which consumes the degree for its per-edge contribution)
-    * and q_reachability (which joins on `u` and ignores `deg`): ONE
-    * materialization, one partitioning, both iterative consumers. Built
-    * under the static plan — measured faster than the adaptive build for
-    * this fixed join→distinct→window→repartition shape at bench scale
-    * (AQE's per-exchange stages add jobs without changing the plan).
-    * Same lifecycle contract as the MinHash memo; Verify's per-query
-    * [[clear]] keeps the gate hermetic.
-    */
   /** The purchase co-occurrence edge table over `events` — DISTINCT
     * (u < v) user pairs sharing a purchase hour — built identically (and
     * until round 15, twice) by q_triangles and q_kcore. One
@@ -180,6 +150,18 @@ object Shared {
           .distinct())
     }
 
+  /** The part co-occurrence edge table over `lineitem` — DISTINCT
+    * symmetric (u, v) part pairs sharing an order, annotated with the
+    * source's out-degree and pre-partitioned on `u` — shared verbatim by
+    * q_pagerank (which consumes the degree for its per-edge contribution)
+    * and q_reachability (which joins on `u` and ignores `deg`): ONE
+    * materialization, one partitioning, both iterative consumers. Built
+    * under the static plan — measured faster than the adaptive build for
+    * this fixed join→distinct→window→repartition shape at bench scale
+    * (AQE's per-exchange stages add jobs without changing the plan).
+    * Same lifecycle contract as the MinHash memo; Verify's per-query
+    * [[clear]] keeps the gate hermetic.
+    */
   def partEdges(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, s"partEdges|$dir") {
       Dedup.withStaticPlan(spark) {
@@ -205,12 +187,6 @@ object Shared {
       }
     }
 
-  /** The suite's delivery-split key over `documents`: the numeric suffix of
-    * the source name (`src<N>` → N). Sources 0–9 are delivery 1 in every
-    * two-delivery replay (mx26/mx27/mx31, the shared kernels below, and
-    * their oracles' `CAST(substr(source, 4) AS INT)`); ONE definition so
-    * the split convention cannot silently desynchronize across consumers.
-    */
   /** [[graft.operators.TextAnalysis.langMarkers]] for one language as a
     * DuckDB list literal — the language-id oracles' marker rendering
     * (tx2/tx24/dd31), defined ONCE so a marker-list or quoting change
@@ -222,6 +198,12 @@ object Shared {
       // marker-list change cannot silently break every language-id oracle
       .map(m => s"'${m.replace("'", "''")}'").mkString("[", ", ", "]")
 
+  /** The suite's delivery-split key over `documents`: the numeric suffix of
+    * the source name (`src<N>` → N). Sources 0–9 are delivery 1 in every
+    * two-delivery replay (mx26/mx27/mx31, the shared kernels below, and
+    * their oracles' `CAST(substr(source, 4) AS INT)`); ONE definition so
+    * the split convention cannot silently desynchronize across consumers.
+    */
   def srcIdx: org.apache.spark.sql.Column =
     substring(col("source"), 4, 10).cast("int")
 
@@ -263,7 +245,7 @@ object Shared {
   def incrVerifiedPairs(spark: SparkSession, dir: String, deliv: Int): DataFrame =
     memoized(spark, s"incrPairs|$deliv|$dir") {
       val deltaSigs = incrDeliverySigs(spark, dir, deliv)
-      // delivery 1's store is empty but MATERIALIZED (a LogicalRDD like
+      // delivery 1's store is empty but MATERIALIZED (a checkpoint like
       // delivery 2's memoized store, not a prunable LocalRelation): both
       // deliveries then plan the identical candidate-kernel shape, so
       // delivery 2's whole-stage codegen is a compile-cache HIT instead of

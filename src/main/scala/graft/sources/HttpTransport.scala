@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pluggable HTTP layer so HTTP sources are testable hermetically — the same
   * seam the reference gets by mocking httpx in its tests. The engine is
-  * zero-egress in CI; tests inject [[FakeHttpTransport]].
+  * zero-egress in CI; tests inject a scripted fake (`FakeHttpTransport` in
+  * `src/test/scala/graft/sources`).
   */
 final case class HttpResult(status: Int, body: String, headers: Map[String, String])
 
@@ -28,16 +29,5 @@ object JdkHttpTransport extends HttpTransport {
       k.toLowerCase -> vs.asScala.mkString(",")
     }.toMap
     HttpResult(resp.statusCode(), resp.body(), hs)
-  }
-}
-
-/** Scripted fake transport for tests: URL → response, with request capture. */
-class FakeHttpTransport(responses: PartialFunction[String, HttpResult]) extends HttpTransport {
-  var requests: Vector[(String, Map[String, String])] = Vector.empty
-
-  def get(url: String, headers: Map[String, String]): HttpResult = {
-    requests :+= ((url, headers))
-    if (responses.isDefinedAt(url)) responses(url)
-    else HttpResult(404, s"""{"error": "no fake response for $url"}""", Map.empty)
   }
 }

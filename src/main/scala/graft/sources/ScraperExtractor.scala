@@ -29,11 +29,6 @@ trait ContentFetcher {
   def fetch(url: String): String
 }
 
-final class StaticFetcher(content: Map[String, String]) extends ContentFetcher {
-  def fetch(url: String): String = content.getOrElse(url,
-    throw new RuntimeException(s"scraper: no content for $url"))
-}
-
 class ScraperExtractor(
     spark: SparkSession, conf: Conf,
     fetcher: ContentFetcher) extends Extractor {

@@ -7,7 +7,8 @@ import graft.core.Registries
   *
   * `playwright_scraper` requires a [[ContentFetcher]]; the registry wires a
   * URL-fetching default via [[JdkHttpTransport]] (tests construct
-  * [[ScraperExtractor]] directly with a [[StaticFetcher]]).
+  * [[ScraperExtractor]] directly with the `StaticFetcher` in
+  * `src/test/scala/graft/sources`).
   */
 object Sources {
   @volatile private var done = false

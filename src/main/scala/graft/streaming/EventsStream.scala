@@ -28,10 +28,6 @@ object EventsStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-source stream over a directory of parquet events. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(EventSchema).parquet(dir)
-
   /** Layout-aware file-source stream over the driver's `events.parquet`,
     * mirroring [[graft.Tables.events]]: a cheap batch footer read picks the
     * physical `ts` layout (nanos-as-long / µs TIMESTAMP_NTZ / µs TIMESTAMP),

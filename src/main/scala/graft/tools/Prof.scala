@@ -38,8 +38,7 @@ object Prof {
             println(f"   ${wallMs / 1e3}%6.2f s wall ${runMs / 1e3}%7.2f s task  " +
               f"$stages%3d stages $tasks%5d tasks  $site")
           }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.core.Blocks.sweep(spark)
         graft.queries.Shared.clear()
       }
     }

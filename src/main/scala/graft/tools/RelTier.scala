@@ -104,8 +104,7 @@ object RelTier {
     }
     val shape = planShape(df.queryExecution.executedPlan.toString)
     // release per-query reuse caches so tiers don't cross-subsidize
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    spark.catalog.clearCache()
+    graft.core.Blocks.sweep(spark)
     graft.queries.Shared.clear()
     (wall, m, shape)
   }

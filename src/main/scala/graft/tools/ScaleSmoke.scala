@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Blocks
 
 /** Large-n smoke for the narrow-pass operators (prefix sum, packing,
   * sampling): n defaults to 2M rows — ~3 orders above the spec scale — to
@@ -33,8 +34,6 @@ object ScaleSmoke {
   }
 
   private def graphTier(spark: SparkSession, n: Long): Unit = {
-    def sweep(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     t(spark, s"cc_star chains n=$n (distributed)") {
       // n/10 disjoint 10-node chains: ~0.9n edges, ~17× past smallGraphMax
       // (2²⁰) → the full large-star/small-star loop; closed-form label
@@ -55,7 +54,7 @@ object ScaleSmoke {
       require(got.getDecimal(1).compareTo(expect) == 0,
         s"Σcomp ${got.getDecimal(1)} != closed form $expect")
     }
-    sweep()
+    Blocks.sweep(spark)
     t(spark, s"kcore n=$n edges=$n (distributed peel)") {
       // n/4 triangles + n/4 pendants = n edges, past the driver bucket-
       // queue threshold → the distributed peel; 2-core = exactly the
@@ -74,7 +73,7 @@ object ScaleSmoke {
       require(chk.getLong(0) == 3 * m, s"core size ${chk.getLong(0)} != ${3 * m}")
       require(chk.getLong(1) == 2L && chk.getLong(2) == 2L, "cycle degrees must be 2")
     }
-    sweep()
+    Blocks.sweep(spark)
     t(spark, s"pagerank ring nodes=${n * 2 / 5} edges=${n * 4 / 5} (5 rounds)") {
       // q_pagerank's exact round loop (integer micro-unit ranks, damped
       // floor update, per-round localCheckpoint re-rooting) on a symmetric
@@ -91,8 +90,7 @@ object ScaleSmoke {
           .repartition(col("u")))
       var rk = ed.select(col("u").as("node")).distinct()
         .withColumn("r", lit(1000000L))
-      var release: () => Unit = () => ()
-      for (_ <- 1 to 5) {
+      for (round <- 1 to 5) {
         val next = ed.join(rk, ed("u") === rk("node"))
           .groupBy(col("v"))
           .agg((floor(lit(0.85) * sum(
@@ -100,11 +98,7 @@ object ScaleSmoke {
             .cast(LongType).as("r"))
           .select(col("v").as("node"), col("r"))
           .localCheckpoint(true)
-        release()
-        release = () => next.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(false); ()
-        }.getOrElse(())
+        if (round > 1) Blocks.release(rk)
         rk = next
       }
       val chk = rk.agg(count(lit(1)), min("r"), max("r")).head()
@@ -112,7 +106,7 @@ object ScaleSmoke {
       require(chk.getLong(1) == 1000000L && chk.getLong(2) == 1000000L,
         s"ring fixed point violated: [${chk.getLong(1)}, ${chk.getLong(2)}]")
     }
-    sweep()
+    Blocks.sweep(spark)
   }
 
   /** The 20M-doc STATE-TRAVEL tier (`runMain graft.tools.ScaleSmoke incr
@@ -139,24 +133,13 @@ object ScaleSmoke {
     // the measured 16g G1-region cliff); the bench JVM's 8 g leaves the
     // late phases' aggregates execution-starved (AGGREGATE_OUT_OF_MEMORY).
     import spark.implicits._
-    def sweep(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     // free each phase's internal reuse caches WITHOUT truncating a carried
-    // localCheckpoint store the next phase still reads
-    def backing(df: org.apache.spark.sql.DataFrame): Set[Int] =
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.toSet
-    def sweepExcept(keep: Set[Int]): Unit = {
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(false)
-      }
-      // broadcast blocks (the broadcastDelta phase pins a ~100 MB probe)
-      // release via ContextCleaner WEAK references — without a forced GC
-      // the default 30-min periodic GC leaves them resident and the next
-      // phase's sort buffers OOM the 14g heap
-      System.gc()
-    }
+    // localCheckpoint store the next phase still reads; broadcast blocks
+    // (the broadcastDelta phase pins a ~100 MB probe) release via
+    // ContextCleaner WEAK references — without a forced GC the default
+    // 30-min periodic GC leaves them resident and the next phase's sort
+    // buffers OOM the 14g heap
+    def sweepExcept(keep: Set[Int]): Unit = { Blocks.sweep(spark, keep); System.gc() }
 
     // ---- exact dedupDelta: twins (2k, 2k+1) share a text; delivery 2 =
     // ids ≡ 19 (mod 20) — every d2 doc is the higher twin of a d1 doc, so
@@ -185,7 +168,7 @@ object ScaleSmoke {
       val c2 = s2.count()
       require(c2 == 0, s"d2 survivors $c2 != 0 (all are higher twins)")
     }
-    sweep()
+    Blocks.sweep(spark)
     }
 
     // ---- nearDedupDelta (mx26's kernel): ids ≡ 0,1 (mod 4) are exact
@@ -226,7 +209,7 @@ object ScaleSmoke {
           "must be 0 under the 61-bit decorrelated kernel")
       graft.operators.Dedup.cachedForReuse(sigs1)
     }
-    val keepStore = backing(store2)
+    val keepStore = Blocks.backing(store2)
     sweepExcept(keepStore) // d1's internal kernels, not the carried store
     if (bdOnly) {
       // broadcastDelta runs in its OWN invocation (`incr-bd`): the store's
@@ -241,7 +224,7 @@ object ScaleSmoke {
       val stagedDir = s"target/scalesmoke_bd_$n"
       val (storeDisk, _, _) = t(spark, "store staging write (plain parquet, release cache)") {
         store2.write.mode("overwrite").parquet(stagedDir)
-        sweep()
+        Blocks.sweep(spark)
         spark.read.parquet(stagedDir)
       }
       t(spark, s"neardedup_delta d2 delta (broadcastDelta — store scanned, not shuffled)") {
@@ -280,7 +263,7 @@ object ScaleSmoke {
       // Production plugins never hit this: their old store is a disk scan.
       val (plainSigs, _, _) = t(spark, s"store staging write (plain parquet, release cache)") {
         store2.write.mode("overwrite").parquet(s"$stateRoot/_staged")
-        sweep()
+        Blocks.sweep(spark)
         spark.read.parquet(s"$stateRoot/_staged")
       }
       t(spark, s"bucketed store COMMIT (one-time layout cost, ${n - n / 80} docs)") {
@@ -313,7 +296,7 @@ object ScaleSmoke {
         if (sys.env.contains("GRAFT_SMOKE_EXPLAIN"))
           println(s2.queryExecution.executedPlan.toString)
       }
-      sweep()
+      Blocks.sweep(spark)
       val (_, rc, wc) = t(spark, s"neardedup_delta d2 CONTROL (empty store)") {
         val (s2c, _) = graft.operators.Incremental.nearDedupDelta(
           d2, manifest0, "shard", emptySigs, "id", "text",
@@ -352,7 +335,7 @@ object ScaleSmoke {
     println(f"neardedup_delta store-side shuffle (delta − control): " +
       f"r ${(r2 - rc) / 1048576.0}%.0f MB / w ${(w2 - wc) / 1048576.0}%.0f MB " +
       f"(delta-side: r ${rc / 1048576.0}%.0f / w ${wc / 1048576.0}%.0f MB)")
-    sweep()
+    Blocks.sweep(spark)
 
     // ---- semDedupDelta (mx29's kernel) against a 20M-vector carried
     // store: store state is BOOTSTRAPPED analytically (every store vector
@@ -424,7 +407,7 @@ object ScaleSmoke {
         .filter(col("sz") > 1 && col("k") =!= 1L).count()
       require(badKeep == 0, s"$badKeep multi-member groups without exactly 1 keeper")
     }
-    sweep()
+    Blocks.sweep(spark)
   }
 
   /** Bucketed-at-rest measurement for the REMAINING carried stores (round
@@ -456,7 +439,7 @@ object ScaleSmoke {
     import graft.transformers.Transformers.IncrState
     import graft.operators.{Dedup, Incremental, Similarity}
     def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Blocks.sweep(spark)
       System.gc() // release broadcast/checkpoint blocks via ContextCleaner
     }
     val stateRoot = s"target/scalesmoke_bk_${which}_$n"

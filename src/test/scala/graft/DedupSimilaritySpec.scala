@@ -342,8 +342,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val totalExact = rows.map(_._2).sum
     assert(totalExact > 0)
     graft.queries.Shared.clear()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    graft.core.Blocks.sweep(spark)
   }
 
   test("contaminatedDocsBloom = contaminatedDocs at any FP rate (rescue join)") {

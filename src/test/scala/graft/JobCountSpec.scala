@@ -121,8 +121,7 @@ class JobCountSpec extends AnyFunSuite {
       val n = jobsFor(name)
       if (n > bound) Some(s"$name: $n jobs > budget $bound") else None
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    graft.core.Blocks.sweep(spark)
     graft.queries.Shared.clear()
     assert(over.isEmpty, over.mkString("; "))
   }

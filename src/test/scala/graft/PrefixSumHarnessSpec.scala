@@ -79,8 +79,7 @@ class PrefixSumHarnessSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sf/documents.parquet").exists())
     Seq("dd2_minhash_lsh", "dd4_ngram_jaccard", "dd11_dup_clusters").foreach { q =>
       SparkEntry.queries(q)(spark, sf).count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.core.Blocks.sweep(spark)
     }
     val dir = java.nio.file.Files.createTempDirectory("mx3_stress").toFile
     try {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session factory's settings, and a source check that main keeps one
-  * session builder and one Spark listener.
+  * session builder, one Spark listener and one owner of checkpoint blocks.
   */
 class SessionSpec extends AnyFunSuite {
 
@@ -41,5 +41,9 @@ class SessionSpec extends AnyFunSuite {
     assert(filesWith("""SparkSession\.builder\(""".r) == Seq("graft/Session.scala"))
     assert(filesWith("""(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""".r) ==
       Seq("graft/core/Meter.scala"))
+    // what backs a materialized frame, and how its blocks are freed, is
+    // known in one place
+    assert(filesWith("""LogicalRDD|getPersistentRDDs""".r).distinct ==
+      Seq("graft/core/Blocks.scala"))
   }
 }

@@ -27,8 +27,7 @@ class SuitePlanGuardSpec extends AnyFunSuite {
         val plan =
           try fn(spark, sf).queryExecution.executedPlan.toString
           catch { case e: Throwable => s"PLANNING FAILED: $e" }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.core.Blocks.sweep(spark)
         if (plan.contains("CartesianProduct") || plan.startsWith("PLANNING FAILED"))
           Some(name -> plan.linesIterator.take(3).mkString(" | "))
         else None
