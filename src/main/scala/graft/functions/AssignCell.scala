@@ -98,6 +98,10 @@ object AssignCellExpr {
     * corpus — skipping is the strictly-better deterministic choice, and
     * the two shapes agree everywhere the documented no-zero-norm
     * precondition holds.
+    *
+    * A null centroid, or one with a null `c_id`, `cv` or `cn`, has no
+    * cosine to rank: it throws `IllegalArgumentException` naming the
+    * centroid, on both paths.
     */
   def assign(v: ArrayData, nrm: Double, cents: ArrayData): InternalRow = {
     val n = cents.numElements()
@@ -109,6 +113,7 @@ object AssignCellExpr {
     var i = 0
     while (i < n) {
       val c = cents.getStruct(i, 3)
+      if (c == null || c.isNullAt(0) || c.isNullAt(1) || c.isNullAt(2)) throw nullCentroid(c, i)
       val cid = c.getLong(0)
       if (cid < minId) minId = cid
       val cos = DotProductExpr.dot(v, c.getArray(1)) / (nrm * c.getDouble(2))
@@ -121,4 +126,9 @@ object AssignCellExpr {
     if (found) new GenericInternalRow(Array[Any](bestId, bestCos))
     else new GenericInternalRow(Array[Any](minId, Double.NaN))
   }
+
+  private def nullCentroid(c: InternalRow, i: Int) = new IllegalArgumentException(
+    if (c == null) s"assign_cell: centroid at position $i is null"
+    else if (c.isNullAt(0)) s"assign_cell: centroid at position $i has a null c_id"
+    else s"assign_cell: centroid c_id ${c.getLong(0)} has a null ${if (c.isNullAt(1)) "cv" else "cn"}")
 }

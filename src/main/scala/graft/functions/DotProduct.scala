@@ -9,10 +9,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * left-to-right accumulation as
   * `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, (acc,x) -> acc+x)`
   * (and the DuckDB `list_sum(list_transform(...))` oracles) — identical IEEE
-  * result — but one tight primitive loop over `ArrayData` instead of two
-  * interpreted higher-order functions allocating an intermediate array per
-  * row. Participates in whole-stage codegen, so cosine scoring fuses into
-  * the surrounding join/filter stage.
+  * result on null-free arrays — but one tight primitive loop over
+  * `ArrayData` instead of two interpreted higher-order functions allocating
+  * an intermediate array per row. Participates in whole-stage codegen, so
+  * cosine scoring fuses into the surrounding join/filter stage.
+  *
+  * Nulls: a null array gives null. A null ELEMENT counts as 0, where the
+  * fold gives null: `dotp([1, null], [3, 4])` is 3.0 and `dotp([null], [3])`
+  * is 0.0. Arrays of unequal length contribute their common prefix.
   */
 case class DotProductExpr(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType

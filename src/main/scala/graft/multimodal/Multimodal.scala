@@ -705,7 +705,6 @@ object Multimodal {
   def imageTextGate(
       pairs: DataFrame, imgVecCol: String, txtVecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(pairs.sparkSession)
     val img = graft.operators.Similarity.asDouble(col(imgVecCol))
     val txt = graft.operators.Similarity.asDouble(col(txtVecCol))
     pairs

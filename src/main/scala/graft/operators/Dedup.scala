@@ -513,7 +513,6 @@ object Dedup {
       shingleK: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       maxBucket: Int = 100000): DataFrame = {
     val k = bands * rowsPerBand
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = spread(df.select(col(idCol).as("doc_id"), col(textCol).as("txt")))
     val withSh = cachedForReuse(shingleSignatures(base, shingleK, k, bands))
     val bandsDf = capBuckets(withSh.select(col("doc_id"),
@@ -1757,7 +1756,6 @@ object Dedup {
   def duplicatedNgramSpans(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val toks = spread(df)
       .select(col(idCol).as("doc_id"), split(lower(col(textCol)), " ").as("toks"))
       .filter(size(col("toks")) >= n)

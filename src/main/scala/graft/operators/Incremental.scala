@@ -236,7 +236,6 @@ object Incremental {
       // under broadcastDelta the verify probe is delta-bounded too: hint it
       // broadcast so the signature STORE side is scanned, never shuffled —
       // the same scan-only contract as the banding semi-join above
-      graft.functions.GraftFunctions.register(cand.sparkSession)
       (if (broadcastDelta) broadcast(withSd) else withSd)
         .join(eSigs.select(col("doc_id").as("e_id"), col("sig").as("se")), "e_id")
         // native equal-component count (SigMatchesExpr): same integer as the
@@ -517,7 +516,6 @@ object Incremental {
   def retrainCentroids(members: DataFrame, centroids: DataFrame): DataFrame = {
     val spark = members.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val means = members.select(col("cell"), col("vec_id"), col("v"))
       .as[(Long, Long, Array[Double])]
       .groupByKey(_._1)

@@ -142,7 +142,6 @@ object Indicators {
   def withRsi(
       df: DataFrame, closeCol: String, outCol: String, period: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val (avgGain, avgLoss) = rsiAvgCols(col("__delta"), period, w)
     df.withColumns(Map("__delta" -> rsiDeltaCol(col(closeCol), w)))
@@ -185,7 +184,6 @@ object Indicators {
       macdCol: String, signalCol: String, histCol: String,
       fast: Int, slow: Int, signalSpan: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     df.withColumns(Map(macdCol -> macdLineCol(quoted(closeCol), fast, slow, w)))
       .withColumns(Map(signalCol -> macdSignalCol(quoted(macdCol), signalSpan, w)))
@@ -254,7 +252,6 @@ object Indicators {
       df: DataFrame, highCol: String, lowCol: String, closeCol: String,
       outCol: String, period: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val prevClose = lag(col(closeCol), 1).over(w)
     val range = col(highCol) - col(lowCol)
@@ -280,7 +277,6 @@ object Indicators {
       df: DataFrame, highCol: String, lowCol: String, closeCol: String,
       outPrefix: String, emaPeriod: Int, atrPeriod: Int, mult: Double,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val alpha = 2.0 / (emaPeriod + 1).toDouble
     val atr = withAtr(df, highCol, lowCol, closeCol, "__kc_atr", atrPeriod,
@@ -380,7 +376,6 @@ object Indicators {
       df: DataFrame, highCol: String, lowCol: String, closeCol: String,
       outPrefix: String, period: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val a = 1.0 / period.toDouble
     val (h, l, c) = (col(highCol), col(lowCol), col(closeCol))
@@ -423,7 +418,6 @@ object Indicators {
       outPrefix: String, orderCol: String,
       partitionCols: Seq[String] = Nil,
       af0: Double = 0.02, step: Double = 0.02, afMax: Double = 0.2): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     df.withColumn("__ps",
         expr(s"psar($highCol, $lowCol, $af0, $step, $afMax)").over(w))
@@ -447,7 +441,6 @@ object Indicators {
       df: DataFrame, highCol: String, lowCol: String, closeCol: String,
       outPrefix: String, period: Int, mult: Double,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val a = 1.0 / period.toDouble
     val (h, l, c) = (col(highCol), col(lowCol), col(closeCol))
@@ -613,7 +606,6 @@ object Indicators {
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
     require(alpha > 0 && alpha <= 1 && beta >= 0 && beta <= 1,
       "holt: need 0 < alpha <= 1 and 0 <= beta <= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     df.withColumn("__h", expr(s"holt($valueCol, $alpha, $beta)").over(w))
       .withColumn(s"${outPrefix}_level", col("__h.level"))
@@ -647,7 +639,6 @@ object Indicators {
       df: DataFrame, closeCol: String, outCol: String, span: Int,
       orderCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
     require(span >= 1, "trix span must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val alpha = 2.0 / (span.toDouble + 1.0)
     val w = baseWindow(partitionCols, orderCol)
     val e3Col = s"${outCol}_e3"
@@ -775,7 +766,6 @@ object Indicators {
     require(alpha > 0 && alpha <= 1 && beta >= 0 && beta <= 1 &&
       gamma >= 0 && gamma <= 1 && period >= 2,
       "holt_winters: need 0 < alpha <= 1, 0 <= beta,gamma <= 1, period >= 2")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     df.withColumn("__hw",
         expr(s"holt_winters($valueCol, $alpha, $beta, $gamma, $period)").over(w))
@@ -823,7 +813,6 @@ object Indicators {
       orderCol: String = "date", partitionCols: Seq[String] = Nil): DataFrame = {
     require(period >= 1 && fast >= 1 && slow > fast,
       "kama: need period >= 1 and slow > fast >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, orderCol)
     val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
     val wVol = w.rowsBetween(-(period - 1), 0)
@@ -874,7 +863,6 @@ object Indicators {
     // Two window levels, then one projection (see the object doc): every
     // window over the raw series, each computed once; the EMAs over level-1
     // columns; then the formulas over both, in the contract's order.
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val w = baseWindow(partitionCols, "date")
     val close = col("close")
     val (smaN, smaS, _) = trailingSums(close, cfg.smaPeriod, w)

@@ -23,12 +23,12 @@ object Similarity {
   /** Vector as double array (floats widen exactly). */
   def asDouble(vec: Column): Column = transform(vec, x => x.cast(DoubleType))
 
-  /** Sequential-fold dot product of two double-array columns — evaluated by
-    * the native codegen'd [[graft.functions.DotProductExpr]] (identical IEEE
-    * accumulation to the `aggregate`/`zip_with` fold and the DuckDB
-    * `list_sum` oracles, one primitive loop instead of two interpreted HOFs).
-    * `dotp` is registered by [[prepared]] on every corpus the operators
-    * touch, so resolution always finds it.
+  /** Sequential-fold dot product of two double-array columns — the graft
+    * SQL function `dotp`, [[graft.functions.DotProductExpr]] (the same IEEE
+    * accumulation as the `aggregate`/`zip_with` fold and the DuckDB
+    * `list_sum` oracles on null-free vectors, in one primitive loop instead
+    * of two interpreted HOFs). Every session holds `dotp` from its build
+    * ([[graft.functions.GraftFunctions]]).
     */
   def dot(a: Column, b: Column): Column = call_function("dotp", a, b)
 
@@ -38,11 +38,9 @@ object Similarity {
   /** Cosine similarity of two double-array columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  private def prepared(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+  private def prepared(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
       .withColumn("nrm", norm(col("v")))
-  }
 
   /** Exact top-k neighbors by cosine for each query vector (query set is
     * broadcast; ranking ties broken by neighbor id).
@@ -99,7 +97,6 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, labelCol: String, kHit: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"),
         col(labelCol).cast(LongType).as("n_label"))
       .withColumn("nrm", norm(col("v")))
@@ -143,7 +140,6 @@ object Similarity {
       idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "k must be >= 1")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val wts = (1 to k).map(i => math.floor(1e6 / (math.log(i + 1.0) / math.log(2.0))).toLong)
     val pfx = wts.scanLeft(0L)(_ + _).tail
     val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"),
@@ -382,7 +378,6 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def prep(df: DataFrame) =
       quantizeInt8(df, idCol, vecCol)
         .withColumn("qd", transform(col("qv"), x => x.cast(DoubleType)))
@@ -422,7 +417,6 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int): DataFrame = {
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val n = Dedup.cachedForReuse(prepared(df, idCol, vecCol))
     val q = n.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -804,7 +798,6 @@ object Similarity {
   }
 
   private def assignTail(withCents: DataFrame, centsCol: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(withCents.sparkSession)
     installDropWarningListener(withCents.sparkSession)
     // observation names must be unique within one plan — a Lloyd loop or a
     // before/after report can compose several assignment passes

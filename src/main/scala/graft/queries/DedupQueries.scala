@@ -488,7 +488,6 @@ object DedupQueries {
       |       shared / CAST(LEAST(n_a, n_b) AS DOUBLE) AS containment
       |FROM p WHERE shared / CAST(LEAST(n_a, n_b) AS DOUBLE) >= 0.6
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark) // hash61
     import org.apache.spark.sql.types._
     val n = 4; val w = 4
     // The fingerprint kernel is MATERIALIZED once (the dd2/dd4 cache

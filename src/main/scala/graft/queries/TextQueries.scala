@@ -139,7 +139,6 @@ object TextQueries {
       |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fingerprints,
       |  md5(array_to_string(list_transform(fps, x -> CAST(x AS VARCHAR)), '-')) AS winnow_hash
       |FROM m ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark) // hash61
     val n = 4; val w = 4
     // fan the one-file scan out to the core count before the per-char gram
     // kernel (Dedup.spread — identity on any multi-split table); the filter
@@ -336,7 +335,6 @@ object TextQueries {
       |  SUM(CASE WHEN o.owner = g.doc_id THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE) AS novelty
       |FROM g JOIN o USING (gh)
       |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val toks = graft.operators.Dedup.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
       .filter(size(col("toks")) >= 5)
@@ -652,7 +650,6 @@ object TextQueries {
       |  CAST(SUM(sgn) AS BIGINT) AS signed_sum
       |FROM d GROUP BY dim ORDER BY dim""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.types.LongType
-    graft.functions.GraftFunctions.register(spark)
     graft.operators.Dedup.spread(Tables.documents(spark, dir))
       .select(explode(split(lower(col("text")), " ")).as("t"))
       .filter(col("t") =!= "")
@@ -686,7 +683,6 @@ object TextQueries {
       |GROUP BY t.source, value, tot.n
       |HAVING COUNT(*) > tot.n // 31
       |ORDER BY source, cnt DESC, value""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val k = 30
     val toks = Tables.documents(spark, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("value"))

@@ -1718,7 +1718,6 @@ object WindowQueries {
       |  LEAST(s.l, r.ho, r.hc) AS ha_low
       |FROM rec r JOIN s ON s.sym = r.sym AND s.rn = r.rn
       |ORDER BY s.sym, s.d""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val bars = graft.Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("sym"), to_date(col("o_orderdate")).as("d"))

@@ -279,7 +279,6 @@ object EventsStream {
     * a plain windowed GROUP BY — which is what the oracle states.
     */
   def trendingTypes(events: DataFrame, k: Int = 9): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"))

@@ -798,7 +798,6 @@ object ScaleSmoke {
       }
     }
     t(spark, s"mg_topk n=$n") {
-      graft.functions.GraftFunctions.register(spark)
       // one key holds 20% of the stream; must survive any merge order
       val vals = docs.select(
         when(col("doc_id") % 5 === 0, "hot")

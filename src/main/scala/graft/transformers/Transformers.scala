@@ -273,7 +273,6 @@ object Transformers {
 
     def transform(df: DataFrame): DataFrame = {
       import graft.operators.Similarity
-      graft.functions.GraftFunctions.register(df.sparkSession)
       val v = Similarity.asDouble(col(vecCol))
       val nrm = Similarity.norm(v)
       val kept = df.filter(col(vecCol).isNotNull && size(col(vecCol)) > 0 && nrm > 0.0)
@@ -853,7 +852,6 @@ object Transformers {
 
     protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
       val spark = df.sparkSession
-      graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
       val (verdicts, state) = Incremental.semDedupDelta(df, manifest, shardCol,
         IncrState.codebook(spark, "incremental_sem_dedup", centroidsPath),
         carried("state"), idCol, vecCol, threshold)
@@ -890,7 +888,6 @@ object Transformers {
         IncrState.empty(new StructType().add("cell", LongType).add("n", LongType))))
 
     protected def step(df: DataFrame, manifest: DataFrame, carried: Map[String, DataFrame]) = {
-      graft.functions.GraftFunctions.register(df.sparkSession) // dotp/assign_cell
       val (cents, counts) = (carried("centroids"), carried("counts"))
       val (assigned, _) = Incremental.ivfDelta(
         df, manifest, shardCol, cents, counts, idCol, vecCol)
@@ -950,7 +947,6 @@ object Transformers {
 
     def transform(df: DataFrame): DataFrame = {
       val spark = df.sparkSession
-      graft.functions.GraftFunctions.register(spark) // dotp/assign_cell
       val cents = stateDir match {
         case Some(dir) =>
           IncrState.readCommitted(spark, s"$dir/centroids", IncrState.IvfCentroidsVersion,

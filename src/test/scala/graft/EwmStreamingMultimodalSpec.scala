@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.functions.GraftFunctions
 import graft.multimodal.Multimodal
 import graft.operators.Ema
 import graft.streaming.EventsStream
@@ -13,25 +12,7 @@ class EwmStreamingMultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("GraftFunctions.register installs each function once per session") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val registry = spark.sessionState.functionRegistry
-    // a re-registration stores a fresh ExpressionInfo next to the builder (the
-    // builders of non-capturing lambdas are JVM singletons, so they alone
-    // cannot tell a replacement apart)
-    def installed() = Seq("ewm", "psar", "mg_topk").map { n =>
-      val id = FunctionIdentifier(n)
-      (registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get)
-    }
-    GraftFunctions.register(spark)
-    val before = installed()
-    GraftFunctions.register(spark)
-    assert(before.zip(installed()).forall { case ((b0, i0), (b1, i1)) => (b0 eq b1) && (i0 eq i1) },
-      "a second register replaced an installed function")
-  }
-
   test("ewm window function matches the Ema partition scan bit-exactly") {
-    GraftFunctions.register(spark)
     val data = (0 until 200).map(i => ("k" + (i % 3), i / 3, math.sin(i) * 50 + 100))
       .toDF("k", "i", "x")
     val viaScan = Ema.withEma(data, Seq(Ema.Spec("x", "ema", 2.0 / 13.0, 5)), Seq("i"), Seq("k"))
@@ -46,7 +27,6 @@ class EwmStreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("ewm ignore_na=false matches the Ema scan and pandas on gapped series") {
-    GraftFunctions.register(spark)
     // nulls interspersed: gap re-weighting + carried emission must match the
     // oracle-verified Ema.withEma(ignoreNa = false) scan bit for bit
     val vals: Seq[(String, Int, java.lang.Double)] = Seq(
@@ -81,7 +61,6 @@ class EwmStreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("ewm handles null inputs like the scan (state untouched, null out)") {
-    GraftFunctions.register(spark)
     val data = Seq((0, Some(10.0)), (1, None), (2, Some(20.0))).toDF("i", "x")
     val out = data.withColumn("ema",
       expr("ewm(x, 0.5, 0)").over(org.apache.spark.sql.expressions.Window.orderBy("i")))

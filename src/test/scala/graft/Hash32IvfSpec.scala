@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.operators.Similarity
 
 class Hash32IvfSpec extends AnyFunSuite {
@@ -10,7 +9,6 @@ class Hash32IvfSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("hash32 native expression equals the md5-hex-conv expression chain") {
-    GraftFunctions.register(spark)
     val df = Seq("abc", "", "the quick brown fox", "日本語テキスト", "x" * 500).toDF("s")
     val out = df.select(
       expr("hash32(s)").as("native"),
@@ -22,7 +20,6 @@ class Hash32IvfSpec extends AnyFunSuite {
   }
 
   test("dotp native expression equals the aggregate/zip_with fold bit-exactly") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Array(1.5, -2.25, 3.125), Array(0.5, 4.0, -1.75)),
       (Array(0.1, 0.2, 0.3), Array(0.3, 0.2, 0.1)),
@@ -37,7 +34,6 @@ class Hash32IvfSpec extends AnyFunSuite {
   }
 
   test("hash32 participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.range(100).select(expr("hash32(cast(id as string))").as("h"))
     // "*(n)" marks operators inside WholeStageCodegen stage n
     val plan = df.queryExecution.executedPlan.toString

@@ -14,7 +14,6 @@ class MgTopKSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def sketch(df: org.apache.spark.sql.DataFrame, k: Int): Map[String, Long] = {
-    graft.functions.GraftFunctions.register(spark)
     df.repartition(13) // force genuine partials + merges
       .agg(expr(s"mg_topk(v, $k)").as("sk"))
       .head().getSeq[Row](0).map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -41,7 +40,6 @@ class MgTopKSpec extends AnyFunSuite {
     val rows = (for {
       g <- Seq("a", "b"); i <- 1 to 300
     } yield (g, if (i % 3 == 0) s"$g-hot" else s"$g-t${i % 25}")).toSeq
-    graft.functions.GraftFunctions.register(spark)
     val out = rows.toDF("g", "v").repartition(7)
       .groupBy(col("g")).agg(expr("mg_topk(v, 5)").as("sk"))
       .collect().map(r => r.getString(0) ->
@@ -54,7 +52,6 @@ class MgTopKSpec extends AnyFunSuite {
   }
 
   test("output is sorted by (cnt_lower desc, term) and nulls are ignored") {
-    graft.functions.GraftFunctions.register(spark)
     val df = (Seq.fill(50)(Some("x")) ++ Seq.fill(30)(Some("y")) ++
       Seq.fill(30)(Some("z")) ++ Seq(None, None)).toDF("v")
     val arr = df.repartition(5).agg(expr("mg_topk(v, 4)").as("sk"))

@@ -991,7 +991,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("hash61: native expression equals the md5-prefix mod-p arithmetic (BigInt reference)") {
-    graft.functions.GraftFunctions.register(spark)
     val p = BigInt(Dedup.MinhashPrime)
     val strs = Seq("", "a", "hello world", "the quick brown fox", "ünïcode ✓",
       "w123_456 w789_012 w345_678")

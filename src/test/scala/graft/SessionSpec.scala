@@ -2,8 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session factory's settings, and a source check that main keeps one
-  * session builder, one Spark listener and one owner of checkpoint blocks.
+/** The session factory's settings, the graft SQL functions every session
+  * is built with, and a source check that main keeps one session builder,
+  * one Spark listener, one owner of checkpoint blocks and one installer of
+  * SQL functions.
   */
 class SessionSpec extends AnyFunSuite {
 
@@ -28,6 +30,18 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 
+  test("every session resolves each graft function, from the provider") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val provider = classOf[graft.functions.GraftFunctions].getName
+    Seq(TestSpark.spark, TestSpark.spark.newSession()).foreach { spark =>
+      graft.functions.GraftFunctions.builders.foreach { case (name, _) =>
+        val info = spark.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name))
+        assert(info.map(_.getClassName).contains(provider), name)
+      }
+      assert(spark.sql("SELECT dotp(array(1d, 2d), array(3d, 4d))").head().getDouble(0) == 11.0)
+    }
+  }
+
   test("main holds one SparkSession builder, in Session, and one SparkListener, the Meter") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -45,5 +59,16 @@ class SessionSpec extends AnyFunSuite {
     // known in one place
     assert(filesWith("""LogicalRDD|getPersistentRDDs""".r).distinct ==
       Seq("graft/core/Blocks.scala"))
+    // SQL functions reach a session through the one provider the services
+    // file lists
+    assert(filesWith("""functionRegistry|createOrReplaceTempFunction|injectFunction""".r).distinct ==
+      Seq("graft/functions/GraftFunctions.scala"))
+    val services = java.nio.file.Paths.get(
+      "src/main/resources/META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider")
+    val listed = java.nio.file.Files.readAllLines(services).asScala.map(_.trim)
+      .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+    assert(listed == Seq("graft.functions.GraftFunctions"))
+    assert(classOf[org.apache.spark.sql.SparkSessionExtensionsProvider]
+      .isAssignableFrom(Class.forName(listed.head)))
   }
 }

@@ -24,7 +24,6 @@ class SigMatchesSpec extends AnyFunSuite {
   }
 
   test("null components never match, on the generated and the interpreted path") {
-    graft.functions.GraftFunctions.register(spark)
     val n: java.lang.Long = null
     def l(x: Long): java.lang.Long = x
     val rows = Seq(
@@ -45,7 +44,6 @@ class SigMatchesSpec extends AnyFunSuite {
   }
 
   test("arrays without null components count every equal position") {
-    graft.functions.GraftFunctions.register(spark)
     val rng = new scala.util.Random(7)
     val rows = (0 until 200).map { _ =>
       val k = 8
